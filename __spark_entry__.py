@@ -1376,8 +1376,9 @@ def q_geo_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from s2_geometry_library_java_spark.operators.geodedup import geo_neardup_pairs
 
     pts = (
-        with_cell_id(geotagged_points(spark, sf_dir))
-        .filter(F.col("point_id") % GEO_NEARDUP_MOD == 0)
+        with_cell_id(
+            geotagged_points(spark, sf_dir).filter(F.col("point_id") % GEO_NEARDUP_MOD == 0)
+        )
         .withColumn("phash", (F.col("point_id") * F.lit(40503)) % F.lit(65536))
     )
     return geo_neardup_pairs(pts, GEO_NEARDUP_RADIUS, GEO_NEARDUP_HAMMING)
@@ -1391,8 +1392,9 @@ def q_geo_neardup_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from s2_geometry_library_java_spark.operators.geodedup import geo_neardup_pairs
 
     pts = (
-        with_cell_id(geotagged_points(spark, sf_dir))
-        .filter(F.col("point_id") % GEO_NEARDUP_MOD == 0)
+        with_cell_id(
+            geotagged_points(spark, sf_dir).filter(F.col("point_id") % GEO_NEARDUP_MOD == 0)
+        )
         .withColumn("phash", (F.col("point_id") * F.lit(40503)) % F.lit(65536))
     )
     return geo_neardup_pairs(pts, GEO_NEARDUP_RADIUS, GEO_NEARDUP_HAMMING, salt=4)
@@ -1408,8 +1410,9 @@ def q_geo_neardup_salted_hot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from s2_geometry_library_java_spark.operators.geodedup import geo_neardup_pairs
 
     pts = (
-        with_cell_id(geotagged_points(spark, sf_dir))
-        .filter(F.col("point_id") % GEO_NEARDUP_MOD == 0)
+        with_cell_id(
+            geotagged_points(spark, sf_dir).filter(F.col("point_id") % GEO_NEARDUP_MOD == 0)
+        )
         .withColumn("phash", (F.col("point_id") * F.lit(40503)) % F.lit(65536))
     )
     return geo_neardup_pairs(

@@ -6,13 +6,15 @@ Two tiers, chosen by where the math can run:
   Catalyst can codegen JVM-side — parent/range_min/range_max/level/face on the
   64-bit id (S2CellId.java:231-338 bit formulas), the signed-bias unsigned
   compare (S2CellId.java:897-899, realized as ``XOR Long.MIN_VALUE`` so ANSI
-  overflow never triggers), deterministic geotag derivation, and haversine.
+  overflow never triggers), the hex token codec's encode side, deterministic
+  geotag derivation, and haversine.
   These keep the 10^12-row hot path inside WholeStageCodegen with zero Python.
 
-- **Vectorized pandas UDFs** (``s2_cell_id`` …): the Hilbert encode/decode and
-  token codec, which need the 1024-entry lookup-table gather
-  (S2CellId.java:691-803) — one Arrow batch in, a handful of NumPy ufunc
-  calls, one batch out; no per-row Python.
+- **Vectorized pandas UDFs** (``s2_cell_id`` …): the Hilbert encode/decode,
+  which needs the 1024-entry lookup-table gather (S2CellId.java:691-803) —
+  one Arrow batch in, a handful of NumPy ufunc calls, one batch out; no
+  per-row Python.  The ``s2_token``/``s2_from_token`` UDFs remain the SQL
+  surface of the token codec; engine operators tokenize with ``token_expr``.
 """
 
 from s2_geometry_library_java_spark.functions.udfs import (
@@ -33,6 +35,7 @@ from s2_geometry_library_java_spark.functions.native import (
     level_expr,
     face_expr,
     is_leaf_expr,
+    token_expr,
     ancestors_expr,
     geotag_lat_expr,
     geotag_lng_expr,
@@ -60,6 +63,7 @@ __all__ = [
     "level_expr",
     "face_expr",
     "is_leaf_expr",
+    "token_expr",
     "ancestors_expr",
     "geotag_lat_expr",
     "geotag_lng_expr",

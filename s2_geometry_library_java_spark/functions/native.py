@@ -12,6 +12,10 @@ Every formula here is the bit-exact Spark-SQL image of a reference method:
                         (S2CellId.java:231-260); log2 of an exact power of two
                         rounded, never truncated, because Spark's LOG2 is
                         ln(x)/ln(2) with ~1e-13 noise at the top bits
+- ``token_expr``      — S2CellId.toToken(): lower-case 16-digit hex with
+                        trailing zeros stripped, id 0 -> ``"X"``
+                        (S2CellId.java:439-498), bit-exact with
+                        ``kernel.cellid.to_token``
 - ``biased``          — the unsigned-order compare trick: XOR the sign bit
                         instead of adding Long.MIN_VALUE (same total order as
                         S2CellId.java:897-899, no ANSI overflow)
@@ -63,6 +67,16 @@ def level_expr(cell_id: Column) -> Column:
 def face_expr(cell_id: Column) -> Column:
     """Top 3 bits as unsigned face index (S2CellId.java:218)."""
     return F.shiftrightunsigned(cell_id, 61).cast("int")
+
+
+def token_expr(cell_id: Column) -> Column:
+    """S2CellId.toToken() as codegen string functions.  ``hex`` of a BIGINT
+    prints the two's-complement bit pattern without leading zeros, so the
+    negative face-4/5 ids come out as their full unsigned 16 digits; the
+    left pad restores the leading zeros of faces 0-1 before the trailing
+    zeros are stripped."""
+    hex16 = F.lpad(F.lower(F.hex(cell_id)), 16, "0")
+    return F.when(cell_id == F.lit(0), F.lit("X")).otherwise(F.rtrim(hex16, F.lit("0")))
 
 
 def is_leaf_expr(cell_id: Column) -> Column:

@@ -43,6 +43,21 @@ def s2_cell_id_from_phash(phash: pd.Series) -> pd.Series:
     return pd.Series(ids.view(np.int64))
 
 
+# Private twins of the two encode UDFs for the engine's own encode
+# projections (pip_join.with_cell_id, plans.pipeline.encode_images): the same
+# Python functions under the same plan names, marked nondeterministic.  That
+# keeps Catalyst from pushing a filter on a cell-id-derived column (the
+# prefix join's IN-set prune) below the projection that defines cell_id: the
+# pushed filter re-evaluated the UDF beneath it, so every row it kept crossed
+# the Arrow hop twice.  The exported UDFs stay deterministic, because
+# asNondeterministic() mutates the UDF in place and a nondeterministic UDF is
+# rejected inside join conditions.
+_s2_cell_id_once = pandas_udf(s2_cell_id.func, LongType()).asNondeterministic()
+_s2_cell_id_from_phash_once = pandas_udf(
+    s2_cell_id_from_phash.func, LongType()
+).asNondeterministic()
+
+
 @pandas_udf(LongType())
 def s2_cell_id_at_level(lat_deg: pd.Series, lng_deg: pd.Series, level: pd.Series) -> pd.Series:
     ids = ck.from_latlng_degrees(lat_deg.to_numpy(dtype=np.float64), lng_deg.to_numpy(dtype=np.float64))

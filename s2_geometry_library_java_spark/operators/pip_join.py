@@ -1,15 +1,17 @@
 """The spatial assign/refine join: point-in-region at DataFrame scale.
 
-Two candidate-generation strategies, both images of reference index queries:
+Four candidate-generation strategies, all images of reference index
+queries.  ``pip_join``'s default ``strategy="auto"`` picks range, stab or
+prefix (choose_strategy); the ancestor arm runs only when asked for by name.
 
-- **ancestor equi-join** (default): explode each point's ancestors at the
-  covering layer's distinct levels (a bounded <=30-way fan-out, pure native
-  bit math) and equi-join on cell_id — the "check all parent cells" trick of
-  S2EdgeIndex.getEdgesInParentCells (S2EdgeIndex.java:422-441) turned into a
-  shuffle-friendly, salt-able equi-join.  Broadcast-covering form only in
-  practice: for the beyond-broadcast regime the explode's |levels|x probe
-  amplification is the dominant shuffle cost, so "auto" routes there to the
-  PREFIX strategy instead.
+- **ancestor equi-join** (``strategy="ancestor"``): explode each point's
+  ancestors at the covering layer's distinct levels (a bounded <=30-way
+  fan-out, pure native bit math) and equi-join on cell_id — the "check all
+  parent cells" trick of S2EdgeIndex.getEdgesInParentCells
+  (S2EdgeIndex.java:422-441) turned into a shuffle-friendly, salt-able
+  equi-join.  Retired from "auto": the explode's |levels|x probe
+  amplification is the dominant shuffle cost beyond broadcast, so "auto"
+  routes there to the PREFIX strategy instead.
 
 - **prefix-partitioned interval join** (``strategy="prefix"``, the 100-TB
   arm, auto-chosen whenever the covering must not be broadcast): one
@@ -46,10 +48,14 @@ Two candidate-generation strategies, both images of reference index queries:
   BNLJ range join it is O(log B) instead of O(B) per row.  No shuffle, so
   hot cells cannot skew anything.  Broadcast-only like "range".
 
+Every arm encodes each fact row exactly once: the engine's encode
+projections use nondeterministic twins of the encode UDFs (functions.udfs),
+so Catalyst cannot push the prefix prune below them and re-run the UDF.
+
 Refinement then applies the exact membership predicate only to candidates
 from non-interior covering cells (O5): natively for rect/cap layers, through
 the vectorized edge-crossing-parity kernel (S2Loop.java:624-654 via
-kernel.predicates.loop_crossing_parity) inside mapInPandas for loop/polygon
+kernel.predicates.loop_crossing_parity) in one pandas UDF for loop/polygon
 layers.  Covering cells of one region are disjoint (normalized,
 S2CellUnion.java:561-618), so no point matches a region twice — the join
 emits no duplicates by construction.
@@ -65,7 +71,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, IntegerType, LongType, StructField, StructType
 
 from s2_geometry_library_java_spark.functions.native import ancestors_expr, biased, parent_expr
-from s2_geometry_library_java_spark.functions.udfs import s2_cell_id
+from s2_geometry_library_java_spark.functions.udfs import _s2_cell_id_once
 from s2_geometry_library_java_spark.operators.covering import covering_df, covering_levels, covering_rows, COVERING_SCHEMA
 from s2_geometry_library_java_spark.operators.layers import Layer
 
@@ -77,11 +83,15 @@ def with_cell_id(points: DataFrame, lat_col: str = "lat", lng_col: str = "lng", 
     the column non-null to Catalyst: otherwise a range/equi join on it
     infers an IsNotNull constraint and pushes a filter that RE-EVALUATES the
     encode UDF a second time on the whole fact side (observed: two
-    ArrowEvalPython encode stages in the BETWEEN-join plan)."""
+    ArrowEvalPython encode stages in the BETWEEN-join plan).  The UDF is the
+    nondeterministic encode twin for the same reason: no filter derived
+    from cell_id (the prefix prune) is pushed below this projection.  The
+    price is that no other filter is pushed below it either, so filter the
+    points before encoding them, not after."""
     if cell_col in points.columns:
         return points
     return points.withColumn(
-        cell_col, F.coalesce(s2_cell_id(F.col(lat_col), F.col(lng_col)), F.lit(0))
+        cell_col, F.coalesce(_s2_cell_id_once(F.col(lat_col), F.col(lng_col)), F.lit(0))
     )
 
 
@@ -674,10 +684,13 @@ def membership_expr(
             # Catalyst hoists the UDF into its own projection, so it SEES
             # every candidate row; ``decided`` (interior covering cell, or
             # native-predicate true) lets the kernel skip the parity sweep
-            # for rows the filter already keeps — on an interior-heavy
-            # covering that is most of the volume.
-            keep = np.zeros(len(pid_s), dtype=bool)
-            todo = ~decided_s.to_numpy(dtype=bool)
+            # for rows already kept — on an interior-heavy covering that is
+            # most of the volume.  The UDF returns the final keep decision
+            # (decided OR parity), so a Filter tests this one column and the
+            # native CASE chain, trig included, is evaluated once, as the
+            # ``decided`` argument, not again in the Filter.
+            keep = decided_s.to_numpy(dtype=bool, copy=True)
+            todo = ~keep
             if todo.any():
                 # factorize (hash-based, C) beats np.unique's sort on strings
                 codes, uniques = pd.factorize(pid_s)
@@ -691,11 +704,12 @@ def membership_expr(
                             lat_s.to_numpy(dtype=np.float64)[idx],
                             lng_s.to_numpy(dtype=np.float64)[idx],
                         )
-            return pd.Series(keep)
+            # SQL OR semantics: an unknown ``decided`` stays unknown unless
+            # the parity test keeps the row
+            unknown = decided_s.isna().to_numpy() & ~keep
+            return pd.Series(pd.arrays.BooleanArray(keep, unknown) if unknown.any() else keep)
 
-        cond = cond | parity_contains(
-            F.col("polygon_id"), F.col(lat_col), F.col(lng_col), cond
-        )
+        cond = parity_contains(F.col("polygon_id"), F.col(lat_col), F.col(lng_col), cond)
 
     return cond
 

@@ -3,7 +3,9 @@ per-partition lineage and checkpointed, idempotent resume.
 
 - tile assignment is the C5 denormalize bit formula (S2CellId.parent,
   S2CellId.java:334-338) as a native column expression — fixed-level tile id
-  straight from the leaf cell id, no Python, no shuffle;
+  straight from the leaf cell id, no Python, no shuffle — and the tile token
+  is the codegen'd ``token_expr`` (S2CellId.toToken), so tiles, the manifest
+  aggregate and its ordering run without a Python hop;
 - the manifest writer partitions output by a tile bucket and commits buckets
   through a ledger file, so a killed job resumes at the last committed bucket
   — the plain-parquet analog of Iceberg snapshot-commit resume demanded by
@@ -20,26 +22,26 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from s2_geometry_library_java_spark.functions.native import face_expr, level_expr, parent_expr
-from s2_geometry_library_java_spark.functions.udfs import s2_token
+from s2_geometry_library_java_spark.functions.native import parent_expr, token_expr
 
 DEFAULT_TILE_LEVEL = 7
 
 
 def assign_tiles(df: DataFrame, tile_level: int = DEFAULT_TILE_LEVEL, cell_col: str = "cell_id") -> DataFrame:
     tile = parent_expr(F.col(cell_col), tile_level)
-    return df.withColumn("tile_id", tile).withColumn("tile_token", s2_token(tile))
+    return df.withColumn("tile_id", tile).withColumn("tile_token", token_expr(tile))
 
 
 def tile_manifest(matches: DataFrame, tile_level: int = DEFAULT_TILE_LEVEL, cell_col: str = "cell_id") -> DataFrame:
     """Per-(tile, polygon) manifest aggregate: image count + id range.
 
-    groupBy on the native tile expression — Catalyst does partial+final
-    aggregation; sorting by tile keeps Hilbert locality in the output files.
+    Pure codegen end to end: groupBy on the native tile expression (Catalyst
+    does partial+final aggregation), then the native token and the sort —
+    sorting by tile keeps Hilbert locality in the output files.
     """
     tile = parent_expr(F.col(cell_col), tile_level)
-    # Aggregate on the native tile id first; tokenize only the aggregated
-    # rows (tiles x polygons), keeping the string kernel off the fact path.
+    # Aggregate on the BIGINT tile id first and tokenize only the aggregated
+    # rows (tiles x polygons): string building stays off the fact path.
     return (
         matches.withColumn("tile_id", tile)
         .groupBy("tile_id", "polygon_id")
@@ -48,7 +50,7 @@ def tile_manifest(matches: DataFrame, tile_level: int = DEFAULT_TILE_LEVEL, cell
             F.min(cell_col).alias("min_cell"),
             F.max(cell_col).alias("max_cell"),
         )
-        .withColumn("tile_token", s2_token(F.col("tile_id")))
+        .withColumn("tile_token", token_expr(F.col("tile_id")))
         .drop("tile_id")
         .select("tile_token", "polygon_id", "n_images", "min_cell", "max_cell")
         .orderBy("tile_token", "polygon_id")

@@ -3,12 +3,15 @@
     images --[phash anchor, native bit math]--> lat/lng
            --[K23 encode kernel, one Arrow hop]--> cell_id
            --[covering assign-join + refine]--> (image, polygon) matches
-           --[C5 tile-parent bit math]--> tile_id
+           --[C5 tile-parent bit math + native token]--> tile_id, tile_token
            --[bucketed manifest write + ledger]--> resumable output
 
 Exactly two wide stages in the happy path: the assign join (broadcast => no
-shuffle at all) and the tile-bucket write.  Everything between scan and the
-pandas encode hop is native/codegen.
+shuffle at all) and the tile-bucket write.  Python runs only where a NumPy
+kernel does: the encode hop (once per image on every join arm) and the
+parity refine of loop/polygon candidates.  The scan, the anchor math, the
+join, and the whole manifest tail (tile ids, tokens, aggregate, sort) are
+native/codegen.
 """
 
 from __future__ import annotations
@@ -33,9 +36,11 @@ def encode_images(images: DataFrame) -> DataFrame:
     lat/lng columns stay PURE NATIVE projections of phash, so Catalyst
     computes them only where referenced (the post-join refinement of
     boundary candidates), never materializing them across the full fact
-    path.  The coalesce marks cell_id non-null (see pip_join.with_cell_id).
+    path.  The coalesce marks cell_id non-null and the nondeterministic
+    encode twin keeps cell-id filters above the hop, so the UDF runs once
+    per image (see pip_join.with_cell_id).
     """
-    from s2_geometry_library_java_spark.functions.udfs import s2_cell_id_from_phash
+    from s2_geometry_library_java_spark.functions.udfs import _s2_cell_id_from_phash_once
 
     upper = F.shiftrightunsigned(F.col("phash"), 32).cast("double")
     lower = F.col("phash").bitwiseAND(F.lit(0xFFFFFFFF)).cast("double")
@@ -43,7 +48,7 @@ def encode_images(images: DataFrame) -> DataFrame:
     lng = F.lit(-180.0) + F.lit(360.0) * (lower / F.lit(4294967296.0))
     return (
         images.withColumn(
-            "cell_id", F.coalesce(s2_cell_id_from_phash(F.col("phash")), F.lit(0))
+            "cell_id", F.coalesce(_s2_cell_id_from_phash_once(F.col("phash")), F.lit(0))
         )
         .withColumn("lat", lat)
         .withColumn("lng", lng)

@@ -252,3 +252,31 @@ def test_prefix_level_range_validated(points):
             prefix_candidates_df(pts, cover, prefix_level=bad)
         with pytest.raises(ValueError, match="prefix_level"):
             prefix_cover_frame(cover, bad)
+
+
+def test_membership_keeps_sql_or_semantics(spark):
+    # parity_contains returns ``decided OR parity`` itself: a row whose
+    # native decision is unknown (null lat) stays null unless parity keeps
+    # it, a decided row stays true, and a parity hit is true.
+    from s2_geometry_library_java_spark.operators.pip_join import membership_expr
+
+    layers = make_layers()
+    df = spark.createDataFrame(
+        [
+            (0, "l_tri", 10.0, 20.0),  # inside the triangle
+            (1, "l_tri", -30.0, 20.0),  # outside
+            (2, "r_europe", 50.0, 0.0),  # native true
+            (3, "r_europe", None, 0.0),  # native unknown, parity skips it
+            (4, "l_tri", None, 20.0),  # parity on a null point
+        ],
+        "rid int, polygon_id string, lat double, lng double",
+    )
+    got = {
+        r["rid"]: r["inside"]
+        for r in df.select("rid", membership_expr(layers).alias("inside")).collect()
+    }
+    assert got[0] is True and got[1] is False and got[2] is True
+    assert got[3] is None
+    # a null point reaches the kernel as NaN; its verdict passes through
+    tri = next(l for l in layers if l.polygon_id == "l_tri")
+    assert got[4] is bool(tri.contains_points(np.array([np.nan]), np.array([20.0]))[0])

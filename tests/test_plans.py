@@ -199,3 +199,82 @@ def test_cc_star_phases_are_min_aggs_not_adjacency_arrays(spark):
         assert "BatchEvalPython" not in plan
         assert "ArrowEvalPython" not in plan
         assert "CartesianProduct" not in plan
+
+
+def _hops(df, udf: str) -> int:
+    """ArrowEvalPython nodes of ``df``'s plan that evaluate ``udf``."""
+    return sum(
+        1 for line in plan_of(df).splitlines() if "ArrowEvalPython" in line and f"{udf}(" in line
+    )
+
+
+@pytest.fixture(scope="module")
+def images(spark):
+    from s2_geometry_library_java_spark.sources.images import synthetic_images
+
+    return synthetic_images(spark, 2000).select("image_id", "phash")
+
+
+def _encoded(source, points, images):
+    from s2_geometry_library_java_spark.plans.pipeline import encode_images
+
+    if source == "with_cell_id":
+        return with_cell_id(points), "s2_cell_id"
+    return encode_images(images), "s2_cell_id_from_phash"
+
+
+@pytest.mark.parametrize("source", ["with_cell_id", "encode_images"])
+@pytest.mark.parametrize("prune", [None, "auto", "semi", "bloom"])
+def test_prefix_arm_encodes_once(spark, points, images, source, prune):
+    # The prefix prune filters on parent(cell_id).  Pushed below the
+    # projection that defines cell_id, it re-ran the encode UDF under the
+    # Filter: two encode hops, ~1.65x the fact rows through Python.
+    # prune=None is the driver-list arm (broadcast_cells=False).
+    from __spark_entry__ import ALL_LAYERS
+    from s2_geometry_library_java_spark.operators.covering import covering_df
+
+    enc, udf = _encoded(source, points, images)
+    if prune is None:
+        df = pip_join(enc, ALL_LAYERS, broadcast_cells=False)
+    else:
+        cov = covering_df(spark, ALL_LAYERS, max_cells=8, min_level=0, max_level=12)
+        df = pip_join(enc, ALL_LAYERS, covering_frame=cov, prune=prune)
+    assert _hops(df, udf) == 1
+    assert _hops(df, "parity_contains") == 1
+
+
+@pytest.mark.parametrize("source", ["with_cell_id", "encode_images"])
+@pytest.mark.parametrize("strategy", ["range", "stab", "ancestor"])
+def test_broadcast_arms_encode_once(points, images, source, strategy):
+    from __spark_entry__ import ALL_LAYERS
+
+    enc, udf = _encoded(source, points, images)
+    assert _hops(pip_join(enc, ALL_LAYERS, strategy=strategy), udf) == 1
+
+
+def test_manifest_tail_is_pure_codegen(points, images):
+    # tile ids, tokens, the aggregate and its sort add no Python hop
+    from __spark_entry__ import ALL_LAYERS
+    from s2_geometry_library_java_spark.operators.tiling import assign_tiles, tile_manifest
+    from s2_geometry_library_java_spark.plans.pipeline import encode_images
+
+    for matches in (
+        pip_join(encode_images(images), ALL_LAYERS, broadcast_cells=False),
+        pip_join(with_cell_id(points), ALL_LAYERS, strategy="range"),
+    ):
+        base = plan_of(matches).count("ArrowEvalPython")
+        for tail in (tile_manifest(matches), assign_tiles(matches)):
+            plan = plan_of(tail)
+            assert plan.count("ArrowEvalPython") == base
+            assert "s2_token" not in plan
+
+
+def test_refine_filter_tests_parity_result_only(points):
+    # parity_contains returns the final keep decision, so the Filter above
+    # its hop holds no copy of the native rect/cap CASE chain
+    from __spark_entry__ import ALL_LAYERS
+
+    plan = plan_of(pip_join(with_cell_id(points), ALL_LAYERS, strategy="range"))
+    filters = [line for line in plan.splitlines() if "Filter" in line and "pythonUDF" in line]
+    assert len(filters) == 1
+    assert "CASE WHEN" not in filters[0]
