@@ -324,7 +324,7 @@ def q_encode_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pip_query(layers: list[Layer], strategy: str = "ancestor"):
+def _pip_query(layers: list[Layer], strategy: str = "auto"):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         pts = geotagged_points(spark, sf_dir)
         m = pip_join(pts, layers, strategy=strategy)

@@ -170,8 +170,8 @@ def main() -> None:
         # BENCH_SKEW_FRACTION > 0 materializes a SKEWED corpus: that fraction
         # of rows' phash collapses into a ~0.003-degree hot box at (48, 10)
         # — inside the r_eu layer, thousands of distinct leaf cells but ONE
-        # covering cell per level, so the shuffled ancestor join funnels the
-        # whole fraction through one reducer key unless salted.  Jitter in
+        # level-A prefix, so the shuffled prefix join funnels the whole
+        # fraction through one reducer key unless salted.  Jitter in
         # the low 16 bits of each phash half keeps leaf ids distinct (the
         # probe salt hashes the leaf id, so a single-leaf hot spot would be
         # unsplittable by design).
@@ -215,16 +215,8 @@ def main() -> None:
             strat = os.environ.get("BENCH_PIP_STRATEGY", "auto")
             pip_kw: dict = dict(n_rows=N_IMAGES, strategy=strat)
             # the 100-TB arms (layer side too big to broadcast): shuffled
-            # ancestor equi-join, optionally salted against hot-cell skew
-            if strat == "ancestor_shuffled":
-                pip_kw.update(strategy="ancestor", broadcast_cells=False)
-            elif strat == "ancestor_salted":
-                pip_kw.update(
-                    strategy="ancestor",
-                    broadcast_cells=False,
-                    salt=int(os.environ.get("BENCH_PIP_SALT", "8")),
-                )
-            elif strat == "prefix_shuffled":
+            # prefix join, optionally salted against hot-cell skew
+            if strat == "prefix_shuffled":
                 pip_kw.update(strategy="prefix", broadcast_cells=False)
                 lvl = os.environ.get("BENCH_PREFIX_LEVEL")
                 if lvl:

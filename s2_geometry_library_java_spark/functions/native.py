@@ -20,8 +20,9 @@ Every formula here is the bit-exact Spark-SQL image of a reference method:
                         instead of adding Long.MIN_VALUE (same total order as
                         S2CellId.java:897-899, no ANSI overflow)
 
-Keeping these native means the assign-join hot path — ancestors explode +
-equi-join — runs entirely in WholeStageCodegen with zero Python.
+Keeping these native means the join hot paths — the prefix join's
+level-A key, the range join's biased compares, edge_join's ancestors
+explode — run entirely in WholeStageCodegen with zero Python.
 """
 
 from __future__ import annotations
@@ -86,7 +87,8 @@ def is_leaf_expr(cell_id: Column) -> Column:
 def ancestors_expr(cell_id: Column, levels: list[int]) -> Column:
     """Array of ancestors at the given levels — the O7 multi-level equi-join
     rewrite (S2EdgeIndex.getEdgesInParentCells, S2EdgeIndex.java:422-441):
-    exploding this array turns a BETWEEN range join into an equi-join."""
+    exploding this array turns a BETWEEN range join into an equi-join
+    (operators.edge_join)."""
     return F.array(*[parent_expr(cell_id, lv) for lv in sorted(set(levels))])
 
 

@@ -107,11 +107,6 @@ def covering_df(
     return spark.createDataFrame(rows, COVERING_SCHEMA)
 
 
-def covering_levels(rows: list[tuple]) -> list[int]:
-    """Distinct covering-cell levels — the ancestor-explode fan-out set."""
-    return sorted({r[2] for r in rows})
-
-
 def covering_df_distributed(
     spark: SparkSession,
     layer_specs: list[dict],

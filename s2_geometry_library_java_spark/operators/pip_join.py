@@ -1,52 +1,43 @@
 """The spatial assign/refine join: point-in-region at DataFrame scale.
 
-Four candidate-generation strategies, all images of reference index
-queries.  ``pip_join``'s default ``strategy="auto"`` picks range, stab or
-prefix (choose_strategy); the ancestor arm runs only when asked for by name.
+Three candidate-generation arms, each an image of a reference index query.
+``pip_join``'s default ``strategy="auto"`` picks one (choose_strategy); any
+arm can also be asked for by name.
 
-- **ancestor equi-join** (``strategy="ancestor"``): explode each point's
-  ancestors at the covering layer's distinct levels (a bounded <=30-way
-  fan-out, pure native bit math) and equi-join on cell_id — the "check all
-  parent cells" trick of S2EdgeIndex.getEdgesInParentCells
-  (S2EdgeIndex.java:422-441) turned into a shuffle-friendly, salt-able
-  equi-join.  Retired from "auto": the explode's |levels|x probe
-  amplification is the dominant shuffle cost beyond broadcast, so "auto"
-  routes there to the PREFIX strategy instead.
-
-- **prefix-partitioned interval join** (``strategy="prefix"``, the 100-TB
-  arm, auto-chosen whenever the covering must not be broadcast): one
-  level-A ancestor key per probe row (no fan-out), covering replicated to
-  the same prefixes, shuffled hash equi-join on the packed BIGINT prefix
-  with exact interval containment as the residual condition, plus a
-  pre-shuffle prune of probe rows outside every covering prefix (IN-set
-  literal while small, broadcast left-semi beyond, fixed-size Bloom
-  bitmap once the exact prefix set itself outgrows a comfortable
-  broadcast).  Two forms:
-  ``prefix_candidates`` takes the driver-resident covering list;
-  ``prefix_candidates_df`` (``pip_join(covering_frame=...)``) takes a
-  covering DataFrame — e.g. built on executors by covering_df_distributed —
-  and keeps replication + pruning entirely DataFrame-native for huge layer
-  dimensions.
-
-- **range join**: ``biased(cell_id) BETWEEN biased(range_min) AND
-  biased(range_max)`` against a broadcast covering — literally
-  S2CellUnion.contains (S2CellUnion.java:160-178) with the unsigned-compare
-  bias of S2CellId.java:897-899.  Broadcast-only: Catalyst executes a
-  non-equi join as BNLJ, which is fine for a small layer side and wrong
-  otherwise.
+- **range join** (``strategy="range"``, assign_candidates):
+  ``biased(cell_id) BETWEEN biased(range_min) AND biased(range_max)``
+  against a broadcast covering — literally S2CellUnion.contains
+  (S2CellUnion.java:160-178) with the unsigned-compare bias of
+  S2CellId.java:897-899.  Broadcast-only: Catalyst executes a non-equi join
+  as BNLJ, which is fine for a small layer side and wrong otherwise.
 
 - **interval-stab** (``strategy="stab"``): the same S2CellUnion.contains
-  binary search (S2CellUnion.java:160-178), but *actually executed as a
-  binary search*: the covering's disjoint-per-layer [range_min, range_max]
-  intervals are flattened driver-side into a sorted boundary array whose
-  segments each carry the set of covering rows containing them; one
-  vectorized ``np.searchsorted`` per fact batch maps each leaf id to its
-  segment (an int32), and a broadcast equi-join on the segment id expands
-  to candidates.  Compared to the ancestor explode this moves ~|levels|x
-  row amplification of the WHOLE fact side (the dominant memory-bandwidth
-  cost at 10^8+ rows) into an O(log B) in-cache lookup; compared to the
-  BNLJ range join it is O(log B) instead of O(B) per row.  No shuffle, so
-  hot cells cannot skew anything.  Broadcast-only like "range".
+  binary search, but *actually executed as a binary search*: the
+  covering's disjoint-per-layer [range_min, range_max] intervals are
+  flattened driver-side into a sorted boundary array whose segments each
+  carry the set of covering rows containing them; one vectorized
+  ``np.searchsorted`` per fact batch maps each leaf id to its segment (an
+  int32), and a broadcast equi-join on the segment id expands to
+  candidates.  O(log B) per row instead of the BNLJ's O(B), and no
+  fact-side row amplification.  No shuffle, so hot cells cannot skew
+  anything.  Broadcast-only like "range".
+
+- **prefix-partitioned interval join** (``strategy="prefix"``, the 100-TB
+  arm, auto-chosen whenever the covering must not be broadcast): the
+  parent-cell probe of S2EdgeIndex.getEdgesInParentCells
+  (S2EdgeIndex.java:422-441) collapsed to ONE level-A ancestor key per
+  probe row (no fan-out), the covering replicated to the same prefixes, a
+  shuffled hash equi-join on the packed BIGINT prefix with exact interval
+  containment as the residual condition, plus a pre-shuffle prune of probe
+  rows outside every covering prefix (IN-set literal while small,
+  broadcast left-semi beyond, fixed-size Bloom bitmap once the exact prefix
+  set itself outgrows a comfortable broadcast).  Two forms share one join
+  body (_prefix_join) and differ only in how they replicate the covering
+  and learn its prefix set: ``prefix_candidates`` takes the driver-resident
+  covering list; ``prefix_candidates_df`` (``pip_join(covering_frame=...)``)
+  takes a covering DataFrame — e.g. built on executors by
+  covering_df_distributed — and keeps replication + pruning entirely
+  DataFrame-native for huge layer dimensions.
 
 Every arm encodes each fact row exactly once: the engine's encode
 projections use nondeterministic twins of the encode UDFs (functions.udfs),
@@ -70,9 +61,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, IntegerType, LongType, StructField, StructType
 
-from s2_geometry_library_java_spark.functions.native import ancestors_expr, biased, parent_expr
+from s2_geometry_library_java_spark.functions.native import biased, parent_expr
 from s2_geometry_library_java_spark.functions.udfs import _s2_cell_id_once
-from s2_geometry_library_java_spark.operators.covering import covering_df, covering_levels, covering_rows, COVERING_SCHEMA
+from s2_geometry_library_java_spark.operators.covering import covering_rows, COVERING_SCHEMA
 from s2_geometry_library_java_spark.operators.layers import Layer
 
 
@@ -98,87 +89,24 @@ def with_cell_id(points: DataFrame, lat_col: str = "lat", lng_col: str = "lng", 
 def assign_candidates(
     points: DataFrame,
     polygon_cells: DataFrame,
-    levels: list[int],
     cell_col: str = "cell_id",
-    strategy: str = "ancestor",
-    broadcast_cells: bool = True,
-    salt: int | None = None,
 ) -> DataFrame:
-    """Candidate (point, polygon) pairs; keeps all point columns plus
-    ``polygon_id`` and ``is_interior``."""
+    """Candidate (point, polygon) pairs via the broadcast range join (see
+    module docstring); keeps all point columns plus ``polygon_id`` and
+    ``is_interior``.  ``polygon_cells`` is a COVERING_SCHEMA frame."""
     cells = polygon_cells.select(
         F.col("polygon_id"),
-        F.col("cell_id").alias("_cover_cell"),
         F.col("range_min").alias("_rmin"),
         F.col("range_max").alias("_rmax"),
         F.col("is_interior"),
     )
-
-    if strategy == "ancestor":
-        pts = points.withColumn("_anc", F.explode(ancestors_expr(F.col(cell_col), levels)))
-        if salt and not broadcast_cells:
-            # Replicate the (small) covering side across salt buckets and
-            # spread each hot covering cell's probes over them — skew
-            # mitigation for shuffled joins (SURVEY.md §4 O15).  The probe
-            # salt hashes the *leaf* id, which varies within a hot covering
-            # cell, so one hot key fans out over `salt` reducers.
-            #
-            # The salt is PACKED into the join key, not joined as a second
-            # column: a covering cell at level L has all-zero bits below its
-            # lsb (bit 2*(30-L)), so for levels <= 28 the low 3 bits are
-            # free and `anc | salt` keeps distinct (cell, salt) pairs
-            # distinct.  This keeps the SMJ key a single BIGINT — eligible
-            # for Spark's radix sort, which only applies to single-column
-            # sorts; the compound (_anc, _psalt) key measured 2-3x slower
-            # on the 104M-row probe sort (r4 interleaved A/B, 8M corpus:
-            # 2.7-3.5s single-key vs 6.1-9.0s compound).
-            free_bits = 2 * (30 - max(levels)) if levels else 60
-            if salt > (1 << free_bits):
-                raise ValueError(
-                    f"salt {salt} does not fit in the {free_bits} zero bits "
-                    f"below the deepest covering level {max(levels)}'s lsb; "
-                    f"lower the salt or the covering depth"
-                )
-            cells = cells.withColumn(
-                "_csalt", F.explode(F.array(*[F.lit(s) for s in range(salt)]))
-            ).withColumn("_ckey", F.col("_cover_cell").bitwiseOR(F.col("_csalt")))
-            pts = pts.withColumn(
-                "_pkey",
-                F.col("_anc").bitwiseOR(
-                    F.pmod(F.xxhash64(F.col(cell_col)), F.lit(salt))
-                ),
-            )
-            join_on = pts["_pkey"] == cells["_ckey"]
-        else:
-            join_on = pts["_anc"] == cells["_cover_cell"]
-        # Non-broadcast path: force a shuffled HASH join with the covering as
-        # the build side.  The default SMJ would SORT the exploded probe side
-        # (|levels| x fact rows — 1.66B rows at the 128M bench), which spills
-        # and dominates the leg: measured at 128M/32 cores the SMJ leg ran
-        # >600 s/rep vs 177.7 s with the hint (single-rep probe, r4).  Even
-        # hash-joined, the explode itself shuffles |levels|x the fact side —
-        # which is why "auto" routes non-broadcast requests to the PREFIX
-        # strategy below (one compact key per probe row) and this arm is kept
-        # only as the A/B comparison point.
-        right = F.broadcast(cells) if broadcast_cells else cells.hint("shuffle_hash")
-        out = pts.join(right, join_on, "inner")
-        return out.drop(
-            "_anc", "_cover_cell", "_rmin", "_rmax", "_psalt", "_csalt", "_pkey", "_ckey"
-        )
-
-    if strategy == "prefix":
-        raise ValueError("strategy='prefix' routes through prefix_candidates, not assign_candidates")
-
-    if strategy == "range":
-        b = biased(F.col(cell_col))
-        out = points.join(
-            F.broadcast(cells),
-            (b >= biased(F.col("_rmin"))) & (b <= biased(F.col("_rmax"))),
-            "inner",
-        )
-        return out.drop("_cover_cell", "_rmin", "_rmax")
-
-    raise ValueError(f"unknown strategy {strategy!r}")
+    b = biased(F.col(cell_col))
+    out = points.join(
+        F.broadcast(cells),
+        (b >= biased(F.col("_rmin"))) & (b <= biased(F.col("_rmax"))),
+        "inner",
+    )
+    return out.drop("_rmin", "_rmax")
 
 
 _U64_BIAS = np.uint64(1) << np.uint64(63)
@@ -277,9 +205,9 @@ PREFIX_BLOOM_BITS = 1 << 26
 PREFIX_BLOOM_HASHES = 2
 
 # Anchor-level bounds for the prefix join: the floor is the A/B-measured
-# local[32] setting; the cap bounds the driver-side coarse-cell replication
-# (4^(A-L) rows per covering cell coarser than A) and the worst-case
-# populated-prefix count (6*4^10 ~ 6.3M).
+# local[32] setting; the cap bounds the coarse-cell replication (4^(A-L)
+# rows per covering cell coarser than A) and the worst-case populated-prefix
+# count (6*4^10 ~ 6.3M), for derived and explicit levels alike.
 PREFIX_LEVEL_FLOOR = 4
 PREFIX_LEVEL_CAP = 10
 
@@ -300,12 +228,33 @@ def choose_prefix_level(shuffle_partitions: int) -> int:
 
 
 def _validate_prefix_level(prefix_level: int) -> None:
-    """Anchor level must be a real S2 level: outside 0..30 the lsb bit math
-    silently shifts by a negative amount (a cryptic runtime error at best)."""
-    if not 0 <= prefix_level <= 30:
+    """Anchor level must lie in 0..PREFIX_LEVEL_CAP.  Below 0 the lsb bit
+    math shifts by a negative amount (a cryptic runtime error at best); above
+    the cap a coarse covering cell replicates to 4^(A-L) prefixes — the
+    eight-layer benchmark covering, which holds a level-0 cell, replicates
+    to 62,226,689 rows at A=12 and 995,627,024 at A=14."""
+    if not 0 <= prefix_level <= PREFIX_LEVEL_CAP:
         raise ValueError(
-            f"prefix_level must be between 0 and 30 (S2 cell levels), got {prefix_level}"
+            f"prefix_level must be between 0 and {PREFIX_LEVEL_CAP} "
+            f"(PREFIX_LEVEL_CAP), got {prefix_level}"
         )
+
+
+def _anchor_level(points: DataFrame, prefix_level: int | None, salt: int | None) -> int:
+    """The prefix join's anchor level: ``prefix_level`` when given, else
+    derived from spark.sql.shuffle.partitions (choose_prefix_level) — so the
+    same call scales from the laptop to the cluster.  Validated, and checked
+    to leave room for ``salt`` in the zero bits below the level-A lsb."""
+    if prefix_level is None:
+        try:
+            parts = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        except (TypeError, ValueError):  # e.g. "auto" under some AQE configs
+            parts = 200
+        prefix_level = choose_prefix_level(parts)
+    _validate_prefix_level(prefix_level)
+    if salt and salt > (1 << (2 * (30 - prefix_level))):
+        raise ValueError(f"salt {salt} does not fit below the level-{prefix_level} lsb")
+    return prefix_level
 
 
 def _prefix_cover_rows(rows: list[tuple], prefix_level: int) -> list[tuple]:
@@ -333,6 +282,67 @@ def _prefix_cover_rows(rows: list[tuple], prefix_level: int) -> list[tuple]:
     return out
 
 
+def _prefix_join(
+    points: DataFrame,
+    pref: DataFrame,
+    cell_col: str,
+    prefix_level: int,
+    salt: int | None,
+    prune: list[int] | str,
+) -> DataFrame:
+    """The join body both prefix forms share.
+
+    ``pref`` is the covering replicated to its level-``prefix_level``
+    prefixes, columns ``(_pfx, polygon_id, _rmin, _rmax, is_interior)``.
+    Each probe row gets its own level-A ancestor ``_pfx`` (native bit math,
+    no fan-out), and the two sides meet in a shuffled HASH equi-join on the
+    packed BIGINT prefix with the exact interval containment
+    ``biased(cell) BETWEEN biased(range_min) AND biased(range_max)``
+    (S2CellUnion.contains, S2CellUnion.java:160-178) as the residual.
+
+    Probe rows outside every covering prefix are dropped on the probe scan
+    stage, before the shuffle.  ``prune`` is either the sorted prefix list
+    itself — a codegen'd IN-set literal — or a rung name: ``"semi"``, a
+    broadcast left semi on the distinct prefixes; ``"bloom"``, a fixed-size
+    Bloom bitmap (bloom_bitmap / bloom_prune).
+
+    ``salt`` spreads a hot prefix (a city-sized layer stack) over ``salt``
+    reducers by packing ``xxhash64(leaf) % salt`` into the prefix's zero low
+    bits; the covering side is replicated once per salt value to match, and
+    the key stays a single radix-sortable BIGINT (a compound (key, salt)
+    key measured 2-3x slower on the r4 104M-row probe sort)."""
+    pts = points.withColumn("_pfx", parent_expr(F.col(cell_col), prefix_level))
+    if not isinstance(prune, str):
+        pts = pts.filter(F.col("_pfx").isin(prune))
+    elif prune == "semi":
+        pts = pts.join(F.broadcast(pref.select("_pfx").distinct()), "_pfx", "left_semi")
+    else:
+        # bit_or makes the duplicate prefixes in pref harmless, so no
+        # distinct() shuffle
+        pts = bloom_prune(pts, bloom_bitmap(pref.select("_pfx"), "_pfx"), "_pfx")
+
+    key = F.col("_pfx")
+    if salt:
+        # one covering replica per salt value, the salt in the zero low bits
+        pref = pref.withColumn(
+            "_pfx", F.explode(F.array(*[key.bitwiseOR(F.lit(s)) for s in range(salt)]))
+        )
+        key = key.bitwiseOR(F.pmod(F.xxhash64(F.col(cell_col)), F.lit(salt)))
+    pts = pts.withColumn("_pkey", key)
+    cover = pref.withColumnRenamed("_pfx", "_ckey")
+    b = biased(pts[cell_col])
+    # hash, not the default sort-merge: sorting a fact-sized probe side
+    # spilled and dominated the r4 128M leg (>600 s per rep vs 177.7 s)
+    out = pts.join(
+        cover.hint("shuffle_hash"),
+        (pts["_pkey"] == cover["_ckey"])
+        & (b >= biased(cover["_rmin"]))
+        & (b <= biased(cover["_rmax"])),
+        "inner",
+    )
+    return out.drop("_pfx", "_pkey", "_ckey", "_rmin", "_rmax")
+
+
 def prefix_candidates(
     points: DataFrame,
     rows: list[tuple],
@@ -341,77 +351,32 @@ def prefix_candidates(
     prefix_level: int | None = None,
 ) -> DataFrame:
     """Candidate pairs via the PREFIX-PARTITIONED interval join — the
-    100-TB arm when the layer side is too big to broadcast.
+    100-TB arm when the layer side is too big to broadcast — over a
+    driver-resident covering list.
 
-    The ancestor explode (assign_candidates) shuffles |levels| x the fact
-    side (1.66 B rows at the 128M bench -> 177.7 s even hash-joined); this
-    strategy shuffles the fact side ONCE, compactly: each probe row gets a
-    single level-A ancestor key (native bit math, no fan-out), the covering
-    is replicated driver-side to the same level-A prefixes
-    (_prefix_cover_rows), and the two meet in a shuffled HASH equi-join on
-    the packed BIGINT prefix with the exact interval containment
-    ``biased(cell) BETWEEN biased(range_min) AND biased(range_max)``
-    (S2CellUnion.contains, S2CellUnion.java:160-178) as the residual join
-    condition.  Because the covering prefix set is known driver-side, probe
-    rows outside every covering prefix are dropped BEFORE the shuffle by a
-    codegen'd IN-set filter — at cluster scale with a distributed covering
-    the same pruning is a runtime bloom-filter join.
+    The fact side is shuffled ONCE, compactly: one level-A ancestor key per
+    probe row, not one per covering level (such an ancestor explode
+    measured 177.7 s at the 128M bench even hash-joined).  The covering is
+    replicated driver-side to the same level-A prefixes (_prefix_cover_rows);
+    the join itself is _prefix_join.  Because the prefix set is known
+    driver-side at no Spark job, the probe prune is the IN-set literal up to
+    PREFIX_IN_FILTER_MAX distinct prefixes and the broadcast semi beyond
+    (at local[4] the IN-set job ran 2.91 s against 3.28 s through the semi
+    and 3.13 s through prefix_candidates_df's eager "auto" rung).
 
     ``prefix_level`` trades reducer-key cardinality (6*4^A populated cells
     max) against coarse-cell replication (4^(A-L) per covering cell below
     A); 4 suits local[32], 6-8 a 1000-executor cluster — when None it is
-    derived from spark.sql.shuffle.partitions (choose_prefix_level), so the
-    same call scales from the laptop to the cluster.  ``salt`` spreads a
-    hot prefix (a city-sized layer stack) over ``salt`` reducers by packing
-    ``xxhash64(leaf) % salt`` into the prefix's zero low bits — the key
-    stays a single radix-sortable BIGINT exactly as in assign_candidates."""
-    if prefix_level is None:
-        try:
-            parts = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):  # e.g. "auto" under some AQE configs
-            parts = 200
-        prefix_level = choose_prefix_level(parts)
-    _validate_prefix_level(prefix_level)
-    if salt and salt > (1 << (2 * (30 - prefix_level))):
-        raise ValueError(f"salt {salt} does not fit below the level-{prefix_level} lsb")
+    derived from the shuffle width (_anchor_level).  ``salt``: see
+    _prefix_join."""
+    prefix_level = _anchor_level(points, prefix_level, salt)
     pref_rows = _prefix_cover_rows(rows, prefix_level)
+    pref = points.sparkSession.createDataFrame(
+        pref_rows, "_pfx bigint, polygon_id string, _rmin bigint, _rmax bigint, is_interior boolean"
+    )
     prefixes = sorted({r[0] for r in pref_rows})
-
-    spark = points.sparkSession
-    pts = points.withColumn("_pfx", parent_expr(F.col(cell_col), prefix_level))
-    if len(prefixes) <= PREFIX_IN_FILTER_MAX:
-        pts = pts.filter(F.col("_pfx").isin(prefixes))
-    else:
-        # middle rung past the IN-set band: broadcast left-semi on the
-        # distinct prefixes — same pre-shuffle pruning, no literal blowup
-        key_df = spark.createDataFrame(((p,) for p in prefixes), "_pfx bigint")
-        pts = pts.join(F.broadcast(key_df), "_pfx", "left_semi")
-    if salt:
-        cover = [
-            (pfx | s, pid, rmin, rmax, interior)
-            for (pfx, pid, rmin, rmax, interior) in pref_rows
-            for s in range(salt)
-        ]
-        pts = pts.withColumn(
-            "_pkey",
-            F.col("_pfx").bitwiseOR(F.pmod(F.xxhash64(F.col(cell_col)), F.lit(salt))),
-        )
-    else:
-        cover = pref_rows
-        pts = pts.withColumn("_pkey", F.col("_pfx"))
-    cover_df = spark.createDataFrame(
-        cover,
-        "_ckey bigint, polygon_id string, _rmin bigint, _rmax bigint, is_interior boolean",
-    )
-    b = biased(pts[cell_col])
-    out = pts.join(
-        cover_df.hint("shuffle_hash"),
-        (pts["_pkey"] == cover_df["_ckey"])
-        & (b >= biased(cover_df["_rmin"]))
-        & (b <= biased(cover_df["_rmax"])),
-        "inner",
-    )
-    return out.drop("_pfx", "_pkey", "_ckey", "_rmin", "_rmax")
+    prune = prefixes if len(prefixes) <= PREFIX_IN_FILTER_MAX else "semi"
+    return _prefix_join(points, pref, cell_col, prefix_level, salt, prune)
 
 
 def prefix_cover_frame(cover: DataFrame, prefix_level: int) -> DataFrame:
@@ -529,10 +494,10 @@ def prefix_candidates_df(
     """The prefix-partitioned interval join with a DataFrame covering — the
     fully distributed 100-TB arm.
 
-    Same join shape as ``prefix_candidates`` (one compact level-A ancestor
-    key per probe row, shuffled hash equi-join, exact interval containment
-    residual, optional packed-bit salt), but the covering side is a
-    DataFrame in COVERING_SCHEMA shape — e.g. the executor-built output of
+    Same join as ``prefix_candidates`` (_prefix_join: one compact level-A
+    ancestor key per probe row, shuffled hash equi-join, exact interval
+    containment residual, optional packed-bit salt), but the covering side
+    is a DataFrame in COVERING_SCHEMA shape — e.g. the executor-built output of
     ``covering_df_distributed`` — so a 100k-layer dimension never touches
     driver Python: prefix replication runs as native ``sequence``/``explode``
     (prefix_cover_frame), and nothing about the covering's SIZE ever does.
@@ -573,76 +538,25 @@ def prefix_candidates_df(
       the covering subtree once more)."""
     if prune not in ("auto", "semi", "bloom"):
         raise ValueError(f"prune must be 'auto', 'semi' or 'bloom', got {prune!r}")
-    if prefix_level is None:
-        try:
-            parts = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            parts = 200
-        prefix_level = choose_prefix_level(parts)
-    _validate_prefix_level(prefix_level)
-    if salt and salt > (1 << (2 * (30 - prefix_level))):
-        raise ValueError(f"salt {salt} does not fit below the level-{prefix_level} lsb")
-
+    prefix_level = _anchor_level(points, prefix_level, salt)
     if prune == "auto":
         # dimension-side only and bounded by the LIMIT — safe at any fact
         # scale; persist so the probe-prune probe and the join build side
         # share one covering execution (the collect materializes the cache)
         cover = cover.persist()
     pref = prefix_cover_frame(cover, prefix_level)
-    pts = points.withColumn("_pfx", parent_expr(F.col(cell_col), prefix_level))
-    inset_keys: list[int] | None = None
-    rung = prune
     if prune == "auto":
         sample = pref.select("_pfx").distinct().limit(PREFIX_IN_FILTER_MAX + 1).collect()
         if len(sample) <= PREFIX_IN_FILTER_MAX:
-            inset_keys = sorted(r["_pfx"] for r in sample)
+            prune = sorted(r["_pfx"] for r in sample)
         else:
             # second bounded dimension-side job: count (not collect) caps at
             # the LIMIT, deciding semi vs bloom without materializing keys
             n_keys = (
                 pref.select("_pfx").distinct().limit(PREFIX_SEMI_PRUNE_MAX + 1).count()
             )
-            rung = "semi" if n_keys <= PREFIX_SEMI_PRUNE_MAX else "bloom"
-    if inset_keys is not None:
-        # same codegen'd IN-set filter as the driver-list arm's small band
-        pts = pts.filter(F.col("_pfx").isin(inset_keys))
-    elif rung == "semi":
-        # pre-shuffle probe prune: rows outside every covering prefix never
-        # enter the exchange (broadcast semi executes on the probe scan stage)
-        pts = pts.join(F.broadcast(pref.select("_pfx").distinct()), "_pfx", "left_semi")
-    else:
-        # terminal rung: fixed-size Bloom bitmap of the covering prefixes —
-        # broadcast size independent of prefix cardinality; bit_or makes the
-        # duplicate prefixes in pref harmless, so no distinct() shuffle
-        pts = bloom_prune(pts, bloom_bitmap(pref.select("_pfx"), "_pfx"), "_pfx")
-
-    if salt:
-        pref = pref.withColumn(
-            "_csalt", F.explode(F.array(*[F.lit(s) for s in range(salt)]))
-        )
-        cover_keyed = pref.select(
-            F.col("_pfx").bitwiseOR(F.col("_csalt")).alias("_ckey"),
-            "polygon_id",
-            "_rmin",
-            "_rmax",
-            "is_interior",
-        )
-        pts = pts.withColumn(
-            "_pkey",
-            F.col("_pfx").bitwiseOR(F.pmod(F.xxhash64(F.col(cell_col)), F.lit(salt))),
-        )
-    else:
-        cover_keyed = pref.withColumnRenamed("_pfx", "_ckey")
-        pts = pts.withColumn("_pkey", F.col("_pfx"))
-    b = biased(pts[cell_col])
-    out = pts.join(
-        cover_keyed.hint("shuffle_hash"),
-        (pts["_pkey"] == cover_keyed["_ckey"])
-        & (b >= biased(cover_keyed["_rmin"]))
-        & (b <= biased(cover_keyed["_rmax"])),
-        "inner",
-    )
-    return out.drop("_pfx", "_pkey", "_ckey", "_rmin", "_rmax")
+            prune = "semi" if n_keys <= PREFIX_SEMI_PRUNE_MAX else "bloom"
+    return _prefix_join(points, pref, cell_col, prefix_level, salt, prune)
 
 
 def membership_expr(
@@ -776,9 +690,7 @@ RANGE_WORK_BUDGET = 4_000_000_000
 STAB_MAX_CELLS = 65536
 
 
-def choose_strategy(
-    covering: list[tuple], levels: list[int], n_rows: int | None = None
-) -> str:
+def choose_strategy(covering: list[tuple], n_rows: int | None = None) -> str:
     """Adaptive plan choice — the engine analog of S2EdgeIndex's lazy-build
     cost model (S2EdgeIndex.java:156-211: brute force until >100 edges and
     >30 queries make the index pay for itself).  Like the reference's
@@ -855,13 +767,16 @@ def pip_join(
     lng_col: str = "lng",
     cell_col: str = "cell_id",
     max_cells: int = 8,
-    # max_level 12 (not 30): a deep single-child chain in a covering (legal
-    # coverer tunneling, S2RegionCoverer.java:480) would add one
-    # ancestor-explode row per extra level for EVERY fact row; boundary
-    # coarseness below level 12 is cheaper to absorb in the vectorized
-    # refine than per-row fan-out is in the join.  (Measured: constraining
-    # further — min_level=4/level_mod=2 — shrinks fan-out to 4 but the
-    # coarser boundary cells inflate refine work 3x; this config wins.)
+    # max_level 12 (not 30): a coverer tunnelling down a single-child chain
+    # (S2RegionCoverer.java:480) stops at a level-12 cell instead of a leaf;
+    # on ALL_LAYERS that is one cell, and the cell count (56) is the same
+    # either way.  No arm's per-row cost grows with covering depth (range:
+    # rows x cells, stab: one binary search, prefix: one key), so the cap
+    # buys no join speed; it stays because every measured config, driver
+    # golden and covering_frame caller uses it, and the few extra boundary
+    # candidates a level-12 cell admits are absorbed by the refine.
+    # (Measured: a coarser covering, min_level=4/level_mod=2, inflated
+    # refine work 3x.)
     min_level: int = 0,
     max_level: int = 12,
     level_mod: int = 1,
@@ -876,16 +791,17 @@ def pip_join(
 ) -> DataFrame:
     """points x layers -> rows of points matched with ``polygon_id``.
 
-    ``strategy="auto"`` (default) applies the I2 cost model: coverings up to
-    the measured breakeven take the zero-Python broadcast range join, larger
+    ``strategy`` is ``"auto"`` (default), ``"range"``, ``"stab"`` or
+    ``"prefix"``.  ``"auto"`` applies the I2 cost model: coverings up to the
+    measured breakeven take the zero-Python broadcast range join, larger
     broadcastable ones the vectorized interval-stab lookup; a shuffled or
-    salted request — or a covering too big to broadcast — takes the
-    prefix-partitioned interval join (range/stab are broadcast-only by
-    construction; the exploded-ancestor arm remains only as an explicit
-    ``strategy="ancestor"`` A/B point).  ``n_rows`` is an optional fact-side
-    row-count hint (exact or estimated) that lets the model keep small fact
-    tables on the range path above the cell breakeven; ``prefix_level``
-    overrides the shuffle-width-derived anchor level of the prefix join.
+    salted request (``broadcast_cells=False`` or ``salt``) — or a covering
+    too big to broadcast — takes the prefix-partitioned interval join
+    (range/stab are broadcast-only by construction).  ``n_rows`` is an
+    optional fact-side row-count hint (exact or estimated) that lets the
+    model keep small fact tables on the range path above the cell
+    breakeven; ``prefix_level`` overrides the shuffle-width-derived anchor
+    level of the prefix join.
 
     ``covering_frame``: an already-built covering DataFrame in
     COVERING_SCHEMA shape (typically ``covering_df_distributed`` over a huge
@@ -897,7 +813,8 @@ def pip_join(
     ``"auto"`` bounded-collect IN-set→semi→bloom escalation / ``"semi"``
     fully lazy broadcast semi / ``"bloom"`` fully lazy fixed-size Bloom
     bitmap; see prefix_candidates_df."""
-    spark = points.sparkSession
+    if strategy not in ("auto", "range", "stab", "prefix"):
+        raise ValueError(f"unknown strategy {strategy!r}")
     if covering_frame is not None:
         if strategy not in ("auto", "prefix"):
             raise ValueError("covering_frame requires the prefix strategy")
@@ -909,11 +826,9 @@ def pip_join(
     )
     if strategy == "auto":
         if salt or not broadcast_cells:
-            # beyond-broadcast layer side: the compact prefix-partitioned
-            # interval join, NOT the ancestor explode (13x the shuffle)
-            strategy = "prefix"
+            strategy = "prefix"  # beyond-broadcast layer side
         else:
-            strategy = choose_strategy(rows, covering_levels(rows), n_rows)
+            strategy = choose_strategy(rows, n_rows)
     if strategy == "prefix":
         pts = with_cell_id(points, lat_col, lng_col, cell_col)
         cand = prefix_candidates(pts, rows, cell_col, salt, prefix_level)
@@ -923,9 +838,7 @@ def pip_join(
         cand = stab_candidates(points, rows, cell_col)
     else:
         pts = with_cell_id(points, lat_col, lng_col, cell_col)
-        cells_df = spark.createDataFrame(rows, COVERING_SCHEMA)
-        cand = assign_candidates(
-            pts, cells_df, covering_levels(rows), cell_col, strategy, broadcast_cells, salt
-        )
+        cells_df = points.sparkSession.createDataFrame(rows, COVERING_SCHEMA)
+        cand = assign_candidates(pts, cells_df, cell_col)
     refined = refine_candidates(cand, layers, lat_col, lng_col)
     return refined.drop("is_interior")

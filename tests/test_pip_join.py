@@ -47,7 +47,7 @@ def points_pdf(points):
     return points.toPandas()
 
 
-@pytest.mark.parametrize("strategy", ["ancestor", "range", "stab", "prefix"])
+@pytest.mark.parametrize("strategy", ["range", "stab", "prefix"])
 def test_pip_join_matches_bruteforce(points, points_pdf, strategy):
     layers = make_layers()
     result = pip_join(points, layers, strategy=strategy)
@@ -63,12 +63,11 @@ def test_pip_join_salted_shuffle_same_rows(points, points_pdf):
     assert got == oracle_matches(points_pdf, layers)
 
 
-def test_pip_join_ancestor_shuffled_same_rows(points, points_pdf):
-    # the explicit exploded-ancestor shuffle arm (kept for A/B) + salt
-    layers = make_layers()
-    result = pip_join(points, layers, strategy="ancestor", broadcast_cells=False, salt=4)
-    got = {(int(r["point_id"]), r["polygon_id"]) for r in result.select("point_id", "polygon_id").collect()}
-    assert got == oracle_matches(points_pdf, layers)
+def test_unknown_strategy_rejected(points):
+    # a retired or misspelt strategy raises instead of running some arm
+    for bad in ("ancestor", "bnlj"):
+        with pytest.raises(ValueError, match="unknown strategy"):
+            pip_join(points, make_layers(), strategy=bad)
 
 
 @pytest.mark.parametrize("prefix_level", [0, 2, 4, 6])
@@ -228,8 +227,9 @@ def test_prefix_in_filter_semi_join_branch(points, points_pdf, monkeypatch):
 
 
 def test_prefix_level_range_validated(points):
-    """Explicit anchor levels outside 0..30 must fail with a clear error,
-    not a cryptic negative-shift deep in the bit math."""
+    """Explicit anchor levels outside 0..PREFIX_LEVEL_CAP must fail with a
+    clear error, not a cryptic negative-shift deep in the bit math or a
+    replication of a coarse covering cell to millions of prefixes."""
     from s2_geometry_library_java_spark.operators.covering import covering_rows
     from s2_geometry_library_java_spark.operators.pip_join import (
         prefix_candidates,
@@ -245,7 +245,7 @@ def test_prefix_level_range_validated(points):
     from s2_geometry_library_java_spark.operators.covering import covering_df
 
     cover = covering_df(spark, layers, max_cells=8, max_level=12)
-    for bad in (-1, 31, 99):
+    for bad in (-1, 11, 31, 99):
         with pytest.raises(ValueError, match="prefix_level"):
             prefix_candidates(pts, rows, prefix_level=bad)
         with pytest.raises(ValueError, match="prefix_level"):

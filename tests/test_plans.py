@@ -1,6 +1,6 @@
 """Physical-plan shape assertions: the scale story must be visible in
-explain() — column-pruned scans, a single broadcast hash join with the
-native refinement folded in, exactly one Arrow hop for the encode, and the
+explain() — column-pruned scans, a broadcast join with the native
+refinement kept out of Python, exactly one Arrow hop for the encode, and the
 salted variant shuffling instead of broadcasting."""
 
 import re
@@ -43,12 +43,11 @@ def test_encode_is_single_arrow_hop(points):
 def test_native_join_is_broadcast_with_folded_refinement(spark, points):
     from __spark_entry__ import NATIVE_LAYERS
 
-    plan = plan_of(pip_join(points, NATIVE_LAYERS, strategy="ancestor"))
-    assert "BroadcastHashJoin" in plan
+    plan = plan_of(pip_join(points, NATIVE_LAYERS))
+    assert re.search(r"Broadcast(HashJoin|NestedLoopJoin)", plan)
     assert "SortMergeJoin" not in plan
-    assert "ArrowEvalPython" in plan  # the encode hop only
-    # rect/cap refinement runs inside the join condition (no extra stage)
-    assert "BroadcastNestedLoopJoin" not in plan
+    # the encode hop only: rect/cap refinement is native, no Python stage
+    assert plan.count("ArrowEvalPython") == 1
 
 
 def test_auto_strategy_small_covering_takes_range(spark, points):
@@ -89,13 +88,13 @@ def test_auto_strategy_row_hint(spark, points):
     from s2_geometry_library_java_spark.operators.pip_join import choose_strategy
 
     cov56 = covering_rows(ALL_LAYERS, max_cells=8, min_level=0, max_level=12, level_mod=1)
-    assert choose_strategy(cov56, [], n_rows=8_000_000) == "range"
-    assert choose_strategy(cov56, [], n_rows=128_000_000) == "stab"
-    assert choose_strategy(cov56, [], n_rows=None) == "stab"
+    assert choose_strategy(cov56, n_rows=8_000_000) == "range"
+    assert choose_strategy(cov56, n_rows=128_000_000) == "stab"
+    assert choose_strategy(cov56, n_rows=None) == "stab"
     big = covering_rows(ALL_LAYERS, max_cells=256, min_level=0, max_level=14, level_mod=1)
     assert len(big) > 1000
-    assert choose_strategy(big, [], n_rows=10_000) == "range"
-    assert choose_strategy(big, [], n_rows=1_000_000_000) == "stab"
+    assert choose_strategy(big, n_rows=10_000) == "range"
+    assert choose_strategy(big, n_rows=1_000_000_000) == "stab"
     plan = plan_of(pip_join(points, ALL_LAYERS, n_rows=8_000_000))
     assert "BroadcastNestedLoopJoin" in plan
     plan_big = plan_of(pip_join(points, ALL_LAYERS, n_rows=200_000_000))
@@ -174,10 +173,6 @@ def test_poly_refinement_single_pass(spark, points):
     # pre-encoded input pays the extra (8B in / 4B out) seg hop instead
     plan_pre = plan_of(pip_join(with_cell_id(points), ALL_LAYERS, strategy="stab"))
     assert plan_pre.count("ArrowEvalPython") == 3
-    plan_anc = plan_of(pip_join(points, ALL_LAYERS, strategy="ancestor"))
-    # the ancestor strategy keeps the original two-hop shape
-    assert plan_anc.count("ArrowEvalPython") == 2
-    assert plan_anc.count("Scan parquet") == 1
 
 
 def test_cc_star_phases_are_min_aggs_not_adjacency_arrays(spark):
@@ -244,7 +239,7 @@ def test_prefix_arm_encodes_once(spark, points, images, source, prune):
 
 
 @pytest.mark.parametrize("source", ["with_cell_id", "encode_images"])
-@pytest.mark.parametrize("strategy", ["range", "stab", "ancestor"])
+@pytest.mark.parametrize("strategy", ["range", "stab"])
 def test_broadcast_arms_encode_once(points, images, source, strategy):
     from __spark_entry__ import ALL_LAYERS
 

@@ -274,8 +274,9 @@ def test_prefix_df_salt_overflow_rejected(spark, points):
     layers = make_layers()
     cover = covering_df(spark, layers, max_cells=8, max_level=12)
     pts = with_cell_id(points)
+    # the deepest allowed anchor (PREFIX_LEVEL_CAP = 10) leaves 40 zero bits
     with pytest.raises(ValueError, match="salt"):
-        prefix_candidates_df(pts, cover, salt=2, prefix_level=30)
+        prefix_candidates_df(pts, cover, salt=(1 << 40) + 1, prefix_level=10)
 
 
 def test_covering_frame_rejects_other_strategies(spark, points):
