@@ -396,9 +396,9 @@ def q_pip_prefix_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     PREFIX_IN_FILTER_MAX distinct prefixes, broadcast left-semi beyond) —
     no covering row ever exists in driver Python.  Must emit exactly the
     pip_join_prefix rows (identical oracle)."""
-    from s2_geometry_library_java_spark.operators.covering import covering_df_distributed
+    from s2_geometry_library_java_spark.operators.covering import JOIN_COVERING, covering_df_distributed
 
-    cover = covering_df_distributed(spark, ALL_LAYER_SPECS, max_cells=8, max_level=12)
+    cover = covering_df_distributed(spark, ALL_LAYER_SPECS, **JOIN_COVERING)
     pts = geotagged_points(spark, sf_dir)
     m = pip_join(pts, ALL_LAYERS, covering_frame=cover)
     return m.select("point_id", "polygon_id")
@@ -412,9 +412,9 @@ def q_pip_prefix_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact prefix set outgrows a broadcast.  False positives are removed by
     the exact prefix equi-join + interval residual, so this must emit
     exactly the pip_join_prefix rows (identical oracle)."""
-    from s2_geometry_library_java_spark.operators.covering import covering_df_distributed
+    from s2_geometry_library_java_spark.operators.covering import JOIN_COVERING, covering_df_distributed
 
-    cover = covering_df_distributed(spark, ALL_LAYER_SPECS, max_cells=8, max_level=12)
+    cover = covering_df_distributed(spark, ALL_LAYER_SPECS, **JOIN_COVERING)
     pts = geotagged_points(spark, sf_dir)
     m = pip_join(pts, ALL_LAYERS, covering_frame=cover, prune="bloom")
     return m.select("point_id", "polygon_id")

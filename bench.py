@@ -1,15 +1,15 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
+"""Per-operator sweep: best-of-3 wall time of each engine operator at
+$SPARK_GRAFT_SF_DIR (default sf0.1) on get_spark's default local[N].
+Prints ONE JSON line:
 
-  {"metric": "...", "value": <e2e_sec>, "unit": "sec",
-   "queries": {...per-query sec...}, "sf": ..., ...derived throughputs}
+  {"queries": {...per-query sec...}, "sf": ..., "cpus": ...,
+   ...kernel micros and derived throughputs}
 
-The north metric (BASELINE.json) is images/sec for encode + polygon-join +
-tile-assign; ``e2e_images`` times exactly that path over the deterministic
-synthetic images table, and ``images_per_sec`` is its throughput.  Scaling
-evidence (N vs 4N cores) is produced by scripts/run_scaling.py ->
-BENCH/BASELINE.md.
+The end-to-end number (images/s for encode + polygon join + tile manifest)
+is perfbench's ``images_per_s`` (perfbench/README.md); scaling evidence (N
+vs 4N cores) is scripts/run_scaling.py over the same harness.  This sweep
+is the timing of the operators the benchmark does not run.
 """
 
 from __future__ import annotations
@@ -20,8 +20,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-N_IMAGES = int(os.environ.get("BENCH_N_IMAGES", "8000000"))
 
 
 def _kernel_micros(extras: dict) -> None:
@@ -72,70 +70,25 @@ def _kernel_micros(extras: dict) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from pyspark.sql import functions as F
 
-    from __spark_entry__ import ALL_LAYERS, NATIVE_LAYERS
+    from __spark_entry__ import ALL_LAYERS, NATIVE_LAYERS, q_caption_regions
     from s2_geometry_library_java_spark.operators import ann, dedup
     from s2_geometry_library_java_spark.operators.knn import knn_join
     from s2_geometry_library_java_spark.operators.pip_join import pip_join, with_cell_id
     from s2_geometry_library_java_spark.operators.tiling import tile_manifest
-    from s2_geometry_library_java_spark.plans.pipeline import encode_images
     from s2_geometry_library_java_spark.session import get_spark
     from s2_geometry_library_java_spark.sources.images import synthetic_images
     from s2_geometry_library_java_spark.sources.tables import geotagged_points, geotagged_queries, load_table
 
-    # Size input splits for the materialized images dir: narrow-schema rows
-    # compress to a few bytes, so byte-based splitting otherwise leaves
-    # cores idle.  Tasks per core is core-count-dependent (pinned A/B at
-    # 128M rows): at <=8 cores, 2 tasks/core wins (8c: 28.2s vs 36.3s;
-    # 2c: 92.8s vs 108.6s — finer tasks overlap each task's JVM scan with
-    # the neighbor's Python stage), while at 32 cores 1 task/core wins
-    # (16.1s vs 17.6s — the 2-deep python pipelining already fills the
-    # cores and extra tasks just add scheduling).  A real cluster tunes the
-    # same knob.
-    # <=8 cores: 2 tasks/core (overlap each task's JVM scan with the
-    # neighbor's Python stage).  32 cores: ~4/3 tasks/core — exactly
-    # 1/core convoys on stragglers (interleaved fresh-JVM A/B at 128M:
-    # 43 splits 12.9-13.7s vs 32 splits 18-25s), while 4/core drowns in
-    # scheduling waves (128 splits at 8M: 3.9s vs 2.4s at 32-43).
-    tasks_per_core = 2 if cpus <= 8 else 4 / 3
-    img_dir_pre = os.environ.get("BENCH_IMAGES_DIR", f"/tmp/s2bench_images_{N_IMAGES}")
-    split_bytes = 16 * 1024 * 1024
-    if os.path.isdir(img_dir_pre):
-        sizes = [
-            os.path.getsize(os.path.join(img_dir_pre, f))
-            for f in os.listdir(img_dir_pre)
-            if f.endswith(".parquet")
-        ]
-        if sizes:
-            # Spark's file packing charges openCostInBytes (4 MB default)
-            # per file on top of its bytes; sizing splits by raw bytes alone
-            # therefore yields one-file-per-split whenever files are small
-            # (sf0.1: 128 x ~1 MB files -> 128 splits instead of the
-            # intended ~32, four scheduling waves of tiny Python batches).
-            # Budget the open cost into the target so task count tracks
-            # tasks_per_core x cpus at every corpus size.
-            open_cost = 4 * 1024 * 1024
-            total = sum(sizes) + open_cost * len(sizes)
-            split_bytes = max(1 << 20, int(total / (tasks_per_core * cpus)))
-    extras_pre: dict = {}
-    if (
-        os.environ.get("BENCH_ONLY_E2E", "") != "1"
-        and os.environ.get("BENCH_BINARY_E2E", "") != "1"
-    ):
-        _kernel_micros(extras_pre)
-    spark = get_spark(
-        "bench",
-        master=f"local[{cpus}]",
-        extra_conf={"spark.sql.files.maxPartitionBytes": str(split_bytes)},
-    )
+    extras: dict = {}
+    _kernel_micros(extras)
+    spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     timings: dict[str, float] = {}
-    extras: dict[str, float] = dict(extras_pre)
-    e2e_only = os.environ.get("BENCH_ONLY_E2E", "") == "1"
 
     def timed(name: str, fn, reps: int = 3):
         # best-of-3: the sandbox VM has noisy neighbors (identical runs vary
@@ -152,346 +105,156 @@ def main() -> None:
         timings[name] = round(best, 3)
         return out
 
-    # Headline FIRST, on the settled fresh session: the 20-query sweep
-    # perturbs the JVM (heap, codegen cache, Python worker pool) by up to
-    # +1.5s on the identical e2e job (isolated reps 2.7-3.2s; post-sweep
-    # 3.7-4.7s, and a System.gc() settle does not recover it), so the
-    # graded number must measure the plan, not the sweep's residue.
-    def run_metadata_e2e() -> None:
-        # north metric: images/sec end-to-end encode + polygon-join + tile-assign
-        # over a MATERIALIZED images table (the north rule's input is an Iceberg
-        # table; parquet stands in).  The scan projects only (image_id, phash) —
-        # column pruning skips caption/bytes exactly as a production geotag job
-        # would.  One warmup pass first: Python-worker fork+import cost is a
-        # per-executor one-time, amortized to nothing over a real corpus.
-        # Fixed 128-way layout: file/row-group count bounds read parallelism (a
-        # parquet row group is indivisible), so it must not depend on the writer's
-        # core count or the 4N-core leg of the scaling run starves on N files.
-        # BENCH_SKEW_FRACTION > 0 materializes a SKEWED corpus: that fraction
-        # of rows' phash collapses into a ~0.003-degree hot box at (48, 10)
-        # — inside the r_eu layer, thousands of distinct leaf cells but ONE
-        # level-A prefix, so the shuffled prefix join funnels the whole
-        # fraction through one reducer key unless salted.  Jitter in
-        # the low 16 bits of each phash half keeps leaf ids distinct (the
-        # probe salt hashes the leaf id, so a single-leaf hot spot would be
-        # unsplittable by design).
-        skew = float(os.environ.get("BENCH_SKEW_FRACTION", "0") or 0)
-        img_dir = os.environ.get(
-            "BENCH_IMAGES_DIR",
-            f"/tmp/s2bench_images_{N_IMAGES}"
-            + (f"_skew{int(skew * 100)}" if skew else ""),
-        )
-        if not os.path.exists(os.path.join(img_dir, "_SUCCESS")):
-            base = synthetic_images(spark, N_IMAGES, partitions=128, with_bytes=False).select(
-                "image_id", "caption", "phash"
-            )
-            if skew:
-                up32 = int((48.0 + 90.0) / 180.0 * 2**32) & 0xFFFF0000
-                lo32 = int((10.0 + 180.0) / 360.0 * 2**32) & 0xFFFF0000
-                j1 = F.pmod(F.xxhash64(F.col("image_id")), F.lit(65536))
-                j2 = F.pmod(F.xxhash64(F.col("image_id"), F.lit(1)), F.lit(65536))
-                hot = F.shiftleft(F.lit(up32) + j1, 32).bitwiseOR(F.lit(lo32) + j2)
-                base = base.withColumn(
-                    "phash",
-                    F.when(
-                        F.pmod(F.xxhash64(F.col("image_id"), F.lit(2)), F.lit(1000))
-                        < F.lit(int(skew * 1000)),
-                        hot,
-                    ).otherwise(F.col("phash")),
-                )
-            base.write.mode("overwrite").parquet(img_dir)
+    # the north star's second geotag leg: caption parse -> broadcast
+    # gazetteer -> anchor-containment CASE, row-level and shuffle-free
+    timed("caption_regions", lambda: q_caption_regions(spark, sf_dir).count())
 
-        def e2e_job() -> int:
-            # The manifest needs only (cell_id, polygon_id): project to phash and
-            # let Catalyst prune image_id/caption at the scan — carrying a dead
-            # 13-byte id string per row through a bandwidth-bound fact path is
-            # exactly the waste column pruning exists to remove.
-            imgs = spark.read.parquet(img_dir)
-            enc_imgs = encode_images(imgs.select("phash"))
-            # the I2 cost-model row hint: at 8M rows x 56 cells this keeps the
-            # zero-Python BNLJ (interleaved A/B: 3.4s vs stab's 4.2s); at 128M+
-            # the same call routes to the interval-stab path.  BENCH_PIP_STRATEGY
-            # pins a strategy for scaling A/B experiments.
-            strat = os.environ.get("BENCH_PIP_STRATEGY", "auto")
-            pip_kw: dict = dict(n_rows=N_IMAGES, strategy=strat)
-            # the 100-TB arms (layer side too big to broadcast): shuffled
-            # prefix join, optionally salted against hot-cell skew
-            if strat == "prefix_shuffled":
-                pip_kw.update(strategy="prefix", broadcast_cells=False)
-                lvl = os.environ.get("BENCH_PREFIX_LEVEL")
-                if lvl:
-                    pip_kw.update(prefix_level=int(lvl))
-            elif strat == "prefix_salted":
-                pip_kw.update(
-                    strategy="prefix",
-                    broadcast_cells=False,
-                    salt=int(os.environ.get("BENCH_PIP_SALT", "8")),
-                )
-            elif strat in ("prefix_dist", "prefix_dist_bloom"):
-                # the fully distributed arm: executor-built covering frame,
-                # native prefix replication; probe prune = the auto rung
-                # (IN-set/semi) or, for the _bloom leg, the terminal
-                # fixed-size Bloom-bitmap rung forced explicitly
-                from __spark_entry__ import ALL_LAYER_SPECS
-                from s2_geometry_library_java_spark.operators.covering import (
-                    covering_df_distributed,
-                )
+    pts = geotagged_points(spark, sf_dir)
+    n_points = pts.count()
 
-                cover = covering_df_distributed(
-                    spark, ALL_LAYER_SPECS, max_cells=8, max_level=12
-                )
-                pip_kw = dict(covering_frame=cover)
-                if strat == "prefix_dist_bloom":
-                    pip_kw.update(prune="bloom")
-                lvl = os.environ.get("BENCH_PREFIX_LEVEL")
-                if lvl:
-                    pip_kw.update(prefix_level=int(lvl))
-            m = pip_join(enc_imgs, ALL_LAYERS, **pip_kw)
-            return tile_manifest(m, tile_level=7).count()
+    # encode: lat/lng -> leaf cell id over all fact points
+    enc = with_cell_id(pts)
+    # sum() forces the UDF: count(cell_id) constant-folds away now that
+    # the encode column is marked non-null
+    timed("encode", lambda: enc.agg(F.sum("cell_id")).collect())
+    extras["encode_rows_per_sec"] = round(n_points / max(timings["encode"], 1e-9))
 
-        # 5 warmups: the BNLJ codegen loop keeps improving through ~5 executions
-        # (per-rep trace: 8.7, 8.2, 8.3, 8.6, 5.9, 5.3, 5.0) before best-of-3
-        # sees steady state; JIT + worker warmup are per-executor one-times a
-        # real corpus amortizes to nothing.
-        for _ in range(int(os.environ.get("BENCH_WARMUPS", "5"))):
-            e2e_job()
-        e2e = float("inf")
-        # best-of-5 against VM noise for the graded headline; scaling legs
-        # keep best-of-3 so every campaign window samples identically
-        # (BENCH_E2E_REPS overrides for one-rep campaign sizing probes only)
-        for _ in range(int(os.environ.get("BENCH_E2E_REPS", "3" if e2e_only else "5"))):
-            t0 = time.time()
-            man_rows = e2e_job()
-            e2e = min(e2e, time.time() - t0)
-        timings["e2e_images"] = round(e2e, 3)
-        extras["images_per_sec"] = round(N_IMAGES / max(e2e, 1e-9))
-        extras["n_images"] = N_IMAGES
-        extras["manifest_rows"] = man_rows
+    matches = pip_join(enc, ALL_LAYERS, n_rows=n_points)
+    n_matches = timed("pip_join", lambda: matches.count())
+    timed("pip_join_range", lambda: pip_join(enc, NATIVE_LAYERS, strategy="range").count())
+    # the 100-TB beyond-broadcast arms, tracked round-over-round at sf0.1
+    # (not only in ad-hoc 128M campaigns): unsalted prefix join, the
+    # salted variant (same shapes as the driver's pip_join_prefix /
+    # pip_join_salted gates), and the fully distributed covering arm
+    timed(
+        "pip_join_prefix",
+        lambda: pip_join(enc, ALL_LAYERS, broadcast_cells=False).count(),
+    )
+    timed(
+        "pip_join_salted",
+        lambda: pip_join(enc, ALL_LAYERS, broadcast_cells=False, salt=4).count(),
+    )
 
-        if e2e_only:
-            return  # scaling-campaign legs time ONLY the headline job
+    from __spark_entry__ import ALL_LAYER_SPECS
+    from s2_geometry_library_java_spark.operators.covering import JOIN_COVERING, covering_df_distributed
 
-        # the north star's second geotag leg at fact scale: caption parse ->
-        # broadcast gazetteer -> anchor-containment CASE, rolled up per layer.
-        # Shuffle-free until the tiny rollup; scans (caption, phash) only.
-        from __spark_entry__ import CAPTION_GAZETTEER
-        from s2_geometry_library_java_spark.operators.captions import (
-            caption_region_counts,
-            caption_region_join,
-        )
+    def prefix_dist_job() -> int:
+        cover = covering_df_distributed(spark, ALL_LAYER_SPECS, **JOIN_COVERING)
+        return pip_join(enc, ALL_LAYERS, covering_frame=cover).count()
 
-        def caption_job() -> int:
-            imgs = spark.read.parquet(img_dir)
-            enc_imgs = encode_images(imgs.select("image_id", "caption", "phash"))
-            m = caption_region_join(enc_imgs, ALL_LAYERS, CAPTION_GAZETTEER)
-            return caption_region_counts(m).count()
+    timed("pip_join_prefix_dist", prefix_dist_job)
 
-        timed("caption_regions", caption_job)  # timed() warm-runs once internally
+    def prefix_bloom_job() -> int:
+        # the terminal probe-prune rung, forced (at sf0.1 auto picks the
+        # IN-set): tracks the Bloom-bitmap build + k word-lookup probes
+        cover = covering_df_distributed(spark, ALL_LAYER_SPECS, **JOIN_COVERING)
+        return pip_join(enc, ALL_LAYERS, covering_frame=cover, prune="bloom").count()
 
-    if os.environ.get("BENCH_BINARY_E2E", "") != "1":
-        run_metadata_e2e()
+    timed("pip_join_prefix_bloom", prefix_bloom_job)
+    timed("tile_manifest", lambda: tile_manifest(matches, tile_level=6).count())
 
-    n_points = 0
-    n_matches = 0
-    if not e2e_only:
-        pts = geotagged_points(spark, sf_dir)
-        n_points = pts.count()
+    qdf = geotagged_queries(spark, sf_dir, limit=8)
+    timed("knn", lambda: knn_join(enc, qdf, 10, n_points=n_points, n_queries=8).count())
 
-        # encode: lat/lng -> leaf cell id over all fact points
-        enc = with_cell_id(pts)
-        # sum() forces the UDF: count(cell_id) constant-folds away now that
-        # the encode column is marked non-null
-        timed("encode", lambda: enc.agg(F.sum("cell_id")).collect())
-        extras["encode_rows_per_sec"] = round(n_points / max(timings["encode"], 1e-9))
+    # snap-to-polyline over the full fact table (broadcast candidate
+    # buckets; the fact side never shuffles) and the skew-balanced
+    # adaptive tiling (one fact pass to the checkpointed grid)
+    from __spark_entry__ import SNAP_RADIUS_RAD, _snap_lines
+    from s2_geometry_library_java_spark.operators.adaptive import adaptive_tiles
+    from s2_geometry_library_java_spark.operators.snap import snap_join
 
-        matches = pip_join(enc, ALL_LAYERS, n_rows=n_points)
-        n_matches = timed("pip_join", lambda: matches.count())
-        timed("pip_join_range", lambda: pip_join(enc, NATIVE_LAYERS, strategy="range").count())
-        # the 100-TB beyond-broadcast arms, tracked round-over-round at sf0.1
-        # (not only in ad-hoc 128M campaigns): unsalted prefix join, the
-        # salted variant (same shapes as the driver's pip_join_prefix /
-        # pip_join_salted gates), and the fully distributed covering arm
-        timed(
-            "pip_join_prefix",
-            lambda: pip_join(enc, ALL_LAYERS, broadcast_cells=False).count(),
-        )
-        timed(
-            "pip_join_salted",
-            lambda: pip_join(enc, ALL_LAYERS, broadcast_cells=False, salt=4).count(),
-        )
+    lines = _snap_lines()
+    timed("snap_roads", lambda: snap_join(enc, lines, SNAP_RADIUS_RAD).count())
 
-        from __spark_entry__ import ALL_LAYER_SPECS
-        from s2_geometry_library_java_spark.operators.covering import covering_df_distributed
+    # both-axes near-dup (spatial bucket blocking + phash Hamming refine)
+    from s2_geometry_library_java_spark.operators.geodedup import geo_neardup_pairs
 
-        def prefix_dist_job() -> int:
-            cover = covering_df_distributed(spark, ALL_LAYER_SPECS, max_cells=8, max_level=12)
-            return pip_join(enc, ALL_LAYERS, covering_frame=cover).count()
+    tagged = enc.withColumn("phash", (F.col("point_id") * F.lit(40503)) % F.lit(65536))
+    timed("geo_neardup", lambda: geo_neardup_pairs(tagged, 0.01, 4, n_rows=n_points).count())
+    timed(
+        "adaptive_tiles",
+        lambda: adaptive_tiles(enc, cap=max(150, n_points // 100), min_level=1, max_level=10).count(),
+    )
 
-        timed("pip_join_prefix_dist", prefix_dist_job)
+    docs = load_table(spark, sf_dir, "documents")
+    timed("minhash_pairs", lambda: dedup.minhash_neardup_pairs(docs, threshold=0.35).count())
+    timed("ngram_jaccard", lambda: dedup.ngram_jaccard_pairs(docs, threshold=0.35).count())
+    timed("simhash", lambda: dedup.simhash_fingerprints(docs).count())
 
-        def prefix_bloom_job() -> int:
-            # the terminal probe-prune rung, forced (at sf0.1 auto picks the
-            # IN-set): tracks the Bloom-bitmap build + k word-lookup probes
-            cover = covering_df_distributed(spark, ALL_LAYER_SPECS, max_cells=8, max_level=12)
-            return pip_join(enc, ALL_LAYERS, covering_frame=cover, prune="bloom").count()
+    emb = load_table(spark, sf_dir, "embeddings")
+    timed("ann_cosine", lambda: ann.cosine_topk(emb, n_queries=8, k=10).count())
+    timed("ann_pq", lambda: ann.pq_cosine_topk(emb, n_queries=8, k=10, shortlist=100).count())
 
-        timed("pip_join_prefix_bloom", prefix_bloom_job)
-        timed("tile_manifest", lambda: tile_manifest(matches, tile_level=6).count())
+    # time-series operators over the events table: as-of enrichment
+    # (tagged-union sort-fill) and the bucketed interval-overlap join
+    from s2_geometry_library_java_spark.operators.asof import asof_join
+    from s2_geometry_library_java_spark.operators.interval_join import interval_overlap_join
 
-        qdf = geotagged_queries(spark, sf_dir, limit=8)
-        timed("knn", lambda: knn_join(enc, qdf, 10, n_points=n_points, n_queries=8).count())
+    ev = load_table(spark, sf_dir, "events")
+    err = (
+        ev.filter(F.col("event_type") == "error")
+        .select("user_id", "ts", F.col("event_id").alias("err_id"))
+        .dropDuplicates(["user_id", "ts"])  # asof contract: unique (key, ts)
+    )
+    timed(
+        "asof_join",
+        lambda: asof_join(ev.select("event_id", "user_id", "ts"), err, "user_id").count(),
+    )
+    iv = err.select(
+        "user_id",
+        F.col("err_id").alias("interval_id"),
+        F.col("ts").alias("start_ts"),
+        (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("end_ts"),
+    )
+    timed(
+        "interval_join",
+        lambda: interval_overlap_join(ev.select("event_id", "user_id", "ts"), iv).count(),
+    )
 
-        # snap-to-polyline over the full fact table (broadcast candidate
-        # buckets; the fact side never shuffles) and the skew-balanced
-        # adaptive tiling (one fact pass to the checkpointed grid)
-        from __spark_entry__ import SNAP_RADIUS_RAD, _snap_lines
-        from s2_geometry_library_java_spark.operators.adaptive import adaptive_tiles
-        from s2_geometry_library_java_spark.operators.snap import snap_join
+    # geometric aggregation + compaction over the events trajectories
+    from s2_geometry_library_java_spark.operators.caps import bounding_caps
+    from s2_geometry_library_java_spark.operators.simplify import simplify_trajectories
 
-        lines = _snap_lines()
-        timed("snap_roads", lambda: snap_join(enc, lines, SNAP_RADIUS_RAD).count())
+    timed("bounding_caps", lambda: bounding_caps(ev).count())
+    timed("simplify_traj", lambda: simplify_trajectories(ev, 0.8).count())
 
-        # both-axes near-dup (spatial bucket blocking + phash Hamming refine)
-        from s2_geometry_library_java_spark.operators.geodedup import geo_neardup_pairs
+    # the binary/multimodal path: decode + verify PSNR over a
+    # MATERIALIZED with-bytes corpus — measures the codec path, not
+    # row synthesis (generation is a one-time input cost).
+    from s2_geometry_library_java_spark.operators.images import image_stats
 
-        tagged = enc.withColumn("phash", (F.col("point_id") * F.lit(40503)) % F.lit(65536))
-        timed("geo_neardup", lambda: geo_neardup_pairs(tagged, 0.01, 4, n_rows=n_points).count())
-        timed(
-            "adaptive_tiles",
-            lambda: adaptive_tiles(enc, cap=max(150, n_points // 100), min_level=1, max_level=10).count(),
-        )
+    stats_dir = "/tmp/s2bench_images_bin_50000"
+    if not os.path.exists(os.path.join(stats_dir, "_SUCCESS")):
+        synthetic_images(spark, 50000, partitions=cpus).write.mode("overwrite").parquet(stats_dir)
+    timed("image_stats_50k", lambda: image_stats(spark.read.parquet(stats_dir)).count())
 
-        docs = load_table(spark, sf_dir, "documents")
-        timed("minhash_pairs", lambda: dedup.minhash_neardup_pairs(docs, threshold=0.35).count())
-        timed("ngram_jaccard", lambda: dedup.ngram_jaccard_pairs(docs, threshold=0.35).count())
-        timed("simhash", lambda: dedup.simhash_fingerprints(docs).count())
+    # audio modality path: PCM decode + windowed features + SNR verify
+    # over a materialized with-bytes corpus (same posture as images)
+    from s2_geometry_library_java_spark.operators.audio import audio_stats
+    from s2_geometry_library_java_spark.sources.audio import synthetic_audio
 
-        emb = load_table(spark, sf_dir, "embeddings")
-        timed("ann_cosine", lambda: ann.cosine_topk(emb, n_queries=8, k=10).count())
-        timed("ann_pq", lambda: ann.pq_cosine_topk(emb, n_queries=8, k=10, shortlist=100).count())
+    audio_dir = "/tmp/s2bench_audio_50000"
+    if not os.path.exists(os.path.join(audio_dir, "_SUCCESS")):
+        synthetic_audio(spark, 50000, partitions=cpus).write.mode("overwrite").parquet(audio_dir)
+    timed("audio_stats_50k", lambda: audio_stats(spark.read.parquet(audio_dir)).count())
 
-        # time-series operators over the events table: as-of enrichment
-        # (tagged-union sort-fill) and the bucketed interval-overlap join
-        from s2_geometry_library_java_spark.operators.asof import asof_join
-        from s2_geometry_library_java_spark.operators.interval_join import interval_overlap_join
+    # video modality path: frame-major decode + every-4th-frame sampling
+    # + per-frame PSNR verify (rows are ~67 KB of frames each, so 10k
+    # rows carries the same order of bytes as the 50k image corpus)
+    from s2_geometry_library_java_spark.operators.video import video_frame_stats
+    from s2_geometry_library_java_spark.sources.video import synthetic_videos
 
-        ev = load_table(spark, sf_dir, "events")
-        err = (
-            ev.filter(F.col("event_type") == "error")
-            .select("user_id", "ts", F.col("event_id").alias("err_id"))
-            .dropDuplicates(["user_id", "ts"])  # asof contract: unique (key, ts)
-        )
-        timed(
-            "asof_join",
-            lambda: asof_join(ev.select("event_id", "user_id", "ts"), err, "user_id").count(),
-        )
-        iv = err.select(
-            "user_id",
-            F.col("err_id").alias("interval_id"),
-            F.col("ts").alias("start_ts"),
-            (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("end_ts"),
-        )
-        timed(
-            "interval_join",
-            lambda: interval_overlap_join(ev.select("event_id", "user_id", "ts"), iv).count(),
-        )
-
-        # geometric aggregation + compaction over the events trajectories
-        from s2_geometry_library_java_spark.operators.caps import bounding_caps
-        from s2_geometry_library_java_spark.operators.simplify import simplify_trajectories
-
-        timed("bounding_caps", lambda: bounding_caps(ev).count())
-        timed("simplify_traj", lambda: simplify_trajectories(ev, 0.8).count())
-
-        # the binary/multimodal path: decode + verify PSNR over a
-        # MATERIALIZED with-bytes corpus — measures the codec path, not
-        # row synthesis (generation is a one-time input cost).
-        from s2_geometry_library_java_spark.operators.images import image_stats
-
-        stats_dir = "/tmp/s2bench_images_bin_50000"
-        if not os.path.exists(os.path.join(stats_dir, "_SUCCESS")):
-            synthetic_images(spark, 50000, partitions=cpus).write.mode("overwrite").parquet(stats_dir)
-        timed("image_stats_50k", lambda: image_stats(spark.read.parquet(stats_dir)).count())
-
-        # audio modality path: PCM decode + windowed features + SNR verify
-        # over a materialized with-bytes corpus (same posture as images)
-        from s2_geometry_library_java_spark.operators.audio import audio_stats
-        from s2_geometry_library_java_spark.sources.audio import synthetic_audio
-
-        audio_dir = "/tmp/s2bench_audio_50000"
-        if not os.path.exists(os.path.join(audio_dir, "_SUCCESS")):
-            synthetic_audio(spark, 50000, partitions=cpus).write.mode("overwrite").parquet(audio_dir)
-        timed("audio_stats_50k", lambda: audio_stats(spark.read.parquet(audio_dir)).count())
-
-        # video modality path: frame-major decode + every-4th-frame sampling
-        # + per-frame PSNR verify (rows are ~67 KB of frames each, so 10k
-        # rows carries the same order of bytes as the 50k image corpus)
-        from s2_geometry_library_java_spark.operators.video import video_frame_stats
-        from s2_geometry_library_java_spark.sources.video import synthetic_videos
-
-        video_dir = "/tmp/s2bench_video_10000"
-        if not os.path.exists(os.path.join(video_dir, "_SUCCESS")):
-            synthetic_videos(spark, 10000, partitions=cpus).write.mode("overwrite").parquet(video_dir)
-        timed(
-            "video_frames_10k",
-            lambda: video_frame_stats(spark.read.parquet(video_dir), every_n=4).count(),
-        )
-
-    if os.environ.get("BENCH_BINARY_E2E", "") == "1":
-        # Binary-corpus e2e: decode + PSNR-verify (the north star's per-row
-        # invariant) + geotag-encode + polygon-join + tile-assign.  At the
-        # real 10^12-image corpus the per-row decode dominates, so THIS is
-        # the job whose scaling matters; the metadata-only e2e below
-        # isolates the spatial path.  Row count is smaller because each row
-        # carries ~17 KB of pixels.
-        from s2_geometry_library_java_spark.operators.images import image_stats
-
-        n_bin = int(os.environ.get("BENCH_N_BIN_IMAGES", "1000000"))
-        bin_dir = os.environ.get("BENCH_BIN_IMAGES_DIR", f"/tmp/s2bench_images_bin_{n_bin}")
-        if not os.path.exists(os.path.join(bin_dir, "_SUCCESS")):
-            synthetic_images(spark, n_bin, partitions=128, with_bytes=True).write.mode(
-                "overwrite"
-            ).parquet(bin_dir)
-
-        def e2e_bin_job() -> int:
-            imgs = spark.read.parquet(bin_dir)
-            stats = image_stats(imgs, passthrough=("phash",))
-            verified = stats.filter(F.col("psnr") >= 40.0)
-            enc = encode_images(verified.select("phash"))
-            m = pip_join(enc, ALL_LAYERS, n_rows=n_bin)
-            return tile_manifest(m, tile_level=7).count()
-
-        for _ in range(int(os.environ.get("BENCH_WARMUPS", "3"))):
-            e2e_bin_job()
-        ebin = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            bin_man = e2e_bin_job()
-            ebin = min(ebin, time.time() - t0)
-        timings["e2e_images"] = round(ebin, 3)
-        extras["images_per_sec"] = round(n_bin / max(ebin, 1e-9))
-        extras["n_images"] = n_bin
-        extras["manifest_rows"] = bin_man
-        extras["binary_path"] = 1
-        result = {
-            "metric": "images_sec_e2e_decode_verify_encode_join_tile",
-            "value": timings["e2e_images"],
-            "unit": "sec",
-            "queries": timings,
-            "sf": sf_dir,
-            "cpus": cpus,
-            **extras,
-        }
-        print(json.dumps(result))
-        spark.stop()
-        return
+    video_dir = "/tmp/s2bench_video_10000"
+    if not os.path.exists(os.path.join(video_dir, "_SUCCESS")):
+        synthetic_videos(spark, 10000, partitions=cpus).write.mode("overwrite").parquet(video_dir)
+    timed(
+        "video_frames_10k",
+        lambda: video_frame_stats(spark.read.parquet(video_dir), every_n=4).count(),
+    )
 
     extras["n_points"] = n_points
     extras["n_matches"] = n_matches
     result = {
-        "metric": "images_sec_e2e_encode_join_tile",
-        "value": timings["e2e_images"],
-        "unit": "sec",
         "queries": timings,
         "sf": sf_dir,
         "cpus": cpus,

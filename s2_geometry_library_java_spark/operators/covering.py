@@ -35,6 +35,19 @@ COVERING_SCHEMA = StructType(
     ]
 )
 
+# The coverer settings of every spatial join's covering (pip_join, and the
+# covering_df_distributed frames passed to it as covering_frame=).
+# max_level 12 (not 30): a coverer tunnelling down a single-child chain
+# (S2RegionCoverer.java:480) stops at a level-12 cell instead of a leaf; on
+# ALL_LAYERS that is one cell, and the cell count (56) is the same either
+# way.  No join arm's per-row cost grows with covering depth (range: rows x
+# cells, stab: one binary search, prefix: one key), so the cap buys no join
+# speed; it stays because every measured config, driver golden and
+# benchmark digest uses it, and the few extra boundary candidates a level-12
+# cell admits are absorbed by the refine.  (Measured: a coarser covering,
+# min_level=4/level_mod=2, inflated refine work 3x.)
+JOIN_COVERING = {"max_cells": 8, "max_level": 12}
+
 
 # Memo for repeated covering builds: the coverer is deterministic and layer
 # objects are long-lived (module-level layer sets), so repeated jobs over the

@@ -63,7 +63,7 @@ from pyspark.sql.types import BooleanType, IntegerType, LongType, StructField, S
 
 from s2_geometry_library_java_spark.functions.native import biased, parent_expr
 from s2_geometry_library_java_spark.functions.udfs import _s2_cell_id_once
-from s2_geometry_library_java_spark.operators.covering import covering_rows, COVERING_SCHEMA
+from s2_geometry_library_java_spark.operators.covering import COVERING_SCHEMA, JOIN_COVERING, covering_rows
 from s2_geometry_library_java_spark.operators.layers import Layer
 
 
@@ -766,64 +766,53 @@ def pip_join(
     lat_col: str = "lat",
     lng_col: str = "lng",
     cell_col: str = "cell_id",
-    max_cells: int = 8,
-    # max_level 12 (not 30): a coverer tunnelling down a single-child chain
-    # (S2RegionCoverer.java:480) stops at a level-12 cell instead of a leaf;
-    # on ALL_LAYERS that is one cell, and the cell count (56) is the same
-    # either way.  No arm's per-row cost grows with covering depth (range:
-    # rows x cells, stab: one binary search, prefix: one key), so the cap
-    # buys no join speed; it stays because every measured config, driver
-    # golden and covering_frame caller uses it, and the few extra boundary
-    # candidates a level-12 cell admits are absorbed by the refine.
-    # (Measured: a coarser covering, min_level=4/level_mod=2, inflated
-    # refine work 3x.)
-    min_level: int = 0,
-    max_level: int = 12,
-    level_mod: int = 1,
     strategy: str = "auto",
     broadcast_cells: bool = True,
     salt: int | None = None,
-    precomputed_cells: list[tuple] | None = None,
     n_rows: int | None = None,
-    prefix_level: int | None = None,
     covering_frame: DataFrame | None = None,
     prune: str = "auto",
 ) -> DataFrame:
     """points x layers -> rows of points matched with ``polygon_id``.
 
-    ``strategy`` is ``"auto"`` (default), ``"range"``, ``"stab"`` or
-    ``"prefix"``.  ``"auto"`` applies the I2 cost model: coverings up to the
-    measured breakeven take the zero-Python broadcast range join, larger
+    The layers are covered with JOIN_COVERING (covering.py).  ``strategy``
+    is ``"auto"`` (default), ``"range"``, ``"stab"`` or ``"prefix"``.
+    ``"auto"`` applies the I2 cost model: coverings up to the measured
+    breakeven take the zero-Python broadcast range join, larger
     broadcastable ones the vectorized interval-stab lookup; a shuffled or
     salted request (``broadcast_cells=False`` or ``salt``) — or a covering
-    too big to broadcast — takes the prefix-partitioned interval join
-    (range/stab are broadcast-only by construction).  ``n_rows`` is an
-    optional fact-side row-count hint (exact or estimated) that lets the
-    model keep small fact tables on the range path above the cell
-    breakeven; ``prefix_level`` overrides the shuffle-width-derived anchor
-    level of the prefix join.
+    too big to broadcast — takes the prefix-partitioned interval join.
+    range/stab are broadcast-only by construction, so asking either for
+    ``broadcast_cells=False`` or ``salt`` raises.  ``n_rows`` is an optional
+    fact-side row-count hint (exact or estimated) that lets the model keep
+    small fact tables on the range path above the cell breakeven.
 
     ``covering_frame``: an already-built covering DataFrame in
-    COVERING_SCHEMA shape (typically ``covering_df_distributed`` over a huge
-    layer dimension, with coverer params matching this call's) — routes to
-    the fully distributed prefix arm (prefix_candidates_df): covering
-    replication and probe pruning stay DataFrame-native, nothing flows
-    through driver Python.  ``layers`` still supplies the exact refine
-    predicates.  ``prune`` (that arm only) picks the probe-prune rung —
+    COVERING_SCHEMA shape (typically ``covering_df_distributed(...,
+    **JOIN_COVERING)`` over a huge layer dimension) — routes to the fully
+    distributed prefix arm (prefix_candidates_df): covering replication and
+    probe pruning stay DataFrame-native, nothing flows through driver
+    Python.  ``layers`` still supplies the exact refine predicates.
+    ``prune`` (that arm only; raises otherwise) picks the probe-prune rung —
     ``"auto"`` bounded-collect IN-set→semi→bloom escalation / ``"semi"``
     fully lazy broadcast semi / ``"bloom"`` fully lazy fixed-size Bloom
     bitmap; see prefix_candidates_df."""
     if strategy not in ("auto", "range", "stab", "prefix"):
         raise ValueError(f"unknown strategy {strategy!r}")
+    if strategy in ("range", "stab") and (salt or not broadcast_cells):
+        raise ValueError(
+            f"strategy {strategy!r} broadcasts the covering; broadcast_cells=False "
+            "and salt need the 'auto' or 'prefix' strategy"
+        )
     if covering_frame is not None:
         if strategy not in ("auto", "prefix"):
             raise ValueError("covering_frame requires the prefix strategy")
         pts = with_cell_id(points, lat_col, lng_col, cell_col)
-        cand = prefix_candidates_df(pts, covering_frame, cell_col, salt, prefix_level, prune)
+        cand = prefix_candidates_df(pts, covering_frame, cell_col, salt, prune=prune)
         return refine_candidates(cand, layers, lat_col, lng_col).drop("is_interior")
-    rows = precomputed_cells if precomputed_cells is not None else covering_rows(
-        layers, max_cells=max_cells, min_level=min_level, max_level=max_level, level_mod=level_mod
-    )
+    if prune != "auto":
+        raise ValueError(f"prune={prune!r} needs covering_frame")
+    rows = covering_rows(layers, **JOIN_COVERING)
     if strategy == "auto":
         if salt or not broadcast_cells:
             strategy = "prefix"  # beyond-broadcast layer side
@@ -831,7 +820,7 @@ def pip_join(
             strategy = choose_strategy(rows, n_rows)
     if strategy == "prefix":
         pts = with_cell_id(points, lat_col, lng_col, cell_col)
-        cand = prefix_candidates(pts, rows, cell_col, salt, prefix_level)
+        cand = prefix_candidates(pts, rows, cell_col, salt)
     elif strategy == "stab" and cell_col not in points.columns:
         cand = stab_candidates_fused(points, rows, lat_col, lng_col, cell_col)
     elif strategy == "stab":

@@ -58,10 +58,7 @@ def main() -> None:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
-    # one local core per CPU given (SPARK_GRAFT_CPUS, else the affinity
-    # mask), as in tests/conftest.py
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
-    spark = get_spark("contract-check", master=f"local[{cpus}]", shuffle_partitions=32)
+    spark = get_spark("contract-check", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

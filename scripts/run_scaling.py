@@ -1,106 +1,86 @@
 #!/usr/bin/env python
-"""Scaling-efficiency evidence (north rule): run the identical e2e
-encode+join+tile job at N and 4N cores (local[8] vs local[32], fresh JVM
-each) on the same input and report both throughputs + efficiency into
-BENCH/BASELINE.md.
+"""Scaling efficiency N -> 4N cores over the benchmark's north-star job.
 
-Efficiency = throughput(4N) / (4 * throughput(N)); the rule requires >= 0.8.
-In this sandbox "two cluster sizes" is evidenced by two local parallelism
-levels, per the round brief.
+    python scripts/run_scaling.py
+
+N is a quarter of the CPU affinity mask (at least 1).  For seeds 0-2, at
+both N and 4N cores, runs
+
+    taskset -c <first k CPUs> python3 perfbench/run.py \\
+        --workload geotag_manifest --seed s --seconds 12 --trace 0
+
+perfbench sizes local[nproc] from the affinity mask, so the pin sets the
+core count; it also pins the Python UDF workers, which run outside Spark's
+task accounting and would otherwise spread over every core of the machine.
+Every run must report ``correct``.  Efficiency = median images/s at 4N
+divided by 4 x the median at N (the north rule asks for >= 0.8); the result
+goes to BENCH/scaling.md.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
 from datetime import datetime, timezone
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WORKLOAD = "geotag_manifest"
+SEEDS = (0, 1, 2)
+OUT = os.path.join(REPO, "BENCH", "scaling.md")
 
 
-def run_at(cpus: int, n_images: int, sf_dir: str) -> dict:
-    """Run bench pinned to exactly ``cpus`` physical cores.
-
-    The pin matters: Python UDF workers run outside Spark's task accounting,
-    so an unpinned local[8] still spreads its ~3-deep python pipelines over
-    every core of the machine — taskset makes "N cores" mean N cores, the
-    sandbox equivalent of an N-executor cluster."""
-    env = dict(os.environ)
-    env.update(
-        SPARK_GRAFT_CPUS=str(cpus),
-        SPARK_GRAFT_SF_DIR=sf_dir,
-        BENCH_ONLY_E2E="1",
-        BENCH_N_IMAGES=str(n_images),
-    )
-    if os.environ.get("SCALING_BINARY", "") == "1":
-        env.update(BENCH_BINARY_E2E="1", BENCH_N_BIN_IMAGES=str(n_images))
-    out = subprocess.run(
-        ["taskset", "-c", f"0-{cpus - 1}", sys.executable, os.path.join(REPO, "bench.py")],
-        env=env, capture_output=True, text=True, cwd=REPO, timeout=1800,
-    )
-    line = out.stdout.strip().splitlines()[-1]
-    return json.loads(line)
+def run_at(cpus: list[int], seed: int) -> float:
+    """images/s of one perfbench run pinned to ``cpus``."""
+    cmd = [
+        "taskset", "-c", ",".join(map(str, cpus)),
+        sys.executable, os.path.join(REPO, "perfbench", "run.py"),
+        "--workload", WORKLOAD, "--seed", str(seed), "--seconds", "12", "--trace", "0",
+    ]
+    out = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO, timeout=1800)
+    lines = out.stdout.strip().splitlines()
+    result = json.loads(lines[-1]) if lines else {}
+    if out.returncode != 0 or not result.get("correct"):
+        sys.exit(f"perfbench run not correct at {len(cpus)} cores, seed {seed}:\n{out.stderr[-2000:]}")
+    return result["metrics"]["images_per_s"]["value"]
 
 
 def main() -> None:
-    n_images = int(os.environ.get("SCALING_N_IMAGES", "8000000"))
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    n_small = int(os.environ.get("SCALING_N_SMALL", "8"))
-    n_big = 4 * n_small
+    mask = sorted(os.sched_getaffinity(0))
+    n = max(1, len(mask) // 4)
+    widths = (n, 4 * n)
+    if len(mask) < widths[1]:
+        sys.exit(f"need {widths[1]} CPUs for N={n} -> 4N, have {len(mask)}")
 
-    # warm-up run to exclude one-time JVM/py4j startup skew from the ratio
-    # (both measured runs still include their own startup-free job time).
-    results = {}
-    for cpus in (n_small, n_big):
-        runs = [run_at(cpus, n_images, sf_dir) for _ in range(int(os.environ.get("SCALING_RUNS", "3")))]
-        # best-of-3: the sandbox VM has noisy neighbors; min is the honest
-        # estimate of the machine's capability at this core count
-        results[cpus] = min(runs, key=lambda r: r["queries"]["e2e_images"])
-        print(f"local[{cpus}]: {results[cpus]['queries']['e2e_images']}s "
-              f"{results[cpus]['images_per_sec']} images/sec", flush=True)
+    ips: dict[int, list[float]] = {k: [] for k in widths}
+    for seed in SEEDS:  # both widths per seed, so drift hits both alike
+        for k in widths:
+            ips[k].append(run_at(mask[:k], seed))
+            print(f"local[{k}] seed {seed}: {ips[k][-1]:,.0f} images/s", flush=True)
 
-    tp_small = results[n_small]["images_per_sec"]
-    tp_big = results[n_big]["images_per_sec"]
-    eff = tp_big / (tp_small * (n_big / n_small))
+    med = {k: statistics.median(v) for k, v in ips.items()}
+    eff = med[widths[1]] / (4 * med[n])
+    rows = "\n".join(
+        f"| local[{k}] | {', '.join(f'{v:,.0f}' for v in ips[k])} | {med[k]:,.0f} |" for k in widths
+    )
+    os.makedirs(os.path.dirname(OUT), exist_ok=True)
+    with open(OUT, "w") as fh:
+        fh.write(f"""# Scaling efficiency N -> 4N (generated {datetime.now(timezone.utc).isoformat(timespec="seconds")})
 
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    stamp = datetime.now(timezone.utc).isoformat()
-    out_name = os.environ.get("SCALING_OUT", "BASELINE_generated.md")
-    with open(os.path.join(REPO, "BENCH", out_name), "w") as fh:
-        fh.write(f"""# BENCH/BASELINE.md — scaling evidence (generated {stamp})
+`python scripts/run_scaling.py`: perfbench `{WORKLOAD}` (1M images: scan,
+encode, polygon join, tile manifest), `--seconds 12 --trace 0`, seeds
+{", ".join(map(str, SEEDS))} at both widths, each run a fresh JVM pinned
+with `taskset` to the first k CPUs of a {len(mask)}-CPU affinity mask.
+Every run was `correct`.
 
-Job: end-to-end {'decode + PSNR-verify + ' if os.environ.get('SCALING_BINARY') == '1' else ''}encode + polygon-join + tile-assign over {n_images:,}
-deterministic synthetic image rows ({'binary corpus' if os.environ.get('SCALING_BINARY') == '1' else 'metadata path'}), identical input at both
-parallelism levels; fresh JVM per run via subprocess (scripts/run_scaling.py).
-
-| cores | e2e sec | images/sec |
+| cores | images/s per seed | median |
 |---|---|---|
-| local[{n_small}] | {results[n_small]['queries']['e2e_images']} | {tp_small:,} |
-| local[{n_big}] | {results[n_big]['queries']['e2e_images']} | {tp_big:,} |
+{rows}
 
-**Scaling efficiency N->4N: {eff:.3f}** (rule threshold >= 0.8).
-
-Method: each leg is a fresh JVM pinned with `taskset -c 0-(N-1)` — the pin
-matters because Python UDF workers run outside Spark's task accounting, so
-an unpinned local[8] silently spreads over every core of the machine.  Each
-leg reports best-of-3 (the sandbox VM has noisy neighbors; observed
-run-to-run variance on identical configs is up to 2x, which bounds how
-precisely efficiency can be measured here).
-
-Decomposition (same job, component A/B at both core counts): the pure
-encode kernel stage scales at ~0.89 efficiency (compute-bound on both
-legs); the covering join + refinement stages carry per-stage fixed overhead
-(stage scheduling, Arrow pipeline ramp) that a single machine cannot
-amortize at these data sizes but a real 8-vs-32-executor cluster reading
-100 TB would.  The plan itself has no scaling hazard: the covering is
-broadcast (no shuffle of the fact side), the only wide stage is the final
-manifest aggregation (~30k rows), nothing collects to the driver, and the
-shuffled variant salts hot cells (pip_join(salt=...)).
-
-Notes: single-machine core scaling is the sandbox stand-in for the N->4N
-executor test of the north rule.
+**Scaling efficiency N -> 4N: {eff:.3f}** (median(4N) / (4 x median(N));
+the north rule asks for >= 0.8).
 """)
     print(f"efficiency: {eff:.3f}")
 

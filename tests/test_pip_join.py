@@ -64,10 +64,22 @@ def test_pip_join_salted_shuffle_same_rows(points, points_pdf):
 
 
 def test_unknown_strategy_rejected(points):
-    # a retired or misspelt strategy raises instead of running some arm
-    for bad in ("ancestor", "bnlj"):
-        with pytest.raises(ValueError, match="unknown strategy"):
-            pip_join(points, make_layers(), strategy=bad)
+    # a retired or misspelt strategy raises instead of running some arm, and
+    # so does an argument the chosen arm cannot honour: range and stab
+    # always broadcast and never salt, and only the covering_frame arm prunes
+    cases = [
+        ({"strategy": "ancestor"}, "unknown strategy"),
+        ({"strategy": "bnlj"}, "unknown strategy"),
+        ({"strategy": "range", "broadcast_cells": False}, "broadcasts the covering"),
+        ({"strategy": "stab", "broadcast_cells": False}, "broadcasts the covering"),
+        ({"strategy": "range", "salt": 4}, "broadcasts the covering"),
+        ({"strategy": "stab", "salt": 4}, "broadcasts the covering"),
+        ({"prune": "semi"}, "covering_frame"),
+        ({"strategy": "prefix", "prune": "bloom"}, "covering_frame"),
+    ]
+    for kwargs, match in cases:
+        with pytest.raises(ValueError, match=match):
+            pip_join(points, make_layers(), **kwargs)
 
 
 @pytest.mark.parametrize("prefix_level", [0, 2, 4, 6])

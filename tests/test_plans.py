@@ -273,3 +273,23 @@ def test_refine_filter_tests_parity_result_only(points):
     filters = [line for line in plan.splitlines() if "Filter" in line and "pythonUDF" in line]
     assert len(filters) == 1
     assert "CASE WHEN" not in filters[0]
+
+
+def test_range_join_broadcasts_benchmark_covering(spark, points):
+    # The benchmark's oracle and manifest digests assume the join covering
+    # of ALL_LAYERS at max_cells=8, max_level=12 (56 cells): the range arm
+    # must broadcast exactly those rows.
+    from pyspark.sql import DataFrame
+
+    from __spark_entry__ import ALL_LAYERS
+    from s2_geometry_library_java_spark.operators.covering import covering_rows
+
+    df = pip_join(points, ALL_LAYERS, strategy="range")
+    assert "BroadcastNestedLoopJoin" in plan_of(df)
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    (cells,) = [leaves.apply(i) for i in range(leaves.size()) if leaves.apply(i).nodeName() == "LogicalRDD"]
+    jds = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, cells)
+    got = [tuple(r) for r in DataFrame(jds, spark).collect()]
+    want = covering_rows(ALL_LAYERS, max_cells=8, max_level=12)
+    assert len(want) == 56
+    assert sorted(got) == sorted(want)
