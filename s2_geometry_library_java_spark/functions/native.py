@@ -199,7 +199,7 @@ def xyz_exprs(lat_deg: Column, lng_deg: Column) -> tuple[Column, Column, Column]
 
 
 def xyz_sql(lat: str, lng: str) -> tuple[str, str, str]:
-    """DuckDB SQL text for the same xyz expression tree as ``xyz_exprs``."""
+    """SQL text (Spark and DuckDB) for the same xyz expression tree as ``xyz_exprs``."""
     d = _D2R_LIT
     return (
         f"(cos({lng} * {d}) * cos({lat} * {d}))",

@@ -113,15 +113,13 @@ def caption_region_join(
         cand = mentions.join(F.broadcast(dim), "word")
     # restrict the CASE/parity chain to layers the gazetteer can produce
     used = [l for l in layers if l.polygon_id in set(word_to_layer.values())]
-    native = [
-        l for l in used if l.native_predicate(F.col(lat_col), F.col(lng_col)) is not None
-    ]
-    kernel = [l for l in used if l not in native]
+    native = [l for l in used if l.native]
+    kernel = [l for l in used if not l.native]
     cols = [id_col, "slot", "word", "polygon_id"]
     if not kernel or not native:
         inside = membership_expr(used, lat_col=lat_col, lng_col=lng_col)
         return cand.select(*cols, inside.alias("inside"))
-    # Mixed layer kinds: split by layer kind so ONLY kernel-layer mention
+    # Mixed layer kinds: split on ``Layer.native`` so ONLY kernel-layer mention
     # rows ride the Arrow parity hop — a single fused expression would ship
     # every row through Python just to ignore most of them (measured 3.4s ->
     # the dominant cost at 8M images x 2 mentions).  The two arms re-scan

@@ -1,14 +1,14 @@
-"""Polygon-layer wrappers: region object + native/SQL membership predicates.
+"""Polygon-layer wrappers: region object + SQL membership predicate.
 
 Each layer carries its geometry twice:
 
 1. the driver-side region object (geometry/*) used by the coverer and, for
    loop/polygon layers, the vectorized parity refinement kernel
    (S2Loop.java:624-654);
-2. where the membership test is interval/trig arithmetic (rect and cap), a
-   *native* Spark Column predicate plus the identical DuckDB SQL text — so
-   refinement for those layers never leaves WholeStageCodegen, and the
-   driver's oracle can state ground truth independently of any S2 machinery.
+2. where the membership test is interval/trig arithmetic (rect and cap),
+   one SQL text, ``Layer.sql_predicate``, parsed by Spark (``F.expr``, so
+   refinement never leaves WholeStageCodegen) and by the driver's DuckDB
+   oracle, which states ground truth independently of any S2 machinery.
 
 The predicate semantics mirror the reference exactly:
 - rect: closed lat/lng intervals, inverted lng interval wraps through ±180
@@ -25,10 +25,8 @@ from dataclasses import dataclass, field
 from typing import Any
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-from s2_geometry_library_java_spark.functions.native import xyz_exprs, xyz_sql
+from s2_geometry_library_java_spark.functions.native import xyz_sql
 from s2_geometry_library_java_spark.geometry import S2Cap, S2LatLngRect, S2Polygon
 from s2_geometry_library_java_spark.geometry.text_format import make_loop, make_polygon
 from s2_geometry_library_java_spark.kernel import cellid as ck
@@ -42,33 +40,18 @@ class Layer:
     params: dict = field(default_factory=dict)
 
     # ------------------------------------------------------------------
-    def native_predicate(self, lat_deg: Column, lng_deg: Column) -> Column | None:
-        """JVM-side membership predicate in degrees, or None → parity kernel."""
-        if self.kind == "rect":
-            p = self.params
-            lat_ok = (lat_deg >= F.lit(p["lat_lo"])) & (lat_deg <= F.lit(p["lat_hi"]))
-            if p["lng_lo"] <= p["lng_hi"]:
-                lng_ok = (lng_deg >= F.lit(p["lng_lo"])) & (lng_deg <= F.lit(p["lng_hi"]))
-            else:  # inverted interval wraps through +-180 (S1Interval.java:147)
-                lng_ok = (lng_deg >= F.lit(p["lng_lo"])) | (lng_deg <= F.lit(p["lng_hi"]))
-            return lat_ok & lng_ok
-        if self.kind == "cap":
-            ax, ay, az = self.params["axis"]
-            x, y, z = xyz_exprs(lat_deg, lng_deg)
-            dist2 = (
-                (x - F.lit(ax)) * (x - F.lit(ax))
-                + (y - F.lit(ay)) * (y - F.lit(ay))
-                + (z - F.lit(az)) * (z - F.lit(az))
-            )
-            return dist2 <= F.lit(2.0 * self.params["height"])
-        return None
+    @property
+    def native(self) -> bool:
+        """Refined in the JVM by ``sql_predicate`` (rect, cap), else by the parity kernel."""
+        return self.kind in ("rect", "cap")
 
     def sql_predicate(self, lat: str, lng: str) -> str | None:
-        """DuckDB SQL text computing the identical membership predicate.
-
-        rect/cap: interval / chord arithmetic.  loop/polygon layers whose
-        loops are all CONVEX get an exact edge-plane sign test (interior of
-        a convex CCW spherical polygon = positive side of every edge's
+        """SQL text of the membership predicate, read alike by Spark
+        (``F.expr``) and DuckDB; ``lat``/``lng`` are column references in
+        degrees.  rect/cap: interval / chord arithmetic, the engine's refine
+        formula.  loop/polygon layers whose loops are all CONVEX get, for
+        the oracles only, an exact edge-plane sign test (interior of a
+        convex CCW spherical polygon = positive side of every edge's
         great-circle plane), XOR-combined across loops exactly like
         S2Polygon.contains (S2Polygon.java:913-928).  Non-convex loops
         return None (parity is not a conjunction of signs)."""
@@ -91,7 +74,7 @@ class Layer:
             lat_ok = f"({lat} >= {p['lat_lo']!r} AND {lat} <= {p['lat_hi']!r})"
             if p["lng_lo"] <= p["lng_hi"]:
                 lng_ok = f"({lng} >= {p['lng_lo']!r} AND {lng} <= {p['lng_hi']!r})"
-            else:
+            else:  # inverted interval wraps through +-180 (S1Interval.java:147)
                 lng_ok = f"({lng} >= {p['lng_lo']!r} OR {lng} <= {p['lng_hi']!r})"
             return f"({lat_ok} AND {lng_ok})"
         if self.kind == "cap":
@@ -106,8 +89,8 @@ class Layer:
 
     # ------------------------------------------------------------------
     def contains_points(self, lat_deg: np.ndarray, lng_deg: np.ndarray) -> np.ndarray:
-        """Vectorized membership for the pandas refinement path; the same
-        formulas as native_predicate for rect/cap, parity kernel for loops."""
+        """Vectorized membership (the tests' NumPy reference); the same
+        formulas as sql_predicate for rect/cap, parity kernel for loops."""
         if self.kind == "rect":
             p = self.params
             lat_ok = (lat_deg >= p["lat_lo"]) & (lat_deg <= p["lat_hi"])

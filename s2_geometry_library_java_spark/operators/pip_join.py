@@ -54,6 +54,8 @@ emits no duplicates by construction.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -559,6 +561,12 @@ def prefix_candidates_df(
     return _prefix_join(points, pref, cell_col, prefix_level, salt, prune)
 
 
+# A column reference both F.col and F.expr read the same way: dotted parts,
+# each a plain identifier or backtick-quoted (`` escapes a backtick).
+_PART = r"(?:[A-Za-z_][A-Za-z0-9_]*|`(?:[^`]|``)+`)"
+_COLUMN_REF = re.compile(rf"{_PART}(?:\.{_PART})*")
+
+
 def membership_expr(
     layers: list[Layer],
     lat_col: str = "lat",
@@ -569,14 +577,18 @@ def membership_expr(
     named by the row's ``polygon_id``?
 
     Single-pass: one predicate combining the native rect/cap tests
-    (codegen'd CASE chain) with one vectorized parity-kernel pandas UDF for
-    loop/polygon layers — the source is scanned exactly once regardless of
-    the layer mix (no union of per-kind branches).  ``seed`` is an optional
+    (codegen'd CASE chain of ``Layer.sql_predicate``) with one vectorized
+    parity-kernel pandas UDF for loop/polygon layers — the source is
+    scanned exactly once regardless of the layer mix (no union of per-kind
+    branches).  ``lat_col``/``lng_col`` are SQL column references
+    (backtick-quote other names).  ``seed`` is an optional
     already-decided-true Column (e.g. interior-covering-cell membership);
     rows where it holds skip both the CASE chain and the parity sweep."""
-    native = [l for l in layers if l.native_predicate(F.col(lat_col), F.col(lng_col)) is not None]
-    native_ids = {l.polygon_id for l in native}
-    kernel_layers = [l for l in layers if l.polygon_id not in native_ids]
+    for c in (lat_col, lng_col):
+        if not _COLUMN_REF.fullmatch(c):
+            raise ValueError(f"column reference {c!r} is not a SQL identifier; quote it with backticks")
+    native = [l for l in layers if l.native]
+    kernel_layers = [l for l in layers if not l.native]
 
     cond: Column = seed if seed is not None else F.lit(False)
     if native:
@@ -584,7 +596,7 @@ def membership_expr(
         for layer in native:
             pred = F.when(
                 F.col("polygon_id") == F.lit(layer.polygon_id),
-                layer.native_predicate(F.col(lat_col), F.col(lng_col)),
+                F.expr(layer.sql_predicate(lat_col, lng_col)),
             ).otherwise(pred)
         cond = cond | pred
 

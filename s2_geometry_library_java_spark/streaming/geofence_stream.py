@@ -3,7 +3,7 @@ stream — the alerting twin of the batch point-in-polygon join.
 
 Plan shape (the 100-TB stream):
 - Membership is evaluated IN the projection: each fence contributes a
-  ``WHEN native_predicate THEN polygon_id`` arm to one array literal,
+  ``WHEN <Layer.sql_predicate> THEN polygon_id`` arm to one array literal,
   nulls compacted, then a single explode.  No join operator at all —
   the fence set lives in the plan, so the stream never shuffles until
   the windowed aggregation, and every arm runs inside WholeStageCodegen.
@@ -16,8 +16,8 @@ Plan shape (the 100-TB stream):
   stream-static-join compatible; the inlined form exists because the
   common alerting case is a handful of fences per deployment.
 
-Only fences with a native (JVM-expressible) membership predicate are
-accepted — rect and cap fences; general polygons route through pip_join.
+Only ``Layer.native`` fences (rect and cap, whose membership is one SQL
+predicate) are accepted; general polygons route through pip_join.
 """
 
 from __future__ import annotations
@@ -49,13 +49,12 @@ def streaming_geofence_counts(
     )
     arms = []
     for layer in layers:
-        pred = layer.native_predicate(F.col("lat"), F.col("lng"))
-        if pred is None:
+        if not layer.native:
             raise ValueError(
                 f"layer {layer.polygon_id!r} ({layer.kind}) has no native predicate; "
                 "route general polygons through pip_join's broadcast covering join"
             )
-        arms.append(F.when(pred, F.lit(layer.polygon_id)))
+        arms.append(F.when(F.expr(layer.sql_predicate("lat", "lng")), F.lit(layer.polygon_id)))
     hits = tagged.select(
         "ts", F.explode(F.array_compact(F.array(*arms))).alias("polygon_id")
     )

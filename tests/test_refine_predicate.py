@@ -1,0 +1,131 @@
+"""The engine's rect/cap refine formula (``Layer.sql_predicate`` parsed by
+``F.expr`` inside ``membership_expr``): checked against the NumPy reference
+``Layer.contains_points`` on an edge matrix, on quoted column names, and on
+how many py4j round trips a repeat build costs."""
+
+import math
+import threading
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from __spark_entry__ import ALL_LAYERS
+from s2_geometry_library_java_spark.operators.pip_join import membership_expr
+
+NATIVE = [l for l in ALL_LAYERS if l.native]
+
+# Spark's and NumPy's trig can differ in the last ulp, so a cap point whose
+# chord² lies this close to 2h has no single right answer.
+CAP_MARGIN = 1e-9
+
+
+def _rect_points(p):
+    lats = []
+    for v, out in ((p["lat_lo"], -math.inf), (p["lat_hi"], math.inf)):
+        lats += [v, np.nextafter(v, out), np.nextafter(v, -out)]
+    lats += [(p["lat_lo"] + p["lat_hi"]) / 2, 90.0, -90.0]
+    lngs = []
+    for v, out in ((p["lng_lo"], -math.inf), (p["lng_hi"], math.inf)):
+        lngs += [v, np.nextafter(v, out), np.nextafter(v, -out)]
+    # both ends of the antimeridian, a point on each side of it (inside the
+    # inverted interval of a wrapping rect) and the meridian opposite
+    lngs += [180.0, -180.0, 179.0, -179.0, 0.0]
+    if p["lng_lo"] <= p["lng_hi"]:
+        lngs.append((p["lng_lo"] + p["lng_hi"]) / 2)
+    return [(la, ln) for la in lats for ln in lngs]
+
+
+def _cap_points(layer):
+    ax = np.asarray(layer.params["axis"])
+    lat0 = math.degrees(math.asin(ax[2]))
+    lng0 = math.degrees(math.atan2(ax[1], ax[0]))
+    angle = 2.0 * math.asin(math.sqrt(layer.params["height"] / 2.0))  # chord² = 2h
+    pts = [(lat0, lng0), (-lat0, lng0 - 180.0 if lng0 > 0 else lng0 + 180.0)]
+    pts += [(90.0, 0.0), (-90.0, 0.0), (0.0, 180.0), (0.0, -180.0)]
+    # just inside / on / just outside the boundary circle, on 8 bearings
+    for d in (angle - 1e-4, angle, angle + 1e-4):
+        for b in np.linspace(0.0, 2.0 * math.pi, 8, endpoint=False):
+            phi1, lam1 = math.radians(lat0), math.radians(lng0)
+            phi2 = math.asin(
+                math.sin(phi1) * math.cos(d) + math.cos(phi1) * math.sin(d) * math.cos(b)
+            )
+            lam2 = lam1 + math.atan2(
+                math.sin(b) * math.sin(d) * math.cos(phi1),
+                math.cos(d) - math.sin(phi1) * math.sin(phi2),
+            )
+            lng = (math.degrees(lam2) + 180.0) % 360.0 - 180.0
+            pts.append((math.degrees(phi2), lng))
+    lat = np.array([p[0] for p in pts])
+    lng = np.array([p[1] for p in pts])
+    xyz = np.stack(
+        [
+            np.cos(np.radians(lng)) * np.cos(np.radians(lat)),
+            np.sin(np.radians(lng)) * np.cos(np.radians(lat)),
+            np.sin(np.radians(lat)),
+        ],
+        axis=1,
+    )
+    chord2 = np.sum((xyz - ax) ** 2, axis=1)
+    keep = np.abs(chord2 - 2.0 * layer.params["height"]) > CAP_MARGIN
+    return [p for p, k in zip(pts, keep) if k]
+
+
+@pytest.mark.parametrize("layer", NATIVE, ids=[l.polygon_id for l in NATIVE])
+def test_native_formula_matches_numpy_on_edges(spark, layer):
+    pts = _rect_points(layer.params) if layer.kind == "rect" else _cap_points(layer)
+    want = layer.contains_points(
+        np.array([p[0] for p in pts]), np.array([p[1] for p in pts])
+    )
+    n = len(pts)
+    rows = [(i, float(la), float(ln)) for i, (la, ln) in enumerate(pts)]
+    rows += [(n, None, pts[0][1]), (n + 1, pts[0][0], None)]
+    df = spark.createDataFrame(rows, "rid int, lat double, lng double")
+    inside = membership_expr([layer]).alias("inside")
+    df = df.withColumn("polygon_id", F.lit(layer.polygon_id)).select("rid", inside)
+    got = {r["rid"]: r["inside"] for r in df.collect()}
+    assert [got[i] for i in range(n)] == want.tolist()
+    assert want.any() and not want.all()
+    # a null coordinate leaves the CASE arm unknown, as in SQL
+    assert got[n] is None and got[n + 1] is None
+
+
+def test_quoted_column_names_resolve(spark):
+    probe = ((50.0, 0.0), (10.0, 20.0), (-80.0, 170.0), (40.0, -74.0))
+    pts = [(l.polygon_id, lat, lng) for l in ALL_LAYERS for lat, lng in probe]
+    pts = [(i, *p) for i, p in enumerate(pts)]
+    plain = spark.createDataFrame(pts, "rid int, polygon_id string, lat double, lng double")
+    quoted = plain.withColumnsRenamed({"lat": "lat deg", "lng": "p.lng"})
+    want = plain.select("rid", membership_expr(ALL_LAYERS).alias("inside")).collect()
+    got = quoted.select(
+        "rid", membership_expr(ALL_LAYERS, "`lat deg`", "`p.lng`").alias("inside")
+    ).collect()
+    assert sorted(got) == sorted(want)
+    assert any(r["inside"] for r in want) and not all(r["inside"] for r in want)
+    # unquoted, "lat-1" would parse as the expression lat - 1
+    for bad in ("lat deg", "lat-1", "`lat"):
+        with pytest.raises(ValueError, match="backticks"):
+            membership_expr(ALL_LAYERS, bad, "lng")
+
+
+def test_repeat_refine_build_py4j_round_trips(spark, monkeypatch):
+    # One F.expr parse per native layer; a Column tree built literal by
+    # literal costs a round trip per node: 2,509 for these 8 layers, 357 here.
+    from py4j.clientserver import ClientServerConnection
+
+    membership_expr(ALL_LAYERS, seed=F.col("is_interior"))
+    calls = [0]
+    send = ClientServerConnection.send_command
+    builder = threading.current_thread()
+
+    def counted(self, command, *args, **kwargs):
+        # py4j releases dead JVM references from its own thread, whenever
+        # Python collects them; only the build's calls are counted
+        if threading.current_thread() is builder:
+            calls[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counted)
+        membership_expr(ALL_LAYERS, seed=F.col("is_interior"))
+    assert 0 < calls[0] <= 500, calls[0]
