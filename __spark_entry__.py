@@ -28,13 +28,10 @@ from s2_geometry_library_java_spark.functions.native import (
     GEOTAG_LAT_SQL,
     GEOTAG_LNG_SQL,
     MIN_LONG,
-    biased,
-    face_expr,
+    biased_sql,
+    face_sql,
     haversine_sql,
-    level_expr,
-    parent_expr,
-    range_max_expr,
-    range_min_expr,
+    parent_sql,
 )
 from s2_geometry_library_java_spark.functions.udfs import (
     s2_all_neighbors_udf,
@@ -110,12 +107,10 @@ _LVL_SQL = "(7 + (o_orderkey % 24))"  # levels 7..30
 
 def _pseudo_cells_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    leaf = F.expr(_LEAF_SQL)
-    lvl = F.expr(_LVL_SQL)
-    lsb = F.expr(f"shiftleft(CAST(1 AS BIGINT), 2 * (30 - {_LVL_SQL}))")
-    cid = leaf.bitwiseAND(-lsb).bitwiseOR(lsb)
     return orders.select(
-        F.col("o_orderkey").alias("point_id"), cid.alias("cell_id"), lvl.alias("lvl_in")
+        F.col("o_orderkey").alias("point_id"),
+        F.expr(parent_sql(_LEAF_SQL, _LVL_SQL)).alias("cell_id"),
+        F.expr(_LVL_SQL).alias("lvl_in"),
     )
 
 
@@ -134,7 +129,7 @@ def q_cellid_bitops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kernel (NumPy) level/parent/range/face/contains vs the SQL bit
     formulas (S2CellId.java:231-338) + unsigned Hilbert-order ranking."""
     df = _pseudo_cells_spark(spark, sf_dir)
-    w = Window.orderBy(biased(F.col("cell_id")).asc(), F.col("point_id").asc())
+    w = Window.orderBy(F.expr(biased_sql("cell_id")).asc(), F.col("point_id").asc())
     return df.select(
         "point_id",
         "cell_id",
@@ -316,8 +311,8 @@ def q_encode_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_golden_encode_rollup_sql) plus the S2CellIdTest ports."""
     pts = with_cell_id(geotagged_points(spark, sf_dir))
     return (
-        pts.withColumn("face", face_expr(F.col("cell_id")))
-        .withColumn("tile2", s2_token(parent_expr(F.col("cell_id"), 2)))
+        pts.withColumn("face", F.expr(face_sql("cell_id")))
+        .withColumn("tile2", s2_token(F.expr(parent_sql("cell_id", 2))))
         .rollup("face", "tile2")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("face", "tile2")
@@ -585,7 +580,7 @@ def q_tile_mosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthetic_images(spark, MOSAIC_N_IMAGES, partitions=8), passthrough=("phash",)
     )
     enc = encode_images(stats).withColumn(
-        "tile_id", parent_expr(F.col("cell_id"), MOSAIC_TILE_LEVEL)
+        "tile_id", F.expr(parent_sql("cell_id", MOSAIC_TILE_LEVEL))
     )
     return enc.groupBy("tile_id").agg(
         F.count(F.lit(1)).alias("n_images"),
@@ -2279,7 +2274,7 @@ def q_density_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     9x explode runs on the AGGREGATED grid (|cells| rows), never the fact
     table, so the smear costs two small shuffles regardless of corpus size."""
     pts = with_cell_id(geotagged_points(spark, sf_dir))
-    c = pts.groupBy(parent_expr(F.col("cell_id"), DENSITY_LEVEL).alias("cell4")).agg(
+    c = pts.groupBy(F.expr(parent_sql("cell_id", DENSITY_LEVEL)).alias("cell4")).agg(
         F.count(F.lit(1)).alias("n")
     )
     contrib = c.select(

@@ -6,13 +6,12 @@ drive the engine from plain SQL, not only the DataFrame builders:
 1. **SQL scalar functions** (``CREATE OR REPLACE TEMPORARY FUNCTION ...
    RETURN <expr>``) for the pure bit-arithmetic ops.  Spark inlines the body
    into the calling query at analysis time, so these constant-fold, push
-   down, and execute inside WholeStageCodegen — identical plans and cost to
-   hand-writing the ``native.py`` Column expressions.  The formulas are the
-   bit-exact images of S2CellId.java:231-338 (level/parent/range),
-   S2CellId.java:897-899 (unsigned order via sign-bit flip), and
-   S2LatLng.java:180-205 (haversine; expression tree kept identical to
-   ``native.haversine_expr`` and the DuckDB oracle so all three produce
-   bit-identical doubles).
+   down, and execute inside WholeStageCodegen.  The cell-id, unsigned-order,
+   anchor, geotag and haversine bodies are the very ``native.py`` texts the
+   engine operators parse, so the SQL surface and the operators run one
+   formula each: S2CellId.java:231-338 (level/parent/range),
+   S2CellId.java:897-899 (unsigned order via sign-bit flip) and
+   S2LatLng.java:180-205 (haversine, bit-identical to the NumPy kernel).
 
 2. **Arrow-vectorized pandas UDFs** (``spark.udf.register``) for the trig +
    Hilbert-table kernels SQL cannot express: encode, decode, token codec,
@@ -26,19 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-# shiftleft(1L, 63) == Long.MIN_VALUE: the sign-bit mask written without a
-# -9223372036854775808 literal (whose unary-minus parse overflows).
-_SIGN = "shiftleft(CAST(1 AS BIGINT), 63)"
-
-
-def _rmin(c: str) -> str:
-    return f"({c} - (({c} & -{c}) - 1))"
-
-
-def _rmax(c: str) -> str:
-    return f"({c} + (({c} & -{c}) - 1))"
-
-
+from s2_geometry_library_java_spark.functions import native
 from s2_geometry_library_java_spark.kernel import metrics as _metrics
 
 _MIN_WIDTH_DERIV = _metrics.MIN_WIDTH.deriv  # sqrt(2)/3 (S2Projections quadratic)
@@ -46,81 +33,41 @@ _AVG_AREA_DERIV = _metrics.AVG_AREA.deriv  # pi/6
 
 
 def _sql_scalar_defs() -> list[tuple[str, str]]:
-    from s2_geometry_library_java_spark.functions.native import haversine_sql
-
-    lsb_at = "shiftleft(CAST(1 AS BIGINT), 2 * (30 - level))"
+    # unsigned-order ends of each argument's leaf range
+    lo = {c: native.biased_sql(native.range_min_sql(c)) for c in "ab"}
+    hi = {c: native.biased_sql(native.range_max_sql(c)) for c in "ab"}
     return [
         # --- cell-id bit arithmetic (WholeStageCodegen after inlining) ---
-        (
-            "s2_parent(cell BIGINT, level INT) RETURNS BIGINT",
-            f"(cell & -{lsb_at}) | {lsb_at}",
-        ),
-        ("s2_range_min(cell BIGINT) RETURNS BIGINT", _rmin("cell")),
-        ("s2_range_max(cell BIGINT) RETURNS BIGINT", _rmax("cell")),
-        (
-            "s2_level(cell BIGINT) RETURNS INT",
-            "CAST(30 - round(log2(CAST((cell & -cell) AS DOUBLE)) / 2.0) AS INT)",
-        ),
-        (
-            "s2_face(cell BIGINT) RETURNS INT",
-            "CAST(shiftrightunsigned(cell, 61) AS INT)",
-        ),
-        ("s2_is_leaf(cell BIGINT) RETURNS BOOLEAN", "(cell & 1) = 1"),
+        ("s2_parent(cell BIGINT, level INT) RETURNS BIGINT", native.parent_sql("cell", "level")),
+        ("s2_range_min(cell BIGINT) RETURNS BIGINT", native.range_min_sql("cell")),
+        ("s2_range_max(cell BIGINT) RETURNS BIGINT", native.range_max_sql("cell")),
+        ("s2_level(cell BIGINT) RETURNS INT", native.level_sql("cell")),
+        ("s2_face(cell BIGINT) RETURNS INT", native.face_sql("cell")),
+        ("s2_is_leaf(cell BIGINT) RETURNS BOOLEAN", native.is_leaf_sql("cell")),
         # unsigned-order sort key (flip the sign bit; total order matches
         # the reference's unsignedLongLessThan)
-        ("s2_biased(cell BIGINT) RETURNS BIGINT", f"cell ^ {_SIGN}"),
+        ("s2_biased(cell BIGINT) RETURNS BIGINT", native.biased_sql("cell")),
         (
             "s2_cell_contains(a BIGINT, b BIGINT) RETURNS BOOLEAN",
-            f"(({_rmin('a')} ^ {_SIGN}) <= (b ^ {_SIGN})) AND "
-            f"((b ^ {_SIGN}) <= ({_rmax('a')} ^ {_SIGN}))",
+            native.in_range_sql("b", native.range_min_sql("a"), native.range_max_sql("a")),
         ),
         (
             "s2_cell_intersects(a BIGINT, b BIGINT) RETURNS BOOLEAN",
-            f"(({_rmin('b')} ^ {_SIGN}) <= ({_rmax('a')} ^ {_SIGN})) AND "
-            f"(({_rmin('a')} ^ {_SIGN}) <= ({_rmax('b')} ^ {_SIGN}))",
+            f"({lo['b']} <= {hi['a']}) AND ({lo['a']} <= {hi['b']})",
         ),
         # --- spherical distance & deterministic geotag derivation ---
         (
             "s2_haversine_rad(lat1 DOUBLE, lng1 DOUBLE, lat2 DOUBLE, lng2 DOUBLE) RETURNS DOUBLE",
-            haversine_sql("lat1", "lng1", "lat2", "lng2"),
+            native.haversine_sql("lat1", "lng1", "lat2", "lng2"),
         ),
-        # NOTE: not the shared GEOTAG_*_SQL text — Spark parses bare decimal
-        # literals as DecimalType, which would drag the final division into
-        # decimal arithmetic (one ULP off the double tree the native exprs
-        # and the DuckDB oracle compute).  D-suffixed literals + an explicit
-        # double cast reproduce native.geotag_lat_expr's tree exactly.
-        # FULL 64-BIT KEY DOMAIN: the hash is (key * MULT [+ ADD]) mod 2^32,
-        # computed wrap-free by masking the key to its low 32 bits and
-        # splitting 16/16 (every intermediate < ~1.8e14), so the function is
-        # ANSI-safe and in-range for ANY bigint key — a bare key * 2654435761
-        # would wrap past |key| ~ 3.47e9.  The integer stage is exact, so
-        # results are bit-identical to native.geotag_lat_expr and the DuckDB
-        # oracle for every key.
-        (
-            "s2_geotag_lat(key BIGINT) RETURNS DOUBLE",
-            "-90.0D + 180.0D * (CAST("
-            "(((shiftrightunsigned(key & 4294967295, 16) * 2654435761) & 65535) * 65536"
-            " + (key & 65535) * 2654435761) & 4294967295"
-            " AS DOUBLE) / 4294967296.0D)",
-        ),
-        (
-            "s2_geotag_lng(key BIGINT) RETURNS DOUBLE",
-            "-180.0D + 360.0D * (CAST("
-            "(((shiftrightunsigned(key & 4294967295, 16) * 2246822519) & 65535) * 65536"
-            " + (key & 65535) * 2246822519 + 1013904223) & 4294967295"
-            " AS DOUBLE) / 4294967296.0D)",
-        ),
-        # --- r2 operator helpers, exposed by name (round-3 parity pass) ---
+        # valid over the full 64-bit key domain (wrap-free hash split, see
+        # native._hash32_sql)
+        ("s2_geotag_lat(key BIGINT) RETURNS DOUBLE", native.geotag_lat_sql("key")),
+        ("s2_geotag_lng(key BIGINT) RETURNS DOUBLE", native.geotag_lng_sql("key")),
         # phash -> anchor lat/lng (FIXTURES.md F1, the images-pipeline
         # geotag derivation; bit slicing, valid over the full 64-bit domain)
-        (
-            "s2_anchor_lat(phash BIGINT) RETURNS DOUBLE",
-            "-90.0D + 180.0D * (CAST(shiftrightunsigned(phash, 32) AS DOUBLE) / 4294967296.0D)",
-        ),
-        (
-            "s2_anchor_lng(phash BIGINT) RETURNS DOUBLE",
-            "-180.0D + 360.0D * (CAST(phash & 4294967295 AS DOUBLE) / 4294967296.0D)",
-        ),
+        ("s2_anchor_lat(phash BIGINT) RETURNS DOUBLE", native.anchor_lat_sql("phash")),
+        ("s2_anchor_lng(phash BIGINT) RETURNS DOUBLE", native.anchor_lng_sql("phash")),
         # the radius-join bucket level: MIN_WIDTH.get_max_level(2r) capped at
         # 29 (operators/knn.py).  The kernel takes frexp(q)'s exponent of
         # the rounded quotient q = deriv/r (S2.java:206-218); libm LOG2 can

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from s2_geometry_library_java_spark.functions.native import parent_expr
+from s2_geometry_library_java_spark.functions.native import col_ref, parent_sql
 
 
 def adaptive_tiles(
@@ -54,7 +54,7 @@ def adaptive_tiles(
     if not 0 <= min_level <= max_level <= 30:
         raise ValueError(f"bad level range [{min_level}, {max_level}]")
     base = (
-        points.groupBy(parent_expr(F.col(cell_col), max_level).alias("cell"))
+        points.groupBy(F.expr(parent_sql(col_ref(cell_col), max_level)).alias("cell"))
         .agg(F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
@@ -64,7 +64,7 @@ def adaptive_tiles(
     for lvl in range(max_level - 1, min_level - 1, -1):
         counts[lvl] = (
             counts[lvl + 1]
-            .groupBy(parent_expr(F.col("cell"), lvl).alias("cell"))
+            .groupBy(F.expr(parent_sql("cell", lvl)).alias("cell"))
             .agg(F.sum("n").alias("n"))
         )
 
@@ -81,7 +81,7 @@ def adaptive_tiles(
         )
         lvl_tiles = (
             counts[lvl]
-            .withColumn("pcell", parent_expr(F.col("cell"), lvl - 1))
+            .withColumn("pcell", F.expr(parent_sql("cell", lvl - 1)))
             .join(F.broadcast(hot), "pcell")
             .filter((F.col("n") <= cap) | F.lit(lvl == max_level))
             .select(

@@ -37,9 +37,9 @@ from pyspark.sql import functions as F
 from s2_geometry_library_java_spark.functions.native import (
     GEOTAG_LAT_SQL,
     GEOTAG_LNG_SQL,
-    geotag_lat_expr,
-    geotag_lng_expr,
-    xyz_exprs,
+    col_ref,
+    geotag_lat_sql,
+    geotag_lng_sql,
     xyz_sql,
 )
 
@@ -66,8 +66,8 @@ def bounding_caps(
     real deployments replace the two geotag expressions with their
     lat/lng columns.
     """
-    lat, lng = geotag_lat_expr(F.col(key_col)), geotag_lng_expr(F.col(key_col))
-    x, y, z = xyz_exprs(lat, lng)
+    key = col_ref(key_col)
+    x, y, z = (F.expr(e) for e in xyz_sql(geotag_lat_sql(key), geotag_lng_sql(key)))
     pts = events.select(
         F.col(group_col),
         x.alias("x"),

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, IntegerType, LongType
 
-from s2_geometry_library_java_spark.functions.native import ancestors_expr
+from s2_geometry_library_java_spark.functions.native import ancestors_sql
 from s2_geometry_library_java_spark.kernel import cellid as ck
 from s2_geometry_library_java_spark.kernel import metrics
 from s2_geometry_library_java_spark.kernel import predicates as pr
@@ -179,10 +179,10 @@ def crossing_candidates(edges: DataFrame, id_col: str = "edge_id",
         F.col(id_col).alias("id_q_"), F.col("cell").alias("qcell")
     )
     # query cell equal-or-descendant of build cell: explode query ancestors
-    anc_q = query.withColumn("_anc", F.explode(ancestors_expr(F.col("qcell"), levels)))
+    anc_q = query.withColumn("_anc", F.explode(F.expr(ancestors_sql("qcell", levels))))
     pairs1 = anc_q.join(build, anc_q["_anc"] == build["bcell"]).select("id_b_", "id_q_")
     # build cell strict descendant of query cell
-    anc_b = build.withColumn("_anc", F.explode(ancestors_expr(F.col("bcell"), levels)))
+    anc_b = build.withColumn("_anc", F.explode(F.expr(ancestors_sql("bcell", levels))))
     pairs2 = anc_b.join(query, anc_b["_anc"] == query["qcell"]).select("id_b_", "id_q_")
     pairs = pairs1.unionByName(pairs2).filter(F.col("id_b_") != F.col("id_q_"))
     return pairs.select(

@@ -65,10 +65,7 @@ from pyspark.sql import functions as F
 
 from s2_geometry_library_java_spark.kernel import cellid
 
-from s2_geometry_library_java_spark.functions.native import (
-    haversine_expr,
-    parent_expr,
-)
+from s2_geometry_library_java_spark.functions.native import col_ref, haversine_sql, in_set_sql, parent_sql
 from s2_geometry_library_java_spark.functions.udfs import s2_all_neighbors_udf
 from s2_geometry_library_java_spark.kernel import metrics
 from s2_geometry_library_java_spark.operators.dedup import spread
@@ -77,8 +74,8 @@ from s2_geometry_library_java_spark.operators.dedup import spread
 # candidate join degrades gracefully to a shuffled equi-join on the bucket
 RING_BROADCAST_MAX = 2_000_000
 
-# hot-only salting keeps the hot-bucket set driver-side (an IN-set literal,
-# the pip PREFIX_IN_FILTER_MAX lesson): |hot| <= n_rows/salt_threshold by
+# hot-only salting keeps the hot-bucket set driver-side (one parsed IN-set
+# text, the pip PREFIX_IN_FILTER_MAX lesson): |hot| <= n_rows/salt_threshold by
 # definition, and the cap guards the adversarial corpus where the caller's
 # threshold admits too many
 SALT_HOT_BUCKET_MAX = 4096
@@ -148,7 +145,7 @@ def geo_neardup_pairs(
     # the compacted-small-input case (one row group -> one core) and no-ops
     # on a well-partitioned corpus
     points = spread(points)
-    bkt = parent_expr(F.col(cell_col), level)
+    bkt = F.expr(parent_sql(col_ref(cell_col), level))
     left = points.select(
         F.col(id_col).alias("id_l"),
         F.col(lat_col).alias("lat_l"),
@@ -207,9 +204,7 @@ def geo_neardup_pairs(
     def _pairs(l_: DataFrame, ring_: DataFrame, r_: DataFrame, ring_bound: int) -> DataFrame:
         if 9 * ring_bound <= RING_BROADCAST_MAX:
             ring_ = F.broadcast(ring_)
-        dist = haversine_expr(
-            F.col("lat_l"), F.col("lng_l"), F.col("lat_r"), F.col("lng_r")
-        )
+        dist = F.expr(haversine_sql("lat_l", "lng_l", "lat_r", "lng_r"))
         ham = F.bit_count(F.col("h_l").bitwiseXOR(F.col("h_r")))
         # the radius test compares the RAW double (the completeness proof is
         # in true distance; rounding first would admit pairs epsilon past the
@@ -269,21 +264,25 @@ def geo_neardup_pairs(
         # replica with salt class 0, and the cold plan shape is unchanged.
         all_classes = F.array(*[F.lit(c) for c in range(salt)])
         one_class = F.array(F.lit(0))
+        is_hot = F.expr(in_set_sql("bucket", hot))
         left = left.withColumn(
             "bucket",
             F.when(
-                F.col("bucket").isin(hot),
+                is_hot,
                 F.col("bucket").bitwiseOR(F.pmod(F.xxhash64(F.col("id_l")), F.lit(salt))),
             ).otherwise(F.col("bucket")),
         )
         ring = ring.withColumn(
-            "_c", F.explode(F.when(F.col("bucket").isin(hot), all_classes).otherwise(one_class))
+            "_c", F.explode(F.when(is_hot, all_classes).otherwise(one_class))
         ).select(
             F.col("bucket").bitwiseOR(F.col("_c")).alias("bucket"),
             F.col("probe").bitwiseOR(F.col("_c")).alias("probe"),
         )
         right = right.withColumn(
-            "_c", F.explode(F.when(F.col("probe").isin(probe_hot), all_classes).otherwise(one_class))
+            "_c",
+            F.explode(
+                F.when(F.expr(in_set_sql("probe", probe_hot)), all_classes).otherwise(one_class)
+            ),
         ).select(
             "id_r",
             "lat_r",

@@ -47,7 +47,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from s2_geometry_library_java_spark.functions.native import haversine_expr, parent_expr
+from s2_geometry_library_java_spark.functions.native import col_ref, haversine_sql, parent_sql
 from s2_geometry_library_java_spark.functions.udfs import s2_vertex_neighbors_udf
 from s2_geometry_library_java_spark.kernel import cellid as ck
 from s2_geometry_library_java_spark.kernel import metrics
@@ -102,9 +102,9 @@ def radius_join(
     )
     if broadcast_queries:
         q_probe = F.broadcast(q_probe)
-    dist = haversine_expr(F.col("qlat"), F.col("qlng"), F.col(lat_col), F.col(lng_col))
+    dist = F.expr(haversine_sql("qlat", "qlng", col_ref(lat_col), col_ref(lng_col)))
     return (
-        pts.withColumn("_bucket", parent_expr(F.col("cell_id"), level))
+        pts.withColumn("_bucket", F.expr(parent_sql("cell_id", level)))
         .join(q_probe, "_bucket")
         .drop("_bucket")
         .withColumn("dist", dist)
@@ -227,9 +227,9 @@ def knn_join(
         F.explode(s2_vertex_neighbors_udf(F.col("_qcell"), F.lit(level))),
     ).drop("_qcell")
 
-    dist = haversine_expr(F.col("qlat"), F.col("qlng"), F.col(lat_col), F.col(lng_col))
+    dist = F.expr(haversine_sql("qlat", "qlng", col_ref(lat_col), col_ref(lng_col)))
     cand = (
-        pts.withColumn("_bucket", parent_expr(F.col("cell_id"), level))
+        pts.withColumn("_bucket", F.expr(parent_sql("cell_id", level)))
         .join(F.broadcast(q_probe), "_bucket")
         .drop("_bucket")
         .withColumn("dist", dist)
@@ -284,7 +284,7 @@ def knn_join(
             .drop("_qcell")
         )
         cand2 = (
-            pts.withColumn("_bucket", parent_expr(F.col("cell_id"), level2))
+            pts.withColumn("_bucket", F.expr(parent_sql("cell_id", level2)))
             .join(F.broadcast(q2_probe), "_bucket")
             .drop("_bucket")
             .withColumn("dist", dist)

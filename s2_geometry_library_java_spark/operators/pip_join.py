@@ -54,8 +54,6 @@ emits no duplicates by construction.
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -63,7 +61,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, IntegerType, LongType, StructField, StructType
 
-from s2_geometry_library_java_spark.functions.native import biased, parent_expr
+from s2_geometry_library_java_spark.functions.native import (
+    COLUMN_REF,
+    col_ref,
+    in_range_sql,
+    in_set_sql,
+    parent_sql,
+    sql_string,
+)
 from s2_geometry_library_java_spark.functions.udfs import _s2_cell_id_once
 from s2_geometry_library_java_spark.operators.covering import COVERING_SCHEMA, JOIN_COVERING, covering_rows
 from s2_geometry_library_java_spark.operators.layers import Layer
@@ -102,13 +107,8 @@ def assign_candidates(
         F.col("range_max").alias("_rmax"),
         F.col("is_interior"),
     )
-    b = biased(F.col(cell_col))
-    out = points.join(
-        F.broadcast(cells),
-        (b >= biased(F.col("_rmin"))) & (b <= biased(F.col("_rmax"))),
-        "inner",
-    )
-    return out.drop("_rmin", "_rmax")
+    cond = F.expr(in_range_sql(col_ref(cell_col), "_rmin", "_rmax"))
+    return points.join(F.broadcast(cells), cond, "inner").drop("_rmin", "_rmax")
 
 
 _U64_BIAS = np.uint64(1) << np.uint64(63)
@@ -313,9 +313,10 @@ def _prefix_join(
     bits; the covering side is replicated once per salt value to match, and
     the key stays a single radix-sortable BIGINT (a compound (key, salt)
     key measured 2-3x slower on the r4 104M-row probe sort)."""
-    pts = points.withColumn("_pfx", parent_expr(F.col(cell_col), prefix_level))
+    cell = col_ref(cell_col)
+    pts = points.withColumn("_pfx", F.expr(parent_sql(cell, prefix_level)))
     if not isinstance(prune, str):
-        pts = pts.filter(F.col("_pfx").isin(prune))
+        pts = pts.filter(F.expr(in_set_sql("_pfx", prune)))
     elif prune == "semi":
         pts = pts.join(F.broadcast(pref.select("_pfx").distinct()), "_pfx", "left_semi")
     else:
@@ -332,14 +333,11 @@ def _prefix_join(
         key = key.bitwiseOR(F.pmod(F.xxhash64(F.col(cell_col)), F.lit(salt)))
     pts = pts.withColumn("_pkey", key)
     cover = pref.withColumnRenamed("_pfx", "_ckey")
-    b = biased(pts[cell_col])
     # hash, not the default sort-merge: sorting a fact-sized probe side
     # spilled and dominated the r4 128M leg (>600 s per rep vs 177.7 s)
     out = pts.join(
         cover.hint("shuffle_hash"),
-        (pts["_pkey"] == cover["_ckey"])
-        & (b >= biased(cover["_rmin"]))
-        & (b <= biased(cover["_rmax"])),
+        F.expr(f"_pkey = _ckey AND {in_range_sql(cell, '_rmin', '_rmax')}"),
         "inner",
     )
     return out.drop("_pfx", "_pkey", "_ckey", "_rmin", "_rmax")
@@ -398,17 +396,15 @@ def prefix_cover_frame(cover: DataFrame, prefix_level: int) -> DataFrame:
     ``(_pfx, polygon_id, _rmin, _rmax, is_interior)``."""
     _validate_prefix_level(prefix_level)
     lsb_a = 1 << (2 * (30 - prefix_level))
-    cid = F.col("cell_id")
-    lsb = cid.bitwiseAND(-cid)
-    ancestor = F.array(cid.bitwiseAND(F.lit(-lsb_a)).bitwiseOR(F.lit(lsb_a)))
-    siblings = F.sequence(
-        cid - lsb + F.lit(lsb_a), cid + lsb - F.lit(lsb_a), F.lit(2 * lsb_a)
-    )
+    lsb = "(cell_id & -cell_id)"
     # CaseWhen codegen evaluates only the taken branch, so the sequence's
     # first>last case never executes for deeper-than-A cells
-    pfx = F.when(lsb <= F.lit(lsb_a), ancestor).otherwise(siblings)
+    pfx = (
+        f"CASE WHEN {lsb} <= {lsb_a} THEN array({parent_sql('cell_id', prefix_level)}) "
+        f"ELSE sequence(cell_id - {lsb} + {lsb_a}, cell_id + {lsb} - {lsb_a}, {2 * lsb_a}) END"
+    )
     return cover.select(
-        F.explode(pfx).alias("_pfx"),
+        F.explode(F.expr(pfx)).alias("_pfx"),
         F.col("polygon_id"),
         F.col("range_min").alias("_rmin"),
         F.col("range_max").alias("_rmax"),
@@ -561,12 +557,6 @@ def prefix_candidates_df(
     return _prefix_join(points, pref, cell_col, prefix_level, salt, prune)
 
 
-# A column reference both F.col and F.expr read the same way: dotted parts,
-# each a plain identifier or backtick-quoted (`` escapes a backtick).
-_PART = r"(?:[A-Za-z_][A-Za-z0-9_]*|`(?:[^`]|``)+`)"
-_COLUMN_REF = re.compile(rf"{_PART}(?:\.{_PART})*")
-
-
 def membership_expr(
     layers: list[Layer],
     lat_col: str = "lat",
@@ -577,7 +567,8 @@ def membership_expr(
     named by the row's ``polygon_id``?
 
     Single-pass: one predicate combining the native rect/cap tests
-    (codegen'd CASE chain of ``Layer.sql_predicate``) with one vectorized
+    (one codegen'd CASE over ``polygon_id`` whose arms are the layers'
+    ``Layer.sql_predicate`` texts, parsed by one ``F.expr``) with one vectorized
     parity-kernel pandas UDF for loop/polygon layers — the source is
     scanned exactly once regardless of the layer mix (no union of per-kind
     branches).  ``lat_col``/``lng_col`` are SQL column references
@@ -585,20 +576,19 @@ def membership_expr(
     already-decided-true Column (e.g. interior-covering-cell membership);
     rows where it holds skip both the CASE chain and the parity sweep."""
     for c in (lat_col, lng_col):
-        if not _COLUMN_REF.fullmatch(c):
+        if not COLUMN_REF.fullmatch(c):
             raise ValueError(f"column reference {c!r} is not a SQL identifier; quote it with backticks")
     native = [l for l in layers if l.native]
     kernel_layers = [l for l in layers if not l.native]
 
     cond: Column = seed if seed is not None else F.lit(False)
     if native:
-        pred: Column = F.lit(False)
-        for layer in native:
-            pred = F.when(
-                F.col("polygon_id") == F.lit(layer.polygon_id),
-                F.expr(layer.sql_predicate(lat_col, lng_col)),
-            ).otherwise(pred)
-        cond = cond | pred
+        # last layer first: a repeated polygon_id refines by its last layer
+        arms = " ".join(
+            f"WHEN polygon_id = {sql_string(l.polygon_id)} THEN {l.sql_predicate(lat_col, lng_col)}"
+            for l in reversed(native)
+        )
+        cond = cond | F.expr(f"CASE {arms} ELSE false END")
 
     if kernel_layers:
         by_id = {l.polygon_id: l for l in kernel_layers}

@@ -125,7 +125,7 @@ def shard_by_token_budget(
         key_col,
         "bucket",
         "n_tokens",
-        F.floor(F.col("_o") / F.lit(int(budget_tokens))).cast("long").alias("shard"),
+        F.expr(f"_o DIV {int(budget_tokens)}").alias("shard"),
     )
 
 
@@ -193,8 +193,8 @@ def shard_oracle_sql(
     return (
         f"SELECT {key_col}, CAST({bucket} AS INTEGER) AS bucket, "
         f"CAST({toks} AS BIGINT) AS n_tokens, "
-        f"CAST(FLOOR(COALESCE(SUM({toks}) OVER (ORDER BY {bucket}, {key_col} "
-        f"ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / {budget_tokens}) AS BIGINT) AS shard "
+        f"CAST(COALESCE(SUM({toks}) OVER (ORDER BY {bucket}, {key_col} "
+        f"ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // {budget_tokens} AS BIGINT) AS shard "
         f"FROM {table}"
     )
 
@@ -227,14 +227,16 @@ def pack_concat_slices(
     sum (bounded n_buckets-row collect for exclusive bucket offsets,
     per-bucket window for the intra-bucket cumsum) — the
     single-global-window formulation the DuckDB oracle runs would
-    serialize 10^12 rows through one partition."""
+    serialize 10^12 rows through one partition.  Sequence ids are integer
+    division (``DIV``; offsets are non-negative, so it is floor), exact past
+    the 2^53 tokens where a double quotient rounds."""
     c = int(context_len)
     return global_token_offsets(docs, key_col, text_col, n_buckets).select(
         key_col,
         "bucket",
         "n_tokens",
-        F.floor(F.col("_o") / F.lit(c)).cast("long").alias("start_seq"),
-        F.floor((F.col("_o") + F.col("n_tokens") - 1) / F.lit(c)).cast("long").alias("end_seq"),
+        F.expr(f"_o DIV {c}").alias("start_seq"),
+        F.expr(f"(_o + n_tokens - 1) DIV {c}").alias("end_seq"),
         (F.col("_o") % F.lit(c)).cast("long").alias("offset_in_seq"),
     )
 
@@ -257,8 +259,8 @@ def pack_oracle_sql(
     return (
         f"SELECT {key_col}, CAST({bucket} AS INTEGER) AS bucket, "
         f"CAST({toks} AS BIGINT) AS n_tokens, "
-        f"CAST(FLOOR({o} / {context_len}) AS BIGINT) AS start_seq, "
-        f"CAST(FLOOR(({o} + {toks} - 1) / {context_len}) AS BIGINT) AS end_seq, "
+        f"CAST({o} // {context_len} AS BIGINT) AS start_seq, "
+        f"CAST(({o} + {toks} - 1) // {context_len} AS BIGINT) AS end_seq, "
         f"CAST({o} % {context_len} AS BIGINT) AS offset_in_seq "
         f"FROM {table}"
     )
@@ -363,7 +365,7 @@ def materialize_sequences(
     )
     c = int(context_len)
     return (
-        toks.groupBy(F.floor(F.col("_gpos") / F.lit(c)).cast("long").alias("seq_id"))
+        toks.groupBy(F.expr(f"_gpos DIV {c}").alias("seq_id"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_tokens"),
             F.countDistinct(key_col).cast("long").alias("n_docs"),
@@ -399,7 +401,7 @@ WITH base AS (
 ), tok AS (
   SELECT {key_col}, doc_off + unnest(range(len(toks))) AS gpos, unnest(toks) AS tok FROM o
 )
-SELECT CAST(FLOOR(gpos / {context_len}) AS BIGINT) AS seq_id,
+SELECT CAST(gpos // {context_len} AS BIGINT) AS seq_id,
        CAST(COUNT(*) AS BIGINT) AS n_tokens,
        CAST(COUNT(DISTINCT {key_col}) AS BIGINT) AS n_docs,
        string_agg(tok, ' ' ORDER BY gpos) AS text

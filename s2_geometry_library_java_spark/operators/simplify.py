@@ -23,7 +23,7 @@ Scale shape (the 100-TB plan):
 
 ``key_col`` feeds the synthetic geotag hash (valid over the full
 64-bit key domain since the round-4 wrap-free rewrite of
-``geotag_lat_expr``); real deployments replace the geotag expressions
+``geotag_lat_sql``); real deployments replace the geotag expressions
 with their lat/lng columns.
 """
 
@@ -34,10 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from s2_geometry_library_java_spark.functions.native import (
-    geotag_lat_expr,
-    geotag_lng_expr,
-)
+from s2_geometry_library_java_spark.functions.native import col_ref, geotag_lat_sql, geotag_lng_sql
 from s2_geometry_library_java_spark.kernel import cellid as ck
 from s2_geometry_library_java_spark.kernel import predicates as pr
 
@@ -114,8 +111,8 @@ def simplify_trajectories(
         F.col(user_col),
         F.col(ts_col),
         F.col(key_col),
-        geotag_lat_expr(F.col(key_col)).alias("lat"),
-        geotag_lng_expr(F.col(key_col)).alias("lng"),
+        F.expr(geotag_lat_sql(col_ref(key_col))).alias("lat"),
+        F.expr(geotag_lng_sql(col_ref(key_col))).alias("lng"),
     )
     # ONE shuffle, same as groupBy().applyInPandas — but mapInPandas over
     # user-clustered, (user, ts, key)-sorted partitions lets EVERY trace in

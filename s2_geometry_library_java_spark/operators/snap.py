@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from s2_geometry_library_java_spark.functions.native import parent_expr
+from s2_geometry_library_java_spark.functions.native import col_ref, parent_sql
 from s2_geometry_library_java_spark.geometry.coverer import S2RegionCoverer
 from s2_geometry_library_java_spark.geometry.polyline import S2Polyline
 from s2_geometry_library_java_spark.kernel import cellid as ck
@@ -87,7 +87,7 @@ def snap_join(
         )
     level, rows = snap_candidate_cells(lines, radius_rad)
     cand = F.broadcast(spark.createDataFrame(rows, "bucket long, line_id string"))
-    pairs = points.withColumn("bucket", parent_expr(F.col(cell_col), level)).join(
+    pairs = points.withColumn("bucket", F.expr(parent_sql(col_ref(cell_col), level))).join(
         cand, "bucket"
     )
     sel = pairs.select(id_col, lat_col, lng_col, "line_id")

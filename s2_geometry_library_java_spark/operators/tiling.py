@@ -4,7 +4,7 @@ per-partition lineage and checkpointed, idempotent resume.
 - tile assignment is the C5 denormalize bit formula (S2CellId.parent,
   S2CellId.java:334-338) as a native column expression — fixed-level tile id
   straight from the leaf cell id, no Python, no shuffle — and the tile token
-  is the codegen'd ``token_expr`` (S2CellId.toToken), so tiles, the manifest
+  is the codegen'd ``token_sql`` (S2CellId.toToken), so tiles, the manifest
   aggregate and its ordering run without a Python hop;
 - the manifest writer partitions output by a tile bucket and commits buckets
   through a ledger file, so a killed job resumes at the last committed bucket
@@ -22,14 +22,14 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from s2_geometry_library_java_spark.functions.native import parent_expr, token_expr
+from s2_geometry_library_java_spark.functions.native import col_ref, parent_sql, token_sql
 
 DEFAULT_TILE_LEVEL = 7
 
 
 def assign_tiles(df: DataFrame, tile_level: int = DEFAULT_TILE_LEVEL, cell_col: str = "cell_id") -> DataFrame:
-    tile = parent_expr(F.col(cell_col), tile_level)
-    return df.withColumn("tile_id", tile).withColumn("tile_token", token_expr(tile))
+    tile = parent_sql(col_ref(cell_col), tile_level)
+    return df.withColumn("tile_id", F.expr(tile)).withColumn("tile_token", F.expr(token_sql(tile)))
 
 
 def tile_manifest(matches: DataFrame, tile_level: int = DEFAULT_TILE_LEVEL, cell_col: str = "cell_id") -> DataFrame:
@@ -39,7 +39,7 @@ def tile_manifest(matches: DataFrame, tile_level: int = DEFAULT_TILE_LEVEL, cell
     does partial+final aggregation), then the native token and the sort —
     sorting by tile keeps Hilbert locality in the output files.
     """
-    tile = parent_expr(F.col(cell_col), tile_level)
+    tile = F.expr(parent_sql(col_ref(cell_col), tile_level))
     # Aggregate on the BIGINT tile id first and tokenize only the aggregated
     # rows (tiles x polygons): string building stays off the fact path.
     return (
@@ -50,7 +50,7 @@ def tile_manifest(matches: DataFrame, tile_level: int = DEFAULT_TILE_LEVEL, cell
             F.min(cell_col).alias("min_cell"),
             F.max(cell_col).alias("max_cell"),
         )
-        .withColumn("tile_token", token_expr(F.col("tile_id")))
+        .withColumn("tile_token", F.expr(token_sql("tile_id")))
         .drop("tile_id")
         .select("tile_token", "polygon_id", "n_images", "min_cell", "max_cell")
         .orderBy("tile_token", "polygon_id")

@@ -22,15 +22,15 @@ Scale notes (the 100-TB plan):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from s2_geometry_library_java_spark.functions.native import (
     GEOTAG_LAT_SQL,
     GEOTAG_LNG_SQL,
-    geotag_lat_expr,
-    geotag_lng_expr,
-    haversine_expr,
+    col_ref,
+    geotag_lat_sql,
+    geotag_lng_sql,
     haversine_sql,
 )
 from s2_geometry_library_java_spark.kernel import metrics
@@ -62,14 +62,16 @@ def trajectory_stats(
     |key| must stay below ~3.47e9 (see s2_geotag_lat); real deployments
     replace the two geotag expressions with their lat/lng columns.
     """
-    lat, lng = geotag_lat_expr(F.col(key_col)), geotag_lng_expr(F.col(key_col))
+    key = col_ref(key_col)
+    lat, lng = F.expr(geotag_lat_sql(key)), F.expr(geotag_lng_sql(key))
     pts = events.select(F.col(user_col), F.col(ts_col), F.col(key_col), lat.alias("lat"), lng.alias("lng"))
     w = Window.partitionBy(user_col).orderBy(ts_col, key_col)
-    step: Column = haversine_expr(
-        F.lag("lat").over(w), F.lag("lng").over(w), F.col("lat"), F.col("lng")
+    lagged = pts.select(
+        F.col(user_col), "lat", "lng", F.lag("lat").over(w).alias("plat"), F.lag("lng").over(w).alias("plng")
     )
+    step = F.expr(haversine_sql("plat", "plng", "lat", "lng"))
     thresh = long_step_threshold_rad(long_step_level)
-    stepped = pts.select(
+    stepped = lagged.select(
         F.col(user_col),
         F.round(step * F.lit(1e9)).cast("bigint").alias("step_nrad"),
         (step > F.lit(thresh)).cast("int").alias("is_long"),

@@ -21,6 +21,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from s2_geometry_library_java_spark.functions.native import anchor_lat_sql, anchor_lng_sql
 from s2_geometry_library_java_spark.operators.layers import Layer
 from s2_geometry_library_java_spark.operators.pip_join import pip_join
 from s2_geometry_library_java_spark.operators.tiling import run_tiled_write, tile_manifest
@@ -42,16 +43,12 @@ def encode_images(images: DataFrame) -> DataFrame:
     """
     from s2_geometry_library_java_spark.functions.udfs import _s2_cell_id_from_phash_once
 
-    upper = F.shiftrightunsigned(F.col("phash"), 32).cast("double")
-    lower = F.col("phash").bitwiseAND(F.lit(0xFFFFFFFF)).cast("double")
-    lat = F.lit(-90.0) + F.lit(180.0) * (upper / F.lit(4294967296.0))
-    lng = F.lit(-180.0) + F.lit(360.0) * (lower / F.lit(4294967296.0))
     return (
         images.withColumn(
             "cell_id", F.coalesce(_s2_cell_id_from_phash_once(F.col("phash")), F.lit(0))
         )
-        .withColumn("lat", lat)
-        .withColumn("lng", lng)
+        .withColumn("lat", F.expr(anchor_lat_sql("phash")))
+        .withColumn("lng", F.expr(anchor_lng_sql("phash")))
     )
 
 

@@ -3,7 +3,7 @@
 The driver's correctness gate runs over the pre-registered TPC-H-ish parquet
 tables, so every geospatial query derives its lat/lng *inside the query* from
 a key column with pure integer arithmetic — identical in Spark
-(``geotag_lat_expr``) and in the DuckDB oracle (``GEOTAG_LAT_SQL``).  At
+(``geotag_lat_sql``) and in the DuckDB oracle (``GEOTAG_LAT_SQL``).  At
 production scale the same code path reads the Iceberg ``images`` table and
 uses the phash-derived anchor instead (sources/images.py).
 """
@@ -15,7 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from s2_geometry_library_java_spark.functions.native import geotag_lat_expr, geotag_lng_expr
+from s2_geometry_library_java_spark.functions.native import geotag_lat_sql, geotag_lng_sql
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -43,8 +43,8 @@ def geotagged_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return orders.select(
         F.col("o_orderkey").alias("point_id"),
-        geotag_lat_expr(F.col("o_orderkey")).alias("lat"),
-        geotag_lng_expr(F.col("o_orderkey")).alias("lng"),
+        F.expr(geotag_lat_sql("o_orderkey")).alias("lat"),
+        F.expr(geotag_lng_sql("o_orderkey")).alias("lng"),
     )
 
 
@@ -54,13 +54,13 @@ def geotagged_queries(spark: SparkSession, sf_dir: str, limit: int = 16) -> Data
     Key is offset so query points don't coincide with fact points.
     """
     customer = load_table(spark, sf_dir, "customer")
-    key = F.col("c_custkey") + F.lit(1_000_000_007)
+    key = "(c_custkey + 1000000007)"
     return (
         customer.filter(F.col("c_custkey") <= limit)
         .select(
             F.col("c_custkey").alias("query_id"),
-            geotag_lat_expr(key).alias("qlat"),
-            geotag_lng_expr(key).alias("qlng"),
+            F.expr(geotag_lat_sql(key)).alias("qlat"),
+            F.expr(geotag_lng_sql(key)).alias("qlng"),
         )
     )
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from s2_geometry_library_java_spark.functions.native import geotag_lat_expr, geotag_lng_expr, parent_expr
+from s2_geometry_library_java_spark.functions.native import geotag_lat_sql, geotag_lng_sql, parent_sql
 from s2_geometry_library_java_spark.functions.udfs import s2_cell_id
 
 
@@ -25,10 +25,10 @@ def streaming_tile_counts(
     """ts/key stream -> per-(event window, tile) image counts with late-data
     handling via watermark; state is bounded by the watermark horizon."""
     encoded = (
-        stream.withColumn("lat", geotag_lat_expr(F.col("key")))
-        .withColumn("lng", geotag_lng_expr(F.col("key")))
+        stream.withColumn("lat", F.expr(geotag_lat_sql("key")))
+        .withColumn("lng", F.expr(geotag_lng_sql("key")))
         .withColumn("cell_id", s2_cell_id(F.col("lat"), F.col("lng")))
-        .withColumn("tile_id", parent_expr(F.col("cell_id"), tile_level))
+        .withColumn("tile_id", F.expr(parent_sql("cell_id", tile_level)))
     )
     return (
         encoded.withWatermark("ts", watermark)

@@ -27,7 +27,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from s2_geometry_library_java_spark.functions.native import geotag_lat_expr, geotag_lng_expr
+from s2_geometry_library_java_spark.functions.native import geotag_lat_sql, geotag_lng_sql
 from s2_geometry_library_java_spark.operators.layers import Layer
 
 
@@ -44,8 +44,8 @@ def streaming_geofence_counts(
     fences count once per fence; events inside none are dropped before
     the shuffle.
     """
-    tagged = stream.withColumn("lat", geotag_lat_expr(F.col("key"))).withColumn(
-        "lng", geotag_lng_expr(F.col("key"))
+    tagged = stream.withColumn("lat", F.expr(geotag_lat_sql("key"))).withColumn(
+        "lng", F.expr(geotag_lng_sql("key"))
     )
     arms = []
     for layer in layers:

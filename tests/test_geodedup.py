@@ -198,3 +198,22 @@ def test_hot_only_salt_requires_salt(spark, pts):
     df, _, _, _ = pts
     with pytest.raises(ValueError, match="salt_threshold requires salt"):
         geo_neardup_pairs(df, RADIUS, MAX_HAM, salt_threshold=10)
+
+
+def test_hot_set_in_sql_is_one_parse(spark, py4j_round_trips):
+    """The hot-bucket tests are one parsed ``IN (...)`` text: a few py4j
+    round trips for 5,000 ids where ``Column.isin`` makes one or more per
+    id, planned as an INSET, keeping the rows isin keeps."""
+    from s2_geometry_library_java_spark.functions.native import in_set_sql
+
+    hot = [(-1) ** i * (i * 1_000_003 + (1 << 40)) for i in range(5000)] + [-(1 << 63)]
+    probe = spark.range(12000).select(
+        F.expr("(CASE WHEN id % 2 = 0 THEN 1 ELSE -1 END) * (id * 1000003 + 1099511627776)").alias("bucket")
+    )
+    with py4j_round_trips() as calls:
+        kept = probe.filter(F.expr(in_set_sql("bucket", hot)))
+    assert 0 < calls[0] <= 10, calls[0]
+    assert "INSET" in kept._jdf.queryExecution().optimizedPlan().toString()
+    rows = sorted(r["bucket"] for r in kept.collect())
+    assert len(rows) == 5000
+    assert rows == sorted(r["bucket"] for r in probe.filter(F.col("bucket").isin(hot)).collect())

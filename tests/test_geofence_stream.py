@@ -36,10 +36,10 @@ def test_plan_has_no_join_and_matches_batch_filters(spark):
     for op in ("Join", "CartesianProduct", "BatchEvalPython"):
         assert op not in plan, plan
     got = {(r.polygon_id, r.n) for r in agg.groupBy("polygon_id").agg(F.sum("n").alias("n")).collect()}
-    from s2_geometry_library_java_spark.functions.native import geotag_lat_expr, geotag_lng_expr
+    from s2_geometry_library_java_spark.functions.native import geotag_lat_sql, geotag_lng_sql
 
     pdf = _batch_input(spark).select(
-        geotag_lat_expr(F.col("key")).alias("lat"), geotag_lng_expr(F.col("key")).alias("lng")
+        F.expr(geotag_lat_sql("key")).alias("lat"), F.expr(geotag_lng_sql("key")).alias("lng")
     ).toPandas()
     want = set()
     for fence in FENCES:

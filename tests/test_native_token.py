@@ -1,4 +1,4 @@
-"""``token_expr`` — the codegen S2CellId.toToken — against the NumPy token
+"""``token_sql`` — the codegen S2CellId.toToken — against the NumPy token
 kernel: bit-exact strings on the edge ids and on 10^5 random valid ids, and
 a lossless round trip through the ``s2_from_token`` decoder."""
 
@@ -6,14 +6,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from s2_geometry_library_java_spark.functions.native import token_expr
+from s2_geometry_library_java_spark.functions.native import token_sql
 from s2_geometry_library_java_spark.functions.udfs import s2_from_token
 from s2_geometry_library_java_spark.kernel import cellid as ck
 
 
 def _tokens(spark, ids: np.ndarray) -> pd.DataFrame:
     pdf = pd.DataFrame({"rid": np.arange(len(ids)), "cell": ids.view(np.int64)})
-    df = spark.createDataFrame(pdf).withColumn("tok", token_expr(F.col("cell")))
+    df = spark.createDataFrame(pdf).withColumn("tok", F.expr(token_sql("cell")))
     return (
         df.withColumn("back", s2_from_token(F.col("tok")))
         .toPandas()

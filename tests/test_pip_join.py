@@ -171,14 +171,14 @@ def test_encode_stage_is_stable(points):
 
 def test_native_vs_kernel_bit_ops(spark, points):
     """Native SQL bit formulas == NumPy kernel on the same ids (two-impl check)."""
-    from s2_geometry_library_java_spark.functions.native import level_expr, range_max_expr, range_min_expr, parent_expr
+    from s2_geometry_library_java_spark.functions.native import level_sql, parent_sql, range_max_sql, range_min_sql
     from s2_geometry_library_java_spark.kernel import cellid as ck
 
     df = with_cell_id(points).select("cell_id").limit(500)
-    rows = df.withColumn("lvl", level_expr(F.col("cell_id"))) \
-        .withColumn("p5", parent_expr(F.col("cell_id"), 5)) \
-        .withColumn("rmin", range_min_expr(F.col("cell_id"))) \
-        .withColumn("rmax", range_max_expr(F.col("cell_id"))).collect()
+    rows = df.withColumn("lvl", F.expr(level_sql("cell_id"))) \
+        .withColumn("p5", F.expr(parent_sql("cell_id", 5))) \
+        .withColumn("rmin", F.expr(range_min_sql("cell_id"))) \
+        .withColumn("rmax", F.expr(range_max_sql("cell_id"))).collect()
     ids = np.array([r["cell_id"] for r in rows], dtype=np.int64).view(np.uint64)
     assert np.array_equal(np.array([r["lvl"] for r in rows]), ck.level(ids))
     assert np.array_equal(np.array([r["p5"] for r in rows], dtype=np.int64), ck.parent(ids, 5).view(np.int64))

@@ -153,3 +153,20 @@ def test_stratified_sample_escapes_quoted_domains(spark):
     finally:
         con.close()
     assert [r[0] for r in kept] == [1]
+
+
+def test_slice_ids_exact_past_2_pow_53(spark, monkeypatch):
+    """Sequence and shard ids are integer division of the token offset: a
+    double quotient rounds 2^53 + 1 down to 2^53 before dividing."""
+    big = 2**53 + 1
+    offsets = spark.createDataFrame(
+        [(1, 0, 3, big), (2, 0, 5, big + 3)], "doc_id long, bucket int, n_tokens long, _o long"
+    )
+    monkeypatch.setattr(prep, "global_token_offsets", lambda *a, **k: offsets)
+    c = 3
+    packed = {r["doc_id"]: r for r in prep.pack_concat_slices(None, c).collect()}
+    shards = {r["doc_id"]: r["shard"] for r in prep.shard_by_token_budget(None, c).collect()}
+    for doc, o, n in ((1, big, 3), (2, big + 3, 5)):
+        assert packed[doc]["start_seq"] == o // c == shards[doc]
+        assert packed[doc]["end_seq"] == (o + n - 1) // c
+        assert packed[doc]["offset_in_seq"] == o % c

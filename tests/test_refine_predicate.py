@@ -1,17 +1,20 @@
-"""The engine's rect/cap refine formula (``Layer.sql_predicate`` parsed by
-``F.expr`` inside ``membership_expr``): checked against the NumPy reference
-``Layer.contains_points`` on an edge matrix, on quoted column names, and on
-how many py4j round trips a repeat build costs."""
+"""The engine's rect/cap refine formula (``Layer.sql_predicate`` texts in one
+``F.expr`` CASE inside ``membership_expr``): checked against the NumPy
+reference ``Layer.contains_points`` on an edge matrix, on quoted column
+names and layer ids, and on how many py4j round trips a repeat build costs,
+alone and inside a whole pip_join -> tile_manifest plan."""
 
 import math
-import threading
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from __spark_entry__ import ALL_LAYERS
-from s2_geometry_library_java_spark.operators.pip_join import membership_expr
+from s2_geometry_library_java_spark.operators.layers import cap_layer, rect_layer
+from s2_geometry_library_java_spark.operators.pip_join import membership_expr, pip_join
+from s2_geometry_library_java_spark.operators.tiling import tile_manifest
+from s2_geometry_library_java_spark.plans.pipeline import encode_images
 
 NATIVE = [l for l in ALL_LAYERS if l.native]
 
@@ -108,24 +111,53 @@ def test_quoted_column_names_resolve(spark):
             membership_expr(ALL_LAYERS, bad, "lng")
 
 
-def test_repeat_refine_build_py4j_round_trips(spark, monkeypatch):
-    # One F.expr parse per native layer; a Column tree built literal by
-    # literal costs a round trip per node: 2,509 for these 8 layers, 357 here.
-    from py4j.clientserver import ClientServerConnection
-
+def test_repeat_refine_build_py4j_round_trips(spark, py4j_round_trips):
+    # One F.expr parse for the CASE over all native layers; a Column tree
+    # built literal by literal costs a round trip per node: 2,509 for these
+    # 8 layers.
     membership_expr(ALL_LAYERS, seed=F.col("is_interior"))
-    calls = [0]
-    send = ClientServerConnection.send_command
-    builder = threading.current_thread()
-
-    def counted(self, command, *args, **kwargs):
-        # py4j releases dead JVM references from its own thread, whenever
-        # Python collects them; only the build's calls are counted
-        if threading.current_thread() is builder:
-            calls[0] += 1
-        return send(self, command, *args, **kwargs)
-
-    with monkeypatch.context() as m:
-        m.setattr(ClientServerConnection, "send_command", counted)
+    with py4j_round_trips() as calls:
         membership_expr(ALL_LAYERS, seed=F.col("is_interior"))
     assert 0 < calls[0] <= 500, calls[0]
+
+
+@pytest.mark.parametrize("arm", ["range", "prefix"])
+def test_repeat_manifest_build_py4j_round_trips(spark, py4j_round_trips, arm):
+    # pip_join -> tile_manifest, built the way the benchmark builds it.  A
+    # prefix-arm IN-set prune built with Column.isin costs a round trip or
+    # more per prefix: about 3,000 for this covering.
+    images = spark.range(2000).select(F.xxhash64("id").alias("phash"))
+    kw = {"n_rows": 2000} if arm == "range" else {"broadcast_cells": False}
+
+    def build():
+        return tile_manifest(pip_join(encode_images(images), ALL_LAYERS, **kw), tile_level=7)
+
+    plan = build()._jdf.queryExecution().executedPlan().toString()
+    assert ("BroadcastNestedLoopJoin" if arm == "range" else "INSET") in plan
+    with py4j_round_trips() as calls:
+        build()
+    assert 0 < calls[0] <= 500, calls[0]
+
+
+def test_quoted_layer_ids_refine_like_plain_ids(spark):
+    # ids land in the CASE text as SQL string literals; quotes and
+    # backslashes must survive the quoting
+    ids = {"r": "o'r\\", "c": "c\\'nyc"}
+    plain = [rect_layer("r", 35.0, -10.0, 60.0, 30.0), cap_layer("c", 40.7, -74.0, 18.0)]
+    quoted = [rect_layer(ids["r"], 35.0, -10.0, 60.0, 30.0), cap_layer(ids["c"], 40.7, -74.0, 18.0)]
+    pts = [
+        (pid, float(lat), float(lng))
+        for pid in ("r", "c")
+        for lat in range(-80, 81, 10)
+        for lng in range(-170, 171, 10)
+    ]
+    rows = [(i, pid, ids[pid], lat, lng) for i, (pid, lat, lng) in enumerate(pts)]
+    df = spark.createDataFrame(rows, "rid int, pid string, qid string, lat double, lng double")
+
+    def inside(id_col, layers):
+        named = df.select("rid", F.col(id_col).alias("polygon_id"), "lat", "lng")
+        return sorted(named.select("rid", membership_expr(layers).alias("inside")).collect())
+
+    want = inside("pid", plain)
+    assert inside("qid", quoted) == want
+    assert any(r["inside"] for r in want) and not all(r["inside"] for r in want)
