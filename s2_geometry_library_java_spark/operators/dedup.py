@@ -76,7 +76,7 @@ def minhash_sig_duck(hs_col: str = "hs") -> str:
 # ---------------------------------------------------------------------------
 # Operators
 # ---------------------------------------------------------------------------
-def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition ONLY when the input has fewer partitions than
     the session's parallelism.  A compacted small input (e.g. one parquet row
     group) otherwise serializes the expensive shingle/md5 stage on a single
@@ -84,7 +84,7 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     guard is a no-op whenever scan parallelism already suffices."""
     if df.isStreaming:  # .rdd is undefined for streaming plans
         return df
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -55,6 +55,8 @@ r4 pip-join assumption with operator-specific measurement:
   9-neighborhood so deep salts stay affordable — use it, or dedup exact
   locations first, for corpora with single-cell hot spots
   (stadium/landmark bursts) where one bucket dominates the corpus.
+Both are one salting tree: global salting is hot-only salting with every
+bucket hot.
 """
 
 from __future__ import annotations
@@ -181,56 +183,22 @@ def geo_neardup_pairs(
             ).alias("probe"),
         )
     )
-    def _salted(l_: DataFrame, ring_: DataFrame, r_: DataFrame):
-        """Pack salt classes into the free low bits of the bucket keys."""
-        salts = F.explode(F.array(*[F.lit(s) for s in range(salt)]))
-        ring_ = ring_.withColumn("_s", salts).select(
-            F.col("bucket").bitwiseOR(F.col("_s")).alias("bucket"),
-            F.col("probe").bitwiseOR(F.col("_s")).alias("probe"),
-        )
-        l_ = l_.withColumn(
-            "bucket",
-            F.col("bucket").bitwiseOR(F.pmod(F.xxhash64(F.col("id_l")), F.lit(salt))),
-        )
-        r_ = r_.withColumn("_s", salts).select(
-            "id_r",
-            "lat_r",
-            "lng_r",
-            "h_r",
-            F.col("probe").bitwiseOR(F.col("_s")).alias("probe"),
-        )
-        return l_, ring_, r_
-
-    def _pairs(l_: DataFrame, ring_: DataFrame, r_: DataFrame, ring_bound: int) -> DataFrame:
-        if 9 * ring_bound <= RING_BROADCAST_MAX:
-            ring_ = F.broadcast(ring_)
-        dist = F.expr(haversine_sql("lat_l", "lng_l", "lat_r", "lng_r"))
-        ham = F.bit_count(F.col("h_l").bitwiseXOR(F.col("h_r")))
-        # the radius test compares the RAW double (the completeness proof is
-        # in true distance; rounding first would admit pairs epsilon past the
-        # blocking guarantee); nano-radian fixed point is output-only
-        return (
-            l_.join(ring_, "bucket")
-            .join(r_, "probe")
-            .filter(F.col("id_l") < F.col("id_r"))
-            .filter((dist <= F.lit(radius_rad)) & (ham <= max_hamming))
-            .select(
-                F.col("id_l").alias("id_lo"),
-                F.col("id_r").alias("id_hi"),
-                F.round(dist * F.lit(1e9)).cast("bigint").alias("dist_nrad"),
-                ham.cast("int").alias("hamming"),
-            )
-        )
-
     # broadcastability decided from the tightest known bound on POPULATED
     # buckets: the data-independent grid (6*4^L cells) intersected with the
     # corpus-size hint (distinct buckets <= rows).  No extra count job —
     # with a hint, meters-scale radii (level >= 8, grid bound astronomical)
     # still broadcast the tiny populated ring; without one, the grid bound
     # alone decides and deep levels fall through to the shuffled equi-join.
-    populated_bound = 6 * 4**level if n_rows is None else min(n_rows, 6 * 4**level)
+    ring_bound = 6 * 4**level if n_rows is None else min(n_rows, 6 * 4**level)
 
-    if salt and salt_threshold is not None:
+    is_hot = None
+    if salt and salt_threshold is None:
+        # GLOBAL salting is the hot-only tree with every bucket hot: the
+        # optimizer folds each CASE WHEN true away (SimplifyConditionals),
+        # so every row and ring edge fans out x salt unconditionally
+        is_hot = probe_is_hot = F.lit(True)
+        ring_bound *= salt
+    elif salt:
         # ONE bounded driver job: buckets above the threshold.  Map-side
         # combine keeps the count shuffle tiny; |hot| <= n/threshold by
         # definition, the LIMIT makes the bound a hard guard.
@@ -249,22 +217,28 @@ def geo_neardup_pairs(
                 "or use global salting (salt_threshold=None)"
             )
         hot = sorted(int(r["bucket"]) for r in hot_rows)
-        if not hot:
-            return _pairs(left, ring, right, populated_bound)
-        # the hot set's 9-neighborhood, expanded DRIVER-side with the K21
-        # kernel (<= 4096 cells, no extra Spark job): right rows outside it
-        # can never meet a hot left row, so only they pay the salt explode.
-        hot_i64 = np.asarray(hot, dtype=np.int64)
-        _, nbrs = cellid.get_all_neighbors(hot_i64.astype(np.uint64), level)
-        probe_hot = sorted({int(v) for v in np.concatenate([hot_i64, nbrs.astype(np.int64)])})
+        if hot:
+            # the hot set's 9-neighborhood, expanded DRIVER-side with the
+            # K21 kernel (<= 4096 cells, no extra Spark job): right rows
+            # outside it can never meet a hot left row, so only they pay
+            # the salt explode.
+            hot_i64 = np.asarray(hot, dtype=np.int64)
+            _, nbrs = cellid.get_all_neighbors(hot_i64.astype(np.uint64), level)
+            probe_hot = sorted({int(v) for v in np.concatenate([hot_i64, nbrs.astype(np.int64)])})
+            is_hot = F.expr(in_set_sql("bucket", hot))
+            probe_is_hot = F.expr(in_set_sql("probe", probe_hot))
+            ring_bound += len(hot) * (salt - 1)
+    if is_hot is not None:
         # ONE join tree (a first-cut union-of-two-paths built the ring's
         # distinct+K21 hop twice and re-scanned the left side — measured
         # SLOWER than unsalted at 32M): the explode is CONDITIONAL, so hot
         # edges/rows fan out x salt while everything cold keeps exactly one
         # replica with salt class 0, and the cold plan shape is unchanged.
+        # A pair (l, r) still meets exactly once: via class hash(id_l)%salt
+        # when l's bucket is hot (r's class-matched replica exists because
+        # hot's ring is inside probe_hot), via the class-0 edge otherwise.
         all_classes = F.array(*[F.lit(c) for c in range(salt)])
         one_class = F.array(F.lit(0))
-        is_hot = F.expr(in_set_sql("bucket", hot))
         left = left.withColumn(
             "bucket",
             F.when(
@@ -279,10 +253,7 @@ def geo_neardup_pairs(
             F.col("probe").bitwiseOR(F.col("_c")).alias("probe"),
         )
         right = right.withColumn(
-            "_c",
-            F.explode(
-                F.when(F.expr(in_set_sql("probe", probe_hot)), all_classes).otherwise(one_class)
-            ),
+            "_c", F.explode(F.when(probe_is_hot, all_classes).otherwise(one_class))
         ).select(
             "id_r",
             "lat_r",
@@ -290,11 +261,23 @@ def geo_neardup_pairs(
             "h_r",
             F.col("probe").bitwiseOR(F.col("_c")).alias("probe"),
         )
-        # a pair (l, r) still meets exactly once: via class hash(id_l)%salt
-        # when l's bucket is hot (r's class-matched replica exists because
-        # hot's ring is inside probe_hot), via the class-0 edge otherwise
-        return _pairs(left, ring, right, populated_bound + len(hot) * (salt - 1))
 
-    if salt:
-        left, ring, right = _salted(left, ring, right)
-    return _pairs(left, ring, right, populated_bound * (salt or 1))
+    if 9 * ring_bound <= RING_BROADCAST_MAX:
+        ring = F.broadcast(ring)
+    dist = F.expr(haversine_sql("lat_l", "lng_l", "lat_r", "lng_r"))
+    ham = F.bit_count(F.col("h_l").bitwiseXOR(F.col("h_r")))
+    # the radius test compares the RAW double (the completeness proof is in
+    # true distance; rounding first would admit pairs epsilon past the
+    # blocking guarantee); nano-radian fixed point is output-only
+    return (
+        left.join(ring, "bucket")
+        .join(right, "probe")
+        .filter(F.col("id_l") < F.col("id_r"))
+        .filter((dist <= F.lit(radius_rad)) & (ham <= max_hamming))
+        .select(
+            F.col("id_l").alias("id_lo"),
+            F.col("id_r").alias("id_hi"),
+            F.round(dist * F.lit(1e9)).cast("bigint").alias("dist_nrad"),
+            ham.cast("int").alias("hamming"),
+        )
+    )

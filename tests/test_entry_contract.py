@@ -31,6 +31,20 @@ def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.sort_values(list(pdf.columns), ignore_index=True)
 
 
+def _float_mismatch(a: pd.DataFrame, b: pd.DataFrame, c: str, af: np.ndarray, bf: np.ndarray, name: str) -> str:
+    """The first mismatching row of float column ``c``: the row's other
+    values, both exact reprs and their distance in ulps."""
+    i = int(np.flatnonzero(~((af == bf) | (np.isnan(af) & np.isnan(bf))))[0])
+    x, y = af[i], bf[i]
+    # ordered int view of the IEEE-754 bits: adjacent doubles differ by 1
+    ox, oy = (int(v) if v >= 0 else -(1 << 63) - int(v) for v in np.array([x, y]).view(np.int64))
+    rest_a, rest_b = ({k: f[k].iloc[i] for k in f.columns if k != c} for f in (a, b))
+    return (
+        f"{name}.{c}: float mismatch at sorted row {i}: spark {x!r} vs oracle {y!r} "
+        f"({abs(ox - oy)} ulp); spark row {rest_a}; oracle row {rest_b}"
+    )
+
+
 def compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: str):
     assert len(spark_pdf) == len(duck_pdf), f"{name}: row count {len(spark_pdf)} vs {len(duck_pdf)}"
     assert sorted(spark_pdf.columns) == sorted(duck_pdf.columns), f"{name}: columns"
@@ -38,9 +52,8 @@ def compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: str):
     for c in a.columns:
         av, bv = a[c].to_numpy(), b[c].to_numpy()
         if np.issubdtype(np.asarray(av).dtype, np.floating) or np.issubdtype(np.asarray(bv).dtype, np.floating):
-            assert np.array_equal(
-                av.astype(np.float64), bv.astype(np.float64), equal_nan=True
-            ), f"{name}.{c}: float mismatch"
+            af, bf = av.astype(np.float64), bv.astype(np.float64)
+            assert np.array_equal(af, bf, equal_nan=True), _float_mismatch(a, b, c, af, bf, name)
         elif np.issubdtype(np.asarray(av).dtype, np.integer) or np.issubdtype(
             np.asarray(bv).dtype, np.integer
         ):

@@ -136,6 +136,16 @@ def test_salted_hot_bucket_pairs(spark):
     assert salted == base and len(base) > 100
 
 
+def test_global_salt_is_unconditional(spark, pts):
+    """Global salting is the hot-only tree with every bucket hot: the
+    optimizer folds the CASE WHEN true away, leaving the K21 ring explode
+    plus the two unconditional class explodes (ring edges, right rows)."""
+    df, _, _, _ = pts
+    plan = geo_neardup_pairs(df, RADIUS, MAX_HAM, salt=4)._jdf.queryExecution().optimizedPlan().toString()
+    assert "CASE WHEN" not in plan
+    assert plan.count("Generate ") == 3
+
+
 def test_salt_overflow_rejected(spark, pts):
     df, _, _, _ = pts
     lvl = geo_block_level(RADIUS)

@@ -74,12 +74,10 @@ def test_radius_join_rejects_oversized_radius(spark, points):
         radius_join(points, [("q0", 0.0, 0.0)], radius_rad=1.0)
 
 
-def test_knn_unresolved_reprobe_avoids_brute_scan(spark):
-    """The brute-fallback guard: a query whose first-rung bucket probe finds
-    fewer than k candidates (sparse corner) must resolve through the 4x
-    coarser re-probe rung, and the executed (post-AQE) plan must show the
-    brute cross join eliminated by empty-relation propagation — no
-    full-corpus scan per unresolved query."""
+def _sparse_corner(spark):
+    """A dense cluster far away plus five neighbors around the sparse query
+    (-40, 100) at ~0.04-0.05 rad: outside a 0.02 first-rung radius, inside
+    the 0.08 re-probe radius."""
     import pandas as pd
 
     rng_lat, rng_lng = [], []
@@ -87,8 +85,6 @@ def test_knn_unresolved_reprobe_avoids_brute_scan(spark):
     for i in range(200):
         rng_lat.append(10.0 + 0.002 * i)
         rng_lng.append(10.0 + 0.003 * (i % 17))
-    # five neighbors around the sparse query at ~0.04-0.05 rad (outside the
-    # 0.02 first-rung radius, inside the 0.08 re-probe radius)
     sparse = [(-42.6, 100.0), (-37.4, 100.0), (-40.0, 96.5), (-40.0, 103.5), (-42.2, 102.2)]
     for la, ln in sparse:
         rng_lat.append(la)
@@ -96,23 +92,48 @@ def test_knn_unresolved_reprobe_avoids_brute_scan(spark):
     pdf = pd.DataFrame(
         {"point_id": range(len(rng_lat)), "lat": rng_lat, "lng": rng_lng}
     )
-    pts = spark.createDataFrame(pdf)
+    return spark.createDataFrame(pdf), len(pdf)
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_knn_unresolved_reprobe_avoids_brute_scan(spark):
+    """The brute-fallback guard: a query whose first-rung bucket probe finds
+    fewer than k candidates (sparse corner) must resolve through the 4x
+    coarser re-probe rung, and with the corpus size unknown the executed
+    plan holds no brute cross join — no full-corpus scan per unresolved
+    query."""
+    pts, n = _sparse_corner(spark)
     # unknown corpus size (explicit radius, no count) = the web-scale shape:
-    # the auto brute net must stay OUT of the plan entirely — a BNLJ scans
-    # its whole streamed side even with an empty build side
+    # the brute net must stay OUT of the plan entirely — a BNLJ scans its
+    # whole streamed side even with an empty build side
     res = knn_join(pts, [("q0", -40.0, 100.0)], k=5, init_radius_rad=0.02)
     rows = res.collect()
     got = {r["point_id"] for r in rows}
     assert got == set(range(200, 205))  # the five sparse neighbors
     assert all(0.02 < r["dist"] <= 0.08 for r in rows)  # rung 1 found none
-    plan = res._jdf.queryExecution().executedPlan().toString()
+    plan = _executed(res)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-    # ...and the full exactness net changes nothing on this corpus
-    with_net = knn_join(
-        pts, [("q0", -40.0, 100.0)], k=5, init_radius_rad=0.02, brute_fallback="always"
-    )
+    # ...and the full exactness net (a known-small corpus) changes nothing
+    with_net = knn_join(pts, [("q0", -40.0, 100.0)], k=5, init_radius_rad=0.02, n_points=n)
     assert {r["point_id"] for r in with_net.collect()} == got
+
+
+@pytest.mark.parametrize("hint,net", [("corpus", True), ("huge", False)])
+def test_knn_brute_net_follows_n_points(spark, hint, net):
+    """The brute net is derived from the corpus size: an ``n_points`` at or
+    below BRUTE_NET_MAX_ROWS puts the broadcast-NL sweep in the executed
+    plan (AQE's initial plan; empty-relation propagation drops it at run
+    time once the re-probe resolved every query); a web-scale hint keeps it
+    out.  Rows are the same either way."""
+    pts, n = _sparse_corner(spark)
+    n_points = n if hint == "corpus" else 10**9
+    res = knn_join(pts, [("q0", -40.0, 100.0)], k=5, init_radius_rad=0.02, n_points=n_points)
+    assert {r["point_id"] for r in res.collect()} == set(range(200, 205))
+    assert ("BroadcastNestedLoopJoin" in _executed(res)) == net
 
 
 def test_knn_k_larger_than_n(spark, points):
@@ -122,10 +143,10 @@ def test_knn_k_larger_than_n(spark, points):
 
 
 def test_knn_eager_gating(spark, sf_dir, points):
-    """materialize='auto' pins the rung-1 candidates (localCheckpoint shows
-    as an RDD scan in the plan) ONLY when the candidate bound is known
-    small: density-derived radius + known query count.  A user-supplied
-    radius or an unhinted query DataFrame must stay lazy — checkpoints are
+    """The rung-1 candidates are pinned (localCheckpoint shows as an RDD
+    scan in the plan) ONLY when the candidate bound is known small:
+    density-derived radius + known query count.  A user-supplied radius or
+    an unhinted query DataFrame must stay lazy — checkpoints are
     non-reliable on a real cluster and must not pin unbounded candidate
     sets.  Both paths return identical rows."""
 
@@ -158,9 +179,6 @@ def test_knn_eager_gating(spark, sf_dir, points):
     # hinted query DataFrame: bound known -> eager again
     hinted = knn_join(points, qdf, 5, n_queries=4)
     assert has_checkpoint_scan(hinted)
-    # explicit override wins over the hint
-    forced_lazy = knn_join(points, qdf, 5, n_queries=4, materialize="lazy")
-    assert not has_checkpoint_scan(forced_lazy)
 
     key = lambda df: {
         (str(r["query_id"]), r["point_id"], r["rank"])
@@ -168,10 +186,6 @@ def test_knn_eager_gating(spark, sf_dir, points):
     }
     expect = key(eager)
     assert expect and key(lazy_q) == expect and key(hinted) == expect
-    assert key(forced_lazy) == expect
-
-    with pytest.raises(ValueError, match="materialize"):
-        knn_join(points, queries, 5, materialize="Eager")
 
 
 # ---------------------------------------------------------------------------
@@ -231,10 +245,3 @@ def test_ledger_idempotent_rerun(tmp_path, points):
     run_tiled_write(matches, out, buckets=2)
     stats = run_tiled_write(matches, out, buckets=2)
     assert stats["written"] == [] and sorted(stats["skipped"]) == [0, 1]
-
-
-def test_knn_brute_fallback_validated(spark, points):
-    """A typo'd brute_fallback must raise, not silently behave as 'never'
-    (which would drop the exactness net)."""
-    with pytest.raises(ValueError, match="brute_fallback"):
-        knn_join(points, [("q0", 10.0, 10.0)], k=3, brute_fallback="Auto")
