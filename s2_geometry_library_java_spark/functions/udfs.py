@@ -180,11 +180,9 @@ def s2_polyline_ops_udf(dsl: pd.Series, frac: pd.Series, probe: pd.Series) -> pd
     return pd.DataFrame(rows, columns=["ix", "iy", "iz", "px", "py", "pz", "nearest_edge", "dist"])
 
 
-@pandas_udf(ArrayType(LongType()))
-def s2_vertex_neighbors_udf(cell_id: pd.Series, level: pd.Series) -> pd.Series:
-    """getVertexNeighbors (S2CellId.java:595-638): the <=4 level-``level``
-    cells closest to the id's position — the PointIndex probe set
-    (S2PolygonBuilder.java:669-689)."""
+def _neighbors_by_level(kernel, cell_id: pd.Series, level: pd.Series) -> pd.Series:
+    """One ``kernel(ids, level) -> (rows, neighbours)`` call per distinct
+    level in the batch, regrouped into one array per input row."""
     from s2_geometry_library_java_spark.operators.edge_join import regroup_sorted
 
     ids = _as_uint64(cell_id)
@@ -192,7 +190,7 @@ def s2_vertex_neighbors_udf(cell_id: pd.Series, level: pd.Series) -> pd.Series:
     out = [None] * len(ids)
     for l in np.unique(lv):
         sel = np.flatnonzero(lv == l)
-        rows, nbrs = ck.get_vertex_neighbors(ids[sel], int(l))
+        rows, nbrs = kernel(ids[sel], int(l))
         order = np.argsort(rows, kind="stable")
         groups = regroup_sorted(rows[order], nbrs[order].view(np.int64), len(sel))
         for local_i, orig in enumerate(sel):
@@ -201,19 +199,15 @@ def s2_vertex_neighbors_udf(cell_id: pd.Series, level: pd.Series) -> pd.Series:
 
 
 @pandas_udf(ArrayType(LongType()))
+def s2_vertex_neighbors_udf(cell_id: pd.Series, level: pd.Series) -> pd.Series:
+    """getVertexNeighbors (S2CellId.java:595-638): the <=4 level-``level``
+    cells closest to the id's position — the PointIndex probe set
+    (S2PolygonBuilder.java:669-689)."""
+    return _neighbors_by_level(ck.get_vertex_neighbors, cell_id, level)
+
+
+@pandas_udf(ArrayType(LongType()))
 def s2_all_neighbors_udf(cell_id: pd.Series, nbr_level: pd.Series) -> pd.Series:
     """getAllNeighbors (S2CellId.java:640-682) as an array column; one kernel
     call per (distinct nbr_level) group within the batch."""
-    ids = _as_uint64(cell_id)
-    lv = nbr_level.to_numpy(dtype=np.int64)
-    from s2_geometry_library_java_spark.operators.edge_join import regroup_sorted
-
-    out = [None] * len(ids)
-    for l in np.unique(lv):
-        sel = np.flatnonzero(lv == l)
-        rows, nbrs = ck.get_all_neighbors(ids[sel], int(l))
-        order = np.argsort(rows, kind="stable")
-        groups = regroup_sorted(rows[order], nbrs[order].view(np.int64), len(sel))
-        for local_i, orig in enumerate(sel):
-            out[orig] = groups[local_i]
-    return pd.Series(out)
+    return _neighbors_by_level(ck.get_all_neighbors, cell_id, nbr_level)

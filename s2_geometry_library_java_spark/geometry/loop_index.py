@@ -148,7 +148,6 @@ def sparse_crossing_parity(
     vertices: np.ndarray,
     points: np.ndarray,
     index: LoopEdgeIndex,
-    seg_len: float | None = None,
 ) -> np.ndarray:
     """Drop-in sparse replacement for ``pr.loop_crossing_parity``: same
     origin->p crossing parity, evaluated only on index candidates of the
@@ -159,8 +158,7 @@ def sparse_crossing_parity(
     if n == 0 or v.shape[0] == 0:
         return np.zeros(n, dtype=bool)
     vnext = np.roll(v, -1, axis=0)
-    if seg_len is None:
-        seg_len = index.seg_len
+    seg_len = index.seg_len
 
     from s2_geometry_library_java_spark.operators.edge_join import edge_coverings
 

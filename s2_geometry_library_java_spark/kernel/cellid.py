@@ -413,6 +413,21 @@ def _face_uv_to_xyz_cols(face: np.ndarray, u: np.ndarray, v: np.ndarray) -> np.n
 _CHUNK = 24576
 
 
+def _chunked(block, ndim: int, *cols: np.ndarray) -> np.ndarray:
+    """``block(*cols)`` computed _CHUNK rows at a time into one preallocated
+    output, once ``cols`` are ``ndim``-dimensional and longer than two
+    chunks; anything else goes to ``block`` whole."""
+    n = cols[0].shape[0] if cols[0].ndim == ndim else 0
+    if n <= 2 * _CHUNK:
+        return block(*cols)
+    first = block(*(c[:_CHUNK] for c in cols))
+    out = np.empty((n,) + first.shape[1:], dtype=first.dtype)
+    out[:_CHUNK] = first
+    for s in range(_CHUNK, n, _CHUNK):
+        out[s : s + _CHUNK] = block(*(c[s : s + _CHUNK] for c in cols))
+    return out
+
+
 def _decode_center_uv(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Cell id -> (face, u, v) of the cell center (S2CellId.java:170-199)."""
     face, i, j, _ = to_face_ij_orientation(ids)
@@ -438,13 +453,7 @@ def _to_point_raw_block(ids: np.ndarray) -> np.ndarray:
 
 def to_point_raw(ids: np.ndarray) -> np.ndarray:
     """Cell center direction vector, not unit length (S2CellId.java:170-199)."""
-    ids = np.asarray(ids, dtype=np.uint64)
-    if ids.ndim != 1 or ids.shape[0] <= 2 * _CHUNK:
-        return _to_point_raw_block(ids)
-    out = np.empty(ids.shape + (3,), dtype=np.float64)
-    for s in range(0, ids.shape[0], _CHUNK):
-        out[s : s + _CHUNK] = _to_point_raw_block(ids[s : s + _CHUNK])
-    return out
+    return _chunked(_to_point_raw_block, 1, np.asarray(ids, dtype=np.uint64))
 
 
 def _to_point_block(ids: np.ndarray) -> np.ndarray:
@@ -468,13 +477,7 @@ def _to_point_block(ids: np.ndarray) -> np.ndarray:
 
 
 def to_point(ids: np.ndarray) -> np.ndarray:
-    ids = np.asarray(ids, dtype=np.uint64)
-    if ids.ndim != 1 or ids.shape[0] <= 2 * _CHUNK:
-        return _to_point_block(ids)
-    out = np.empty(ids.shape + (3,), dtype=np.float64)
-    for s in range(0, ids.shape[0], _CHUNK):
-        out[s : s + _CHUNK] = _to_point_block(ids[s : s + _CHUNK])
-    return out
+    return _chunked(_to_point_block, 1, np.asarray(ids, dtype=np.uint64))
 
 
 def to_latlng_radians(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -510,13 +513,7 @@ def _from_xyz_block(xyz: np.ndarray) -> np.ndarray:
 
 
 def from_xyz(xyz: np.ndarray) -> np.ndarray:
-    xyz = np.asarray(xyz, dtype=np.float64)
-    if xyz.ndim != 2 or xyz.shape[0] <= 2 * _CHUNK:
-        return _from_xyz_block(xyz)
-    out = np.empty(xyz.shape[0], dtype=np.uint64)
-    for s in range(0, xyz.shape[0], _CHUNK):
-        out[s : s + _CHUNK] = _from_xyz_block(xyz[s : s + _CHUNK])
-    return out
+    return _chunked(_from_xyz_block, 2, np.asarray(xyz, dtype=np.float64))
 
 
 def from_latlng_degrees(lat_deg: np.ndarray, lng_deg: np.ndarray) -> np.ndarray:
@@ -533,14 +530,12 @@ def _from_latlng_radians_block(phi: np.ndarray, theta: np.ndarray) -> np.ndarray
 
 
 def from_latlng_radians(lat_rad: np.ndarray, lng_rad: np.ndarray) -> np.ndarray:
-    phi = np.asarray(lat_rad, dtype=np.float64)
-    theta = np.asarray(lng_rad, dtype=np.float64)
-    if phi.ndim != 1 or phi.shape[0] <= 2 * _CHUNK:
-        return _from_latlng_radians_block(phi, theta)
-    out = np.empty(phi.shape[0], dtype=np.uint64)
-    for s in range(0, phi.shape[0], _CHUNK):
-        out[s : s + _CHUNK] = _from_latlng_radians_block(phi[s : s + _CHUNK], theta[s : s + _CHUNK])
-    return out
+    return _chunked(
+        _from_latlng_radians_block,
+        1,
+        np.asarray(lat_rad, dtype=np.float64),
+        np.asarray(lng_rad, dtype=np.float64),
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -560,7 +560,6 @@ def pq_train_codebooks(
     m: int = PQ_M,
     ksub: int = PQ_KSUB,
     sample_n: int = 2048,
-    iters: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> np.ndarray:
@@ -588,7 +587,7 @@ def pq_train_codebooks(
     for j in range(m):
         sub = Xn[:, j * dsub : (j + 1) * dsub]
         C = sub[:ksub].copy()
-        for _ in range(iters):
+        for _ in range(10):  # Lloyd iterations
             D = ((sub[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             a = np.argmin(D, axis=1)  # ties -> lowest code, deterministic
             for c in range(ksub):
@@ -624,11 +623,11 @@ def pq_encode(
     return embeddings.withColumn("pq_codes", encode(F.col(vec_col)))
 
 
-def _pq_lut(Qn: np.ndarray, books: np.ndarray, m: int) -> np.ndarray:
+def _pq_lut(Qn: np.ndarray, books: np.ndarray) -> np.ndarray:
     """LUT[qi, j, c] = <query subvector, codeword> — ADC similarity is
     sum_j LUT[qi, j, codes[j]] (m table adds per row, no float dot)."""
     nq, dim = Qn.shape
-    return np.einsum("qjd,jkd->qjk", Qn.reshape(nq, m, dim // m), books)
+    return np.einsum("qjd,jkd->qjk", Qn.reshape(nq, PQ_M, dim // PQ_M), books)
 
 
 def pq_cosine_topk(
@@ -637,10 +636,7 @@ def pq_cosine_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
     shortlist: int | None = None,
-    sample_n: int = 2048,
 ) -> DataFrame:
     """PQ asymmetric-distance (ADC) top-k with exact re-rank — the
     FAISS-style compressed-corpus ANN: train codebooks (bounded collect),
@@ -656,20 +652,18 @@ def pq_cosine_topk(
     projection (id, codes) with the LUTs closed over (nq*m*ksub doubles),
     the shortlist (nq*shortlist rows) broadcasts back for the re-rank join,
     and ranking windows partition by query_id (nq-way, trivially balanced)."""
-    books = pq_train_codebooks(
-        embeddings, m=m, ksub=ksub, sample_n=sample_n, id_col=id_col, vec_col=vec_col
-    )
+    books = pq_train_codebooks(embeddings, id_col=id_col, vec_col=vec_col)
     qids, Qn, qraw = _collect_queries(embeddings, n_queries, id_col, vec_col)
     nq = len(qids)
-    lut = _pq_lut(Qn, books, m)
+    lut = _pq_lut(Qn, books)
 
     from pyspark.sql.types import DoubleType
 
     @pandas_udf(ArrayType(DoubleType()))
     def adc(codes: pd.Series) -> pd.Series:
-        C = np.stack(codes.to_numpy()).astype(np.int64)  # (n, m)
+        C = np.stack(codes.to_numpy()).astype(np.int64)  # (n, PQ_M)
         S = np.zeros((len(C), nq))
-        for j in range(m):
+        for j in range(PQ_M):
             S += lut[:, j, :][:, C[:, j]].T
         return pd.Series(list(S))
 
@@ -701,10 +695,7 @@ def ivfpq_cosine_topk(
     vec_col: str = "embedding",
     n_lists: int = 16,
     n_probe: int = 4,
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
     shortlist: int | None = None,
-    sample_n: int = 2048,
 ) -> DataFrame:
     """IVF-PQ — the composition of the two quantizers above and the
     billion-scale ANN workhorse shape: the IVF coarse cells prune WHICH
@@ -724,11 +715,9 @@ def ivfpq_cosine_topk(
         embeddings.orderBy(F.col(id_col).asc()).limit(n_lists).select(id_col, vec_col).collect()
     )
     Cn = _unit_rows(np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in cents]))
-    books = pq_train_codebooks(
-        embeddings, m=m, ksub=ksub, sample_n=sample_n, id_col=id_col, vec_col=vec_col
-    )
+    books = pq_train_codebooks(embeddings, id_col=id_col, vec_col=vec_col)
     qids, Qn, qraw = _collect_queries(embeddings, n_queries, id_col, vec_col)
-    lut = _pq_lut(Qn, books, m)
+    lut = _pq_lut(Qn, books)
     qpos_of = {int(qid): i for i, qid in enumerate(qids)}
 
     @pandas_udf(IntegerType())
@@ -740,10 +729,10 @@ def ivfpq_cosine_topk(
 
     @pandas_udf(DoubleType())
     def adc_pair(codes: pd.Series, qpos: pd.Series) -> pd.Series:
-        Cd = np.stack(codes.to_numpy()).astype(np.int64)  # (n, m)
+        Cd = np.stack(codes.to_numpy()).astype(np.int64)  # (n, PQ_M)
         qp = qpos.to_numpy().astype(np.int64)
         s = np.zeros(len(Cd))
-        for j in range(m):
+        for j in range(PQ_M):
             s += lut[qp, j, Cd[:, j]]
         return pd.Series(s)
 

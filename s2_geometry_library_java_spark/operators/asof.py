@@ -114,22 +114,22 @@ def time_rollup(
     events: DataFrame,
     ts_col: str = "ts",
     value_col: str = "value",
-    parts: tuple[str, ...] = TIME_ROLLUP_PARTS,
 ) -> DataFrame:
-    """One-pass multi-resolution rollup: for each resolution in ``parts``,
-    count rows and sum ``value_col`` (as fixed-point BIGINT micro-units, so
-    the sum is order-independent) per truncated bucket.  GROUPING SETS
-    computes all resolutions in one shuffle with map-side partials."""
-    truncs = [F.date_trunc(p, F.col(ts_col)).alias(f"b_{p}") for p in parts]
+    """One-pass multi-resolution rollup: for each resolution in
+    TIME_ROLLUP_PARTS, count rows and sum ``value_col`` (as fixed-point
+    BIGINT micro-units, so the sum is order-independent) per truncated
+    bucket.  GROUPING SETS computes all resolutions in one shuffle with
+    map-side partials."""
+    truncs = [F.date_trunc(p, F.col(ts_col)).alias(f"b_{p}") for p in TIME_ROLLUP_PARTS]
     df = events.select(
         *truncs, F.round(F.col(value_col) * F.lit(1e6)).cast("bigint").alias("v_micro")
     )
-    sets = ", ".join(f"(b_{p})" for p in parts)
+    sets = ", ".join(f"(b_{p})" for p in TIME_ROLLUP_PARTS)
     df.createOrReplaceTempView("__time_rollup_in")
     case = " ".join(
-        f"WHEN b_{p} IS NOT NULL THEN '{p}'" for p in parts
+        f"WHEN b_{p} IS NOT NULL THEN '{p}'" for p in TIME_ROLLUP_PARTS
     )
-    coalesce = "coalesce(" + ", ".join(f"b_{p}" for p in parts) + ")"
+    coalesce = "coalesce(" + ", ".join(f"b_{p}" for p in TIME_ROLLUP_PARTS) + ")"
     return df.sparkSession.sql(
         f"""
         SELECT CASE {case} END AS resolution,
@@ -146,7 +146,6 @@ def time_rollup_sql(
     table: str = "events",
     ts_col: str = "ts",
     value_col: str = "value",
-    parts: tuple[str, ...] = TIME_ROLLUP_PARTS,
 ) -> str:
     """DuckDB twin of :func:`time_rollup` (UNION ALL of per-resolution
     GROUP BYs — same arithmetic, independent formulation)."""
@@ -155,6 +154,6 @@ def time_rollup_sql(
             count(1) AS n_events,
             CAST(sum(CAST(round({value_col} * 1e6) AS BIGINT)) AS BIGINT) AS value_micro
         FROM {table} GROUP BY 2"""
-        for p in parts
+        for p in TIME_ROLLUP_PARTS
     ]
     return "\nUNION ALL\n".join(legs)

@@ -1,6 +1,5 @@
 """Multimodal (audio) column operators — the audio sibling of
-operators/images.py, closing the round-2 stub (audio_features previously
-raised NotImplementedError).
+operators/images.py.
 
 The Spark-side plumbing — binary sample column with typed metadata
 (sample_rate, channels, n_samples, fmt), mapInPandas Arrow batching,

@@ -61,29 +61,21 @@ _COVERING_MEMO: dict[tuple, tuple[list, list[tuple]]] = {}
 def covering_rows(
     layers: list[Layer],
     max_cells: int = 8,
-    min_level: int = 0,
     max_level: int = ck.MAX_LEVEL,
-    level_mod: int = 1,
 ) -> list[tuple]:
-    key = (tuple(id(l) for l in layers), max_cells, min_level, max_level, level_mod)
+    key = (tuple(id(l) for l in layers), max_cells, max_level)
     hit = _COVERING_MEMO.get(key)
     if hit is not None:
         return hit[1]
-    rows = _covering_rows_uncached(layers, max_cells, min_level, max_level, level_mod)
+    rows = _covering_rows_uncached(layers, max_cells, max_level)
     if len(_COVERING_MEMO) > 64:
         _COVERING_MEMO.clear()
     _COVERING_MEMO[key] = (list(layers), rows)
     return rows
 
 
-def _covering_rows_uncached(
-    layers: list[Layer],
-    max_cells: int = 8,
-    min_level: int = 0,
-    max_level: int = ck.MAX_LEVEL,
-    level_mod: int = 1,
-) -> list[tuple]:
-    coverer = S2RegionCoverer(max_cells=max_cells, min_level=min_level, max_level=max_level, level_mod=level_mod)
+def _covering_rows_uncached(layers: list[Layer], max_cells: int, max_level: int) -> list[tuple]:
+    coverer = S2RegionCoverer(max_cells=max_cells, max_level=max_level)
     rows: list[tuple] = []
     for layer in layers:
         cells = coverer.get_covering(layer.region)
@@ -112,11 +104,9 @@ def covering_df(
     spark: SparkSession,
     layers: list[Layer],
     max_cells: int = 8,
-    min_level: int = 0,
     max_level: int = ck.MAX_LEVEL,
-    level_mod: int = 1,
 ) -> DataFrame:
-    rows = covering_rows(layers, max_cells, min_level, max_level, level_mod)
+    rows = covering_rows(layers, max_cells, max_level)
     return spark.createDataFrame(rows, COVERING_SCHEMA)
 
 
@@ -124,9 +114,7 @@ def covering_df_distributed(
     spark: SparkSession,
     layer_specs: list[dict],
     max_cells: int = 8,
-    min_level: int = 0,
     max_level: int = ck.MAX_LEVEL,
-    level_mod: int = 1,
 ) -> DataFrame:
     """Executor-side covering generation for LARGE layer sets (SURVEY.md
     §3.2: "applyInPandas over a polygons DataFrame grouped by polygon_id
@@ -153,7 +141,7 @@ def covering_df_distributed(
             spec = json.loads(spec_json)
             kind = spec.pop("kind")
             layer = makers[kind](**spec)
-            out.extend(covering_rows([layer], max_cells, min_level, max_level, level_mod))
+            out.extend(covering_rows([layer], max_cells, max_level))
         return pd.DataFrame(out, columns=[f.name for f in COVERING_SCHEMA.fields])
 
     return df.groupBy("polygon_id").applyInPandas(per_layer, COVERING_SCHEMA)

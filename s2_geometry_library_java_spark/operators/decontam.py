@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from s2_geometry_library_java_spark.operators.dedup import (
-    NGRAM_W,
     spread,
     word_ngrams_duck,
     word_ngrams_spark,
@@ -36,7 +35,6 @@ def ngram_contamination(
     evalset: DataFrame,
     content_col: str = "text",
     id_col: str = "doc_id",
-    w: int = NGRAM_W,
     broadcast_eval: bool = True,
 ) -> DataFrame:
     """One row per CONTAMINATED training doc: ``doc_id`` plus the distinct
@@ -46,13 +44,13 @@ def ngram_contamination(
     # n_grams rides along the explode so the per-doc size needs neither a
     # second scan of the training table nor a re-join at the end.
     tg = spread(train).select(
-        F.col(id_col), F.expr(word_ngrams_spark(content_col, w)).alias("grams")
+        F.col(id_col), F.expr(word_ngrams_spark(content_col)).alias("grams")
     )
     tposts = tg.select(
         F.col(id_col), F.size("grams").alias("n_grams"), F.explode("grams").alias("gram")
     ).select(F.col(id_col), "n_grams", F.md5("gram").alias("gh"))
     eposts = (
-        evalset.select(F.col(id_col).alias("eval_id"), F.explode(F.expr(word_ngrams_spark(content_col, w))).alias("gram"))
+        evalset.select(F.col(id_col).alias("eval_id"), F.explode(F.expr(word_ngrams_spark(content_col))).alias("gram"))
         .select("eval_id", F.md5("gram").alias("gh"))
         .distinct()
     )
@@ -78,12 +76,11 @@ def ngram_contamination_sql(
     eval_where: str,
     content_col: str = "text",
     id_col: str = "doc_id",
-    w: int = NGRAM_W,
     table: str = "documents",
 ) -> str:
     """DuckDB twin of :func:`ngram_contamination` for a train/eval split of
     one table (``train_where`` / ``eval_where`` pick the halves)."""
-    grams = word_ngrams_duck(content_col, w)
+    grams = word_ngrams_duck(content_col)
     return f"""
 WITH tg AS (SELECT {id_col}, {grams} AS grams FROM {table} WHERE {train_where}),
  sizes AS (SELECT {id_col}, len(grams) AS n_grams FROM tg),

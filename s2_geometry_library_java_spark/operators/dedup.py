@@ -33,14 +33,17 @@ LSH_BANDS = 4  # 12 hashes -> 4 bands x 3 rows
 # Shared expression text (kept as SQL strings so the DuckDB oracle can reuse
 # the identical arithmetic; Spark parses these via F.expr).
 # ---------------------------------------------------------------------------
-def shingles_spark(col: str = "text", w: int = SHINGLE_W) -> str:
-    return f"array_distinct(transform(sequence(1, greatest(1, length({col}) - {w - 1})), i -> substr({col}, i, {w})))"
-
-
-def shingles_duck(col: str = "text", w: int = SHINGLE_W) -> str:
+def shingles_spark(col: str = "text") -> str:
     return (
-        f"list_distinct(list_transform(range(1, greatest(1, length({col}) - {w - 1}) + 1), "
-        f"i -> substr({col}, i, {w})))"
+        f"array_distinct(transform(sequence(1, greatest(1, length({col}) - {SHINGLE_W - 1})), "
+        f"i -> substr({col}, i, {SHINGLE_W})))"
+    )
+
+
+def shingles_duck(col: str = "text") -> str:
+    return (
+        f"list_distinct(list_transform(range(1, greatest(1, length({col}) - {SHINGLE_W - 1}) + 1), "
+        f"i -> substr({col}, i, {SHINGLE_W})))"
     )
 
 
@@ -104,9 +107,8 @@ def exact_dedup(docs: DataFrame, content_col: str = "text", id_col: str = "doc_i
     )
 
 
-def with_shingle_hashes(docs: DataFrame, content_col: str = "text", w: int = SHINGLE_W) -> DataFrame:
-    sh = shingles_spark(content_col, w)
-    return spread(docs).withColumn("shingles", F.expr(sh)).withColumn(
+def with_shingle_hashes(docs: DataFrame, content_col: str = "text") -> DataFrame:
+    return spread(docs).withColumn("shingles", F.expr(shingles_spark(content_col))).withColumn(
         "hs", F.expr(f"transform(shingles, s -> {hash61_spark('s')})")
     )
 
@@ -118,11 +120,11 @@ def minhash_signatures(docs: DataFrame, content_col: str = "text", id_col: str =
     )
 
 
-def lsh_band_buckets(sigs: DataFrame, id_col: str = "doc_id", bands: int = LSH_BANDS) -> DataFrame:
+def lsh_band_buckets(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Explode signatures into (doc_id, band, band_key) bucket rows."""
-    rows_per_band = len(MINHASH_COEFFS) // bands
+    rows_per_band = len(MINHASH_COEFFS) // LSH_BANDS
     band_cols = []
-    for b in range(bands):
+    for b in range(LSH_BANDS):
         start = b * rows_per_band + 1  # slice() is 1-based
         band_cols.append(
             F.struct(
@@ -199,22 +201,22 @@ NGRAM_W = 3
 NGRAM_MAX_DF = 1000
 
 
-def word_ngrams_spark(col: str = "text", w: int = NGRAM_W) -> str:
+def word_ngrams_spark(col: str = "text") -> str:
     # The word array is bound ONCE via a single-element transform: naming it
     # in a projection instead would be collapsed+inlined by Catalyst into the
     # gram lambda, re-running split() per gram — O(words^2) splitting per doc
     # (measured 1.8x slower end-to-end on the 5k-doc corpus).
     return (
         f"array_distinct(flatten(transform(array(split({col}, ' ')), ws -> "
-        f"transform(sequence(1, greatest(1, size(ws) - {w - 1})), "
-        f"i -> concat_ws(' ', slice(ws, i, {w}))))))"
+        f"transform(sequence(1, greatest(1, size(ws) - {NGRAM_W - 1})), "
+        f"i -> concat_ws(' ', slice(ws, i, {NGRAM_W}))))))"
     )
 
 
-def word_ngrams_duck(col: str = "text", w: int = NGRAM_W) -> str:
+def word_ngrams_duck(col: str = "text") -> str:
     return (
-        f"list_distinct(list_transform(range(1, greatest(1, len(string_split({col}, ' ')) - {w - 1}) + 1), "
-        f"i -> array_to_string(list_slice(string_split({col}, ' '), i, i + {w - 1}), ' ')))"
+        f"list_distinct(list_transform(range(1, greatest(1, len(string_split({col}, ' ')) - {NGRAM_W - 1}) + 1), "
+        f"i -> array_to_string(list_slice(string_split({col}, ' '), i, i + {NGRAM_W - 1}), ' ')))"
     )
 
 
@@ -223,7 +225,6 @@ def ngram_jaccard_pairs(
     content_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    w: int = NGRAM_W,
     max_df: int | None = NGRAM_MAX_DF,
 ) -> DataFrame:
     """n-gram Jaccard near-dup pairs via an inverted-index equi-join — no
@@ -247,7 +248,7 @@ def ngram_jaccard_pairs(
     capped gate proves exactness-on-the-capped-domain).
     """
     g = spread(docs).select(
-        F.col(id_col), F.expr(word_ngrams_spark(content_col, w)).alias("grams")
+        F.col(id_col), F.expr(word_ngrams_spark(content_col)).alias("grams")
     )
     sizes = g.select(F.col(id_col), F.size("grams").alias("n"))
     posts = g.select(F.col(id_col), F.explode("grams").alias("gram")).select(
@@ -290,9 +291,9 @@ def ngram_jaccard_pairs(
 SIMHASH_BITS = 32
 
 
-def simhash_spark(hs_col: str = "ths", bits: int = SIMHASH_BITS) -> str:
+def simhash_spark(hs_col: str = "ths") -> str:
     terms = []
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         vote = (
             f"aggregate({hs_col}, 0L, (acc, h) -> acc + (case when (h >> {b}) & 1 = 1 then 1 else -1 end))"
         )
@@ -300,9 +301,9 @@ def simhash_spark(hs_col: str = "ths", bits: int = SIMHASH_BITS) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def simhash_duck(hs_col: str = "ths", bits: int = SIMHASH_BITS) -> str:
+def simhash_duck(hs_col: str = "ths") -> str:
     terms = []
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         vote = f"list_sum(list_transform({hs_col}, h -> case when (h >> {b}) & 1 = 1 then 1 else -1 end))"
         terms.append(f"(case when {vote} > 0 then cast({1 << b} as bigint) else 0 end)")
     return "(" + " + ".join(terms) + ")"

@@ -137,22 +137,23 @@ def regroup_sorted(rows: np.ndarray, vals: np.ndarray, n: int) -> list[list]:
     return [vals[bounds[i] : bounds[i + 1]].tolist() for i in range(n)]
 
 
-@pandas_udf(ArrayType(LongType()))
-def _edge_cover_build(ax: pd.Series, ay: pd.Series, az: pd.Series,
-                      bx: pd.Series, by: pd.Series, bz: pd.Series) -> pd.Series:
-    a = np.stack([ax.to_numpy(), ay.to_numpy(), az.to_numpy()], axis=1)
-    b = np.stack([bx.to_numpy(), by.to_numpy(), bz.to_numpy()], axis=1)
-    rows, cells = edge_coverings(a, b, thicken=True)
-    return pd.Series(regroup_sorted(rows, cells.view(np.int64), len(a)))
+def _edge_cover(thicken: bool):
+    """The per-edge covering UDF: build side thickened, query side not
+    (S2EdgeIndex.getCovering, S2EdgeIndex.java:305-374)."""
+
+    def cover(ax: pd.Series, ay: pd.Series, az: pd.Series,
+              bx: pd.Series, by: pd.Series, bz: pd.Series) -> pd.Series:
+        a = np.stack([ax.to_numpy(), ay.to_numpy(), az.to_numpy()], axis=1)
+        b = np.stack([bx.to_numpy(), by.to_numpy(), bz.to_numpy()], axis=1)
+        rows, cells = edge_coverings(a, b, thicken=thicken)
+        return pd.Series(regroup_sorted(rows, cells.view(np.int64), len(a)))
+
+    cover.__name__ = "_edge_cover_build" if thicken else "_edge_cover_query"
+    return pandas_udf(cover, ArrayType(LongType()))
 
 
-@pandas_udf(ArrayType(LongType()))
-def _edge_cover_query(ax: pd.Series, ay: pd.Series, az: pd.Series,
-                      bx: pd.Series, by: pd.Series, bz: pd.Series) -> pd.Series:
-    a = np.stack([ax.to_numpy(), ay.to_numpy(), az.to_numpy()], axis=1)
-    b = np.stack([bx.to_numpy(), by.to_numpy(), bz.to_numpy()], axis=1)
-    rows, cells = edge_coverings(a, b, thicken=False)
-    return pd.Series(regroup_sorted(rows, cells.view(np.int64), len(a)))
+_edge_cover_build = _edge_cover(thicken=True)
+_edge_cover_query = _edge_cover(thicken=False)
 
 
 def _explode_cover(edges: DataFrame, cover_udf, id_col: str) -> DataFrame:
@@ -162,16 +163,14 @@ def _explode_cover(edges: DataFrame, cover_udf, id_col: str) -> DataFrame:
     ).select(id_col, "ax", "ay", "az", "bx", "by", "bz", F.explode("_cover").alias("cell"))
 
 
-def crossing_candidates(edges: DataFrame, id_col: str = "edge_id",
-                        levels: list[int] | None = None) -> DataFrame:
+def crossing_candidates(edges: DataFrame, id_col: str = "edge_id") -> DataFrame:
     """Self-join candidate crossing pairs (id_a < id_b) over an edges
     DataFrame with columns (edge_id, ax..az, bx..bz).
 
     Pair (i, q) is a candidate when i's build-covering cell and q's
     query-covering cell are in ancestor/descendant relation — realized as
-    two ancestor-explode equi-joins over the distinct covering levels."""
-    if levels is None:
-        levels = list(range(0, 31))
+    two ancestor-explode equi-joins over every level 0..30."""
+    levels = range(ck.MAX_LEVEL + 1)
     build = _explode_cover(edges, _edge_cover_build, id_col).select(
         F.col(id_col).alias("id_b_"), F.col("cell").alias("bcell")
     )

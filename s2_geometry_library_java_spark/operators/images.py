@@ -192,27 +192,3 @@ def resize_images(images: DataFrame, target: int = 16) -> DataFrame:
             )
 
     return images.mapInPandas(it, schema)
-
-
-def sample_video_frames(videos: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame sampling — now a REAL operator: see operators/video.py
-    (deterministic frame-concatenated codec in sources/video.py, every-Nth
-    frame explode + per-frame PSNR verification, gated by the
-    ``video_frames`` golden oracle).  Thin alias keeping the round-2 call
-    site importable."""
-    from s2_geometry_library_java_spark.operators.video import (
-        sample_video_frames as _sample,
-    )
-
-    return _sample(videos, every_n)
-
-
-def audio_features(audio: DataFrame, window_ms: int = 25) -> DataFrame:
-    """Audio windowed feature extraction — now a REAL operator: see
-    operators/audio.py (deterministic PCM codec in sources/audio.py,
-    grouped-matrix windowed RMS/ZCR/flux + SNR invariant, gated by the
-    ``audio_stats`` golden oracle).  This thin alias keeps the round-2 call
-    site importable."""
-    from s2_geometry_library_java_spark.operators.audio import audio_stats
-
-    return audio_stats(audio, window_ms=window_ms)

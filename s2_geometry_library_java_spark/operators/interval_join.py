@@ -95,22 +95,3 @@ def interval_overlap_join(
         (F.col(ts_col) >= F.col(start_col)) & (F.col(ts_col) <= F.col(end_col))
     )
     return joined.drop("__b")
-
-
-def interval_overlap_sql(
-    points_sql: str,
-    intervals_sql: str,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    start_col: str = "start_ts",
-    end_col: str = "end_ts",
-    select: str = "p.*, i.*",
-) -> str:
-    """DuckDB twin: the plain range join states the semantics the bucketed
-    plan must reproduce exactly."""
-    return f"""
-SELECT {select}
-FROM ({points_sql}) p JOIN ({intervals_sql}) i
-  ON p.{key_col} = i.{key_col}
- AND p.{ts_col} >= i.{start_col} AND p.{ts_col} <= i.{end_col}
-"""

@@ -1,8 +1,9 @@
 """The spatial assign/refine join: point-in-region at DataFrame scale.
 
 Three candidate-generation arms, each an image of a reference index query.
-``pip_join``'s default ``strategy="auto"`` picks one (choose_strategy); any
-arm can also be asked for by name.
+``pip_join``'s default ``strategy="auto"`` picks one (choose_strategy); the
+two broadcast arms can also be asked for by name, and the shuffled arm by
+``broadcast_cells=False``.
 
 - **range join** (``strategy="range"``, assign_candidates):
   ``biased(cell_id) BETWEEN biased(range_min) AND biased(range_max)``
@@ -19,12 +20,13 @@ arm can also be asked for by name.
   ``np.searchsorted`` per fact batch maps each leaf id to its segment (an
   int32), and a broadcast equi-join on the segment id expands to
   candidates.  O(log B) per row instead of the BNLJ's O(B), and no
-  fact-side row amplification.  No shuffle, so hot cells cannot skew
-  anything.  Broadcast-only like "range".
+  fact-side row amplification; raw points are encoded and stabbed in the
+  same Arrow hop.  No shuffle, so hot cells cannot skew anything.
+  Broadcast-only like "range".
 
-- **prefix-partitioned interval join** (``strategy="prefix"``, the 100-TB
-  arm, auto-chosen whenever the covering must not be broadcast): the
-  parent-cell probe of S2EdgeIndex.getEdgesInParentCells
+- **prefix-partitioned interval join** (``broadcast_cells=False``, the
+  100-TB arm, also auto-chosen for ``salt`` or a covering too big to
+  broadcast): the parent-cell probe of S2EdgeIndex.getEdgesInParentCells
   (S2EdgeIndex.java:422-441) collapsed to ONE level-A ancestor key per
   probe row (no fan-out), the covering replicated to the same prefixes, a
   shuffled hash equi-join on the packed BIGINT prefix with exact interval
@@ -144,32 +146,63 @@ def _stab_structure(rows: list[tuple]) -> tuple[np.ndarray, list[tuple]]:
     return bounds, seg_rows
 
 
+_CELL_SEG_TYPE = StructType(
+    [StructField("cell", LongType(), False), StructField("seg", IntegerType(), False)]
+)
+
+
 def stab_candidates(
     points: DataFrame,
     covering: list[tuple],
+    lat_col: str = "lat",
+    lng_col: str = "lng",
     cell_col: str = "cell_id",
 ) -> DataFrame:
     """Candidate pairs via the vectorized S2CellUnion.contains binary search
-    (see module docstring).  Keeps all point columns plus ``polygon_id`` and
-    ``is_interior``; points outside every covering interval drop out in the
-    broadcast equi-join (inner, same semantics as the other strategies)."""
+    (see module docstring).  Keeps all point columns plus ``cell_col``,
+    ``polygon_id`` and ``is_interior``; points outside every covering
+    interval drop out in the broadcast equi-join (inner, same semantics as
+    the other strategies).
+
+    One Arrow hop either way: pre-encoded points (``cell_col`` present)
+    send their 8-byte id through ``seg_of`` and get the int32 segment back;
+    raw points send (lat, lng) through ``cell_seg``, which encodes and
+    stabs in one pass and returns (cell_id, segment) together."""
     bounds, seg_rows = _stab_structure(covering)
 
-    @pandas_udf(IntegerType())
-    def seg_of(cid: pd.Series) -> pd.Series:
-        b = cid.to_numpy(dtype=np.int64).view(np.uint64) ^ _U64_BIAS
-        seg = np.searchsorted(bounds, b, side="right") - 1
-        return pd.Series(seg.astype(np.int32))
+    def seg(ids: np.ndarray) -> np.ndarray:
+        return (np.searchsorted(bounds, ids ^ _U64_BIAS, side="right") - 1).astype(np.int32)
 
-    spark = points.sparkSession
-    seg_df = spark.createDataFrame(
+    if cell_col in points.columns:
+
+        @pandas_udf(IntegerType())
+        def seg_of(cid: pd.Series) -> pd.Series:
+            return pd.Series(seg(cid.to_numpy(dtype=np.int64).view(np.uint64)))
+
+        pts, seg_col = points, seg_of(F.col(cell_col))
+    else:
+        from s2_geometry_library_java_spark.kernel import cellid as ck
+
+        @pandas_udf(_CELL_SEG_TYPE)
+        def cell_seg(lat_s: pd.Series, lng_s: pd.Series) -> pd.DataFrame:
+            ids = ck.from_latlng_degrees(
+                lat_s.to_numpy(dtype=np.float64), lng_s.to_numpy(dtype=np.float64)
+            )
+            return pd.DataFrame({"cell": ids.view(np.int64), "seg": seg(ids)})
+
+        pts = (
+            points.withColumn("_cs", cell_seg(F.col(lat_col), F.col(lng_col)))
+            .withColumn(cell_col, F.col("_cs.cell"))
+            .withColumn("_seg", F.col("_cs.seg"))
+            .drop("_cs")
+        )
+        seg_col = F.col("_seg")
+    seg_df = points.sparkSession.createDataFrame(
         seg_rows, "_seg int, polygon_id string, is_interior boolean"
     )
     # coalesce marks _seg non-null so the join's inferred IsNotNull doesn't
     # re-evaluate the UDF (same Catalyst trap as with_cell_id).
-    pts = points.withColumn(
-        "_seg", F.coalesce(seg_of(F.col(cell_col)), F.lit(-1))
-    )
+    pts = pts.withColumn("_seg", F.coalesce(seg_col, F.lit(-1)))
     return pts.join(F.broadcast(seg_df), "_seg", "inner").drop("_seg")
 
 
@@ -720,48 +753,6 @@ def choose_strategy(covering: list[tuple], n_rows: int | None = None) -> str:
     return "range" if n_cells <= RANGE_BREAKEVEN_CELLS else "stab"
 
 
-_CELL_SEG_TYPE = StructType(
-    [StructField("cell", LongType(), False), StructField("seg", IntegerType(), False)]
-)
-
-
-def stab_candidates_fused(
-    points: DataFrame,
-    covering: list[tuple],
-    lat_col: str = "lat",
-    lng_col: str = "lng",
-    cell_col: str = "cell_id",
-) -> DataFrame:
-    """Encode + interval-stab in ONE Arrow hop: a struct UDF returns
-    (cell_id, segment) together, so un-encoded points pay a single Python
-    round trip instead of encode-hop + seg-hop.  Identical results to
-    with_cell_id + stab_candidates (same kernel, same searchsorted)."""
-    from s2_geometry_library_java_spark.kernel import cellid as ck
-
-    bounds, seg_rows = _stab_structure(covering)
-
-    @pandas_udf(_CELL_SEG_TYPE)
-    def cell_seg(lat_s: pd.Series, lng_s: pd.Series) -> pd.DataFrame:
-        ids = ck.from_latlng_degrees(
-            lat_s.to_numpy(dtype=np.float64), lng_s.to_numpy(dtype=np.float64)
-        )
-        seg = np.searchsorted(bounds, ids ^ _U64_BIAS, side="right") - 1
-        return pd.DataFrame({"cell": ids.view(np.int64), "seg": seg.astype(np.int32)})
-
-    spark = points.sparkSession
-    seg_df = spark.createDataFrame(
-        seg_rows, "_seg int, polygon_id string, is_interior boolean"
-    )
-    pts = (
-        points.withColumn("_cs", cell_seg(F.col(lat_col), F.col(lng_col)))
-        .withColumn(cell_col, F.col("_cs.cell"))
-        # coalesce marks the join key non-null (see with_cell_id)
-        .withColumn("_seg", F.coalesce(F.col("_cs.seg"), F.lit(-1)))
-        .drop("_cs")
-    )
-    return pts.join(F.broadcast(seg_df), "_seg", "inner").drop("_seg")
-
-
 def pip_join(
     points: DataFrame,
     layers: list[Layer],
@@ -778,16 +769,17 @@ def pip_join(
     """points x layers -> rows of points matched with ``polygon_id``.
 
     The layers are covered with JOIN_COVERING (covering.py).  ``strategy``
-    is ``"auto"`` (default), ``"range"``, ``"stab"`` or ``"prefix"``.
-    ``"auto"`` applies the I2 cost model: coverings up to the measured
-    breakeven take the zero-Python broadcast range join, larger
-    broadcastable ones the vectorized interval-stab lookup; a shuffled or
-    salted request (``broadcast_cells=False`` or ``salt``) — or a covering
-    too big to broadcast — takes the prefix-partitioned interval join.
-    range/stab are broadcast-only by construction, so asking either for
-    ``broadcast_cells=False`` or ``salt`` raises.  ``n_rows`` is an optional
-    fact-side row-count hint (exact or estimated) that lets the model keep
-    small fact tables on the range path above the cell breakeven.
+    is ``"auto"`` (default), ``"range"`` or ``"stab"``.  ``"auto"`` applies
+    the I2 cost model: coverings up to the measured breakeven take the
+    zero-Python broadcast range join, larger broadcastable ones the
+    vectorized interval-stab lookup; a shuffled or salted request
+    (``broadcast_cells=False`` or ``salt``) — or a covering too big to
+    broadcast — takes the prefix-partitioned interval join, which has no
+    strategy name of its own.  range/stab are broadcast-only by
+    construction, so asking either for ``broadcast_cells=False`` or
+    ``salt`` raises.  ``n_rows`` is an optional fact-side row-count hint
+    (exact or estimated) that lets the model keep small fact tables on the
+    range path above the cell breakeven.
 
     ``covering_frame``: an already-built covering DataFrame in
     COVERING_SCHEMA shape (typically ``covering_df_distributed(...,
@@ -799,16 +791,16 @@ def pip_join(
     ``"auto"`` bounded-collect IN-set→semi→bloom escalation / ``"semi"``
     fully lazy broadcast semi / ``"bloom"`` fully lazy fixed-size Bloom
     bitmap; see prefix_candidates_df."""
-    if strategy not in ("auto", "range", "stab", "prefix"):
+    if strategy not in ("auto", "range", "stab"):
         raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy in ("range", "stab") and (salt or not broadcast_cells):
+    if strategy != "auto" and (salt or not broadcast_cells):
         raise ValueError(
             f"strategy {strategy!r} broadcasts the covering; broadcast_cells=False "
-            "and salt need the 'auto' or 'prefix' strategy"
+            "and salt need the 'auto' strategy"
         )
     if covering_frame is not None:
-        if strategy not in ("auto", "prefix"):
-            raise ValueError("covering_frame requires the prefix strategy")
+        if strategy != "auto":
+            raise ValueError("covering_frame takes the prefix arm, which needs strategy='auto'")
         pts = with_cell_id(points, lat_col, lng_col, cell_col)
         cand = prefix_candidates_df(pts, covering_frame, cell_col, salt, prune=prune)
         return refine_candidates(cand, layers, lat_col, lng_col).drop("is_interior")
@@ -823,10 +815,8 @@ def pip_join(
     if strategy == "prefix":
         pts = with_cell_id(points, lat_col, lng_col, cell_col)
         cand = prefix_candidates(pts, rows, cell_col, salt)
-    elif strategy == "stab" and cell_col not in points.columns:
-        cand = stab_candidates_fused(points, rows, lat_col, lng_col, cell_col)
     elif strategy == "stab":
-        cand = stab_candidates(points, rows, cell_col)
+        cand = stab_candidates(points, rows, lat_col, lng_col, cell_col)
     else:
         pts = with_cell_id(points, lat_col, lng_col, cell_col)
         cells_df = points.sparkSession.createDataFrame(rows, COVERING_SCHEMA)

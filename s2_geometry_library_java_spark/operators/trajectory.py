@@ -42,9 +42,9 @@ from s2_geometry_library_java_spark.kernel import metrics
 LONG_STEP_LEVEL = 0
 
 
-def long_step_threshold_rad(level: int = LONG_STEP_LEVEL) -> float:
-    """Max cell-edge angle (radians) at ``level`` — the long-step cutoff."""
-    return metrics.MAX_EDGE.get_value(level)
+def long_step_threshold_rad() -> float:
+    """Max cell-edge angle (radians) at LONG_STEP_LEVEL — the long-step cutoff."""
+    return metrics.MAX_EDGE.get_value(LONG_STEP_LEVEL)
 
 
 def trajectory_stats(
@@ -52,11 +52,10 @@ def trajectory_stats(
     user_col: str = "user_id",
     ts_col: str = "ts",
     key_col: str = "event_id",
-    long_step_level: int = LONG_STEP_LEVEL,
 ) -> DataFrame:
     """Per-user path rollup: event count, total/max step distance
-    (BIGINT nano-radians), and the count of level-``long_step_level``
-    long steps.
+    (BIGINT nano-radians), and the count of level-LONG_STEP_LEVEL long
+    steps.
 
     GEOTAG KEY DOMAIN: ``key_col`` feeds the synthetic geotag hash, so
     |key| must stay below ~3.47e9 (see s2_geotag_lat); real deployments
@@ -70,7 +69,7 @@ def trajectory_stats(
         F.col(user_col), "lat", "lng", F.lag("lat").over(w).alias("plat"), F.lag("lng").over(w).alias("plng")
     )
     step = F.expr(haversine_sql("plat", "plng", "lat", "lng"))
-    thresh = long_step_threshold_rad(long_step_level)
+    thresh = long_step_threshold_rad()
     stepped = lagged.select(
         F.col(user_col),
         F.round(step * F.lit(1e9)).cast("bigint").alias("step_nrad"),
@@ -89,12 +88,11 @@ def trajectory_stats_sql(
     ts_col: str = "ts",
     key_col: str = "event_id",
     table: str = "events",
-    long_step_level: int = LONG_STEP_LEVEL,
 ) -> str:
     """DuckDB twin of :func:`trajectory_stats` — identical expression trees
     (shared geotag/haversine SQL text), identical fixed-point aggregation."""
     step = haversine_sql("plat", "plng", "lat", "lng")
-    thresh = repr(long_step_threshold_rad(long_step_level))
+    thresh = repr(long_step_threshold_rad())
     return f"""
 WITH pts AS (
   SELECT {user_col},

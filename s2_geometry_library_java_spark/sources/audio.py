@@ -84,17 +84,14 @@ def caption_for(i: np.ndarray) -> pd.Series:
     return pd.Series([f"audio {int(k):010d} {a} {b}" for k, a, b in zip(i, wa, wb)])
 
 
-def audio_pandas(start: int, end: int, with_bytes: bool = True) -> pd.DataFrame:
+def audio_pandas(start: int, end: int) -> pd.DataFrame:
     """Rows [start, end) of the audio table as a pandas DataFrame."""
     i = np.arange(start, end, dtype=np.int64)
     n, rate, lossy = row_meta(i)
-    if with_bytes:
-        data = [
-            encode_samples(source_samples(int(k), int(nk)), bool(lk))
-            for k, nk, lk in zip(i, n, lossy)
-        ]
-    else:
-        data = [b""] * len(i)
+    data = [
+        encode_samples(source_samples(int(k), int(nk)), bool(lk))
+        for k, nk, lk in zip(i, n, lossy)
+    ]
     return pd.DataFrame(
         {
             "audio_id": [f"aud{int(k):010d}" for k in i],
@@ -109,7 +106,7 @@ def audio_pandas(start: int, end: int, with_bytes: bool = True) -> pd.DataFrame:
 
 
 def synthetic_audio(
-    spark: SparkSession, n: int, partitions: int | None = None, with_bytes: bool = True
+    spark: SparkSession, n: int, partitions: int | None = None
 ) -> DataFrame:
     """Distributed generation: spark.range drives mapInPandas so each
     partition materializes only its own slice — scales to any n."""
@@ -119,6 +116,6 @@ def synthetic_audio(
         for pdf in batches:
             ids = pdf["id"].to_numpy()
             if len(ids):
-                yield audio_pandas(int(ids.min()), int(ids.max()) + 1, with_bytes)
+                yield audio_pandas(int(ids.min()), int(ids.max()) + 1)
 
     return rng.mapInPandas(gen, schema=AUDIO_SCHEMA)

@@ -108,7 +108,7 @@ def images_pandas(start: int, end: int, with_bytes: bool = True) -> pd.DataFrame
 
 
 def synthetic_images(
-    spark: SparkSession, n: int, partitions: int | None = None, with_bytes: bool = True
+    spark: SparkSession, n: int, partitions: int | None = None
 ) -> DataFrame:
     """Distributed generation: spark.range drives mapInPandas so each
     partition materializes only its own slice — scales to any n."""
@@ -118,7 +118,7 @@ def synthetic_images(
         for pdf in batches:
             ids = pdf["id"].to_numpy()
             if len(ids):
-                yield images_pandas(int(ids.min()), int(ids.max()) + 1, with_bytes)
+                yield images_pandas(int(ids.min()), int(ids.max()) + 1)
 
     return rng.mapInPandas(gen, schema=IMAGES_SCHEMA)
 

@@ -98,17 +98,14 @@ def caption_for(i: np.ndarray) -> pd.Series:
     return pd.Series([f"video {int(k):010d} {a} {b}" for k, a, b in zip(i, wa, wb)])
 
 
-def videos_pandas(start: int, end: int, with_bytes: bool = True) -> pd.DataFrame:
+def videos_pandas(start: int, end: int) -> pd.DataFrame:
     """Rows [start, end) of the videos table as a pandas DataFrame."""
     i = np.arange(start, end, dtype=np.int64)
     w, h, n_frames, fps, lossy = row_meta(i)
-    if with_bytes:
-        data = [
-            encode_frames(source_frames(int(k), int(wk), int(hk), int(nk)), bool(lk))
-            for k, wk, hk, nk, lk in zip(i, w, h, n_frames, lossy)
-        ]
-    else:
-        data = [b""] * len(i)
+    data = [
+        encode_frames(source_frames(int(k), int(wk), int(hk), int(nk)), bool(lk))
+        for k, wk, hk, nk, lk in zip(i, w, h, n_frames, lossy)
+    ]
     return pd.DataFrame(
         {
             "video_id": [f"vid{int(k):010d}" for k in i],
@@ -124,7 +121,7 @@ def videos_pandas(start: int, end: int, with_bytes: bool = True) -> pd.DataFrame
 
 
 def synthetic_videos(
-    spark: SparkSession, n: int, partitions: int | None = None, with_bytes: bool = True
+    spark: SparkSession, n: int, partitions: int | None = None
 ) -> DataFrame:
     """Distributed generation: spark.range drives mapInPandas so each
     partition materializes only its own slice — scales to any n."""
@@ -134,6 +131,6 @@ def synthetic_videos(
         for pdf in batches:
             ids = pdf["id"].to_numpy()
             if len(ids):
-                yield videos_pandas(int(ids.min()), int(ids.max()) + 1, with_bytes)
+                yield videos_pandas(int(ids.min()), int(ids.max()) + 1)
 
     return rng.mapInPandas(gen, schema=VIDEO_SCHEMA)

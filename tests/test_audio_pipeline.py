@@ -100,13 +100,10 @@ def test_unknown_audio_codec_gated():
 
 
 def test_audio_features_honor_window_ms(spark, audio):
-    """The round-2 alias contract: window_ms windows by each row's own
-    sample rate (25 ms at 8 kHz = 200 samples, at 16 kHz = 400), not the
-    fixed 512-sample WINDOW."""
-    from s2_geometry_library_java_spark.operators.images import audio_features
-
+    """window_ms windows by each row's own sample rate (25 ms at 8 kHz =
+    200 samples, at 16 kHz = 400), not the fixed 512-sample WINDOW."""
     sub = audio.limit(30)
-    rows = audio_features(sub, window_ms=25).collect()
+    rows = audio_stats(sub, window_ms=25).collect()
     assert rows
     meta = {r["audio_id"]: r for r in sub.collect()}
     for r in rows:

@@ -85,6 +85,26 @@ def test_point_roundtrip_mass():
     assert (c.from_xyz(c.to_point_raw(ids)) == ids).all()
 
 
+def test_chunked_entry_points_match_one_block():
+    # Past 2 * _CHUNK rows each entry point runs its block kernel one chunk
+    # at a time (here two full chunks and a 7-row tail); the chunk seams
+    # must not change a bit of the output.
+    n = 2 * c._CHUNK + 7
+    ids = random_cell_ids(n)
+    xyz = RNG.normal(size=(n, 3))
+    lat = RNG.uniform(-np.pi / 2, np.pi / 2, size=n)
+    lng = RNG.uniform(-np.pi, np.pi, size=n)
+    cases = [
+        (c.to_point_raw(ids), c._to_point_raw_block(ids)),
+        (c.to_point(ids), c._to_point_block(ids)),
+        (c.from_xyz(xyz), c._from_xyz_block(xyz)),
+        (c.from_latlng_radians(lat, lng), c._from_latlng_radians_block(lat, lng)),
+    ]
+    for got, want in cases:
+        assert got.dtype == want.dtype and got.shape == want.shape
+        assert got.tobytes() == want.tobytes()
+
+
 def test_tokens_goldens():
     # S2CellIdTest.testToToken (:101-104)
     assert c.to_token(np.array([266], dtype=np.uint64))[0] == "000000000000010a"

@@ -47,10 +47,17 @@ def points_pdf(points):
     return points.toPandas()
 
 
-@pytest.mark.parametrize("strategy", ["range", "stab", "prefix"])
-def test_pip_join_matches_bruteforce(points, points_pdf, strategy):
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        pytest.param({"strategy": "range"}, id="range"),
+        pytest.param({"strategy": "stab"}, id="stab"),
+        pytest.param({"broadcast_cells": False}, id="prefix"),
+    ],
+)
+def test_pip_join_matches_bruteforce(points, points_pdf, kwargs):
     layers = make_layers()
-    result = pip_join(points, layers, strategy=strategy)
+    result = pip_join(points, layers, **kwargs)
     got = {(int(r["point_id"]), r["polygon_id"]) for r in result.select("point_id", "polygon_id").collect()}
     assert got == oracle_matches(points_pdf, layers)
 
@@ -70,12 +77,13 @@ def test_unknown_strategy_rejected(points):
     cases = [
         ({"strategy": "ancestor"}, "unknown strategy"),
         ({"strategy": "bnlj"}, "unknown strategy"),
+        ({"strategy": "prefix"}, "unknown strategy"),
         ({"strategy": "range", "broadcast_cells": False}, "broadcasts the covering"),
         ({"strategy": "stab", "broadcast_cells": False}, "broadcasts the covering"),
         ({"strategy": "range", "salt": 4}, "broadcasts the covering"),
         ({"strategy": "stab", "salt": 4}, "broadcasts the covering"),
         ({"prune": "semi"}, "covering_frame"),
-        ({"strategy": "prefix", "prune": "bloom"}, "covering_frame"),
+        ({"broadcast_cells": False, "prune": "bloom"}, "covering_frame"),
     ]
     for kwargs, match in cases:
         with pytest.raises(ValueError, match=match):
@@ -230,7 +238,7 @@ def test_prefix_in_filter_semi_join_branch(points, points_pdf, monkeypatch):
     pj = importlib.import_module("s2_geometry_library_java_spark.operators.pip_join")
     monkeypatch.setattr(pj, "PREFIX_IN_FILTER_MAX", 1)
     layers = make_layers()
-    result = pj.pip_join(points, layers, strategy="prefix", broadcast_cells=False)
+    result = pj.pip_join(points, layers, broadcast_cells=False)
     plan = result._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan  # the middle-rung prune is in the executed plan
     assert " IN (" not in plan  # and the literal IN-set is gone

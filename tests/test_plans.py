@@ -87,11 +87,11 @@ def test_auto_strategy_row_hint(spark, points):
     from s2_geometry_library_java_spark.operators.covering import covering_rows
     from s2_geometry_library_java_spark.operators.pip_join import choose_strategy
 
-    cov56 = covering_rows(ALL_LAYERS, max_cells=8, min_level=0, max_level=12, level_mod=1)
+    cov56 = covering_rows(ALL_LAYERS, max_cells=8, max_level=12)
     assert choose_strategy(cov56, n_rows=8_000_000) == "range"
     assert choose_strategy(cov56, n_rows=128_000_000) == "stab"
     assert choose_strategy(cov56, n_rows=None) == "stab"
-    big = covering_rows(ALL_LAYERS, max_cells=256, min_level=0, max_level=14, level_mod=1)
+    big = covering_rows(ALL_LAYERS, max_cells=256, max_level=14)
     assert len(big) > 1000
     assert choose_strategy(big, n_rows=10_000) == "range"
     assert choose_strategy(big, n_rows=1_000_000_000) == "stab"
@@ -232,7 +232,7 @@ def test_prefix_arm_encodes_once(spark, points, images, source, prune):
     if prune is None:
         df = pip_join(enc, ALL_LAYERS, broadcast_cells=False)
     else:
-        cov = covering_df(spark, ALL_LAYERS, max_cells=8, min_level=0, max_level=12)
+        cov = covering_df(spark, ALL_LAYERS, max_cells=8, max_level=12)
         df = pip_join(enc, ALL_LAYERS, covering_frame=cov, prune=prune)
     assert _hops(df, udf) == 1
     assert _hops(df, "parity_contains") == 1

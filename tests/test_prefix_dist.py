@@ -73,7 +73,7 @@ def test_prefix_df_matches_bruteforce_and_list_arm(spark, points, points_pdf, sa
         for r in result.select("point_id", "polygon_id").collect()
     }
     assert got == oracle_matches(points_pdf, layers)
-    list_arm = pip_join(points, layers, strategy="prefix", broadcast_cells=False, salt=salt)
+    list_arm = pip_join(points, layers, broadcast_cells=False, salt=salt)
     expect = {
         (int(r["point_id"]), r["polygon_id"])
         for r in list_arm.select("point_id", "polygon_id").collect()
