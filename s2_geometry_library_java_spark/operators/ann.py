@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, IntegerType
 
+from s2_geometry_library_java_spark.session import local_frame
+
 LSH_BITS = 8
 LSH_TABLES = 4
 LSH_SEED = 20260816
@@ -405,7 +407,7 @@ def embedding_neardup(
                     for v in range(u if i == j else 0, int(salts[j])):
                         pair_rows.append((i, u, j, v))
     spark = embeddings.sparkSession
-    pairs = spark.createDataFrame(pair_rows, "ba int, sa int, bb int, sb int")
+    pairs = local_frame(spark, pair_rows, "ba int, sa int, bb int, sb int")
 
     salt_arr = F.array(*[F.lit(int(s)) for s in salts])
     pts = pts.withColumn(
@@ -530,7 +532,7 @@ def _qdf_from_collected(sess, qids: np.ndarray, Q_raw: list, id_col: str):
     array<double>; ``cosine_expr`` casts elements to double on both sides,
     so the re-rank arithmetic is bit-identical to joining the raw column."""
     rows = [(int(qid), [float(x) for x in vec]) for qid, vec in zip(qids, Q_raw)]
-    return sess.createDataFrame(rows, "query_id long, qvec array<double>")
+    return local_frame(sess, rows, "query_id long, qvec array<double>")
 
 
 def _exact_rerank(
@@ -672,8 +674,8 @@ def pq_cosine_topk(
         id_col, F.posexplode(adc(F.col("pq_codes"))).alias("_qpos", "_approx")
     )
     sess = embeddings.sparkSession
-    qmap = sess.createDataFrame(
-        [(int(i), int(qid)) for i, qid in enumerate(qids)], "_qpos int, query_id long"
+    qmap = local_frame(
+        sess, [(int(i), int(qid)) for i, qid in enumerate(qids)], "_qpos int, query_id long"
     )
     pairs = pairs.join(F.broadcast(qmap), "_qpos").filter(F.col(id_col) != F.col("query_id"))
     if shortlist is not None:
@@ -743,7 +745,8 @@ def ivfpq_cosine_topk(
     # query side: probe list per query, broadcast (nq * n_probe rows)
     probes = np.argsort(-(Qn @ Cn.T), axis=1)[:, :n_probe]
     sess = embeddings.sparkSession
-    probe_df = sess.createDataFrame(
+    probe_df = local_frame(
+        sess,
         [(int(qid), int(c)) for qi, qid in enumerate(qids) for c in probes[qi]],
         "query_id long, _cell int",
     )
@@ -780,17 +783,17 @@ def pq_pack_expr(codes_col: str = "pq_codes", m: int = PQ_M, ksub: int = PQ_KSUB
     return f"({terms})"
 
 
-def pq_unpack_expr(packed_col: str = "pq_packed", m: int = PQ_M, ksub: int = PQ_KSUB) -> str:
-    """Native SQL inverse of ``pq_pack_expr``: array<int> of the m codes
+def pq_unpack_expr(packed_col: str = "pq_packed") -> str:
+    """Native SQL inverse of ``pq_pack_expr``: array<int> of the PQ_M codes
     via shift+mask — the ADC scan can read the packed BIGINT column and
     unpack inside codegen, no Python touch.  Codes equal implies ADC
     equal (ADC is a pure function of the codes), so the round-trip gate in
     tests/test_ann_pq.py is the storage-losslessness proof."""
     import math
 
-    bits = int(math.ceil(math.log2(ksub)))
+    bits = int(math.ceil(math.log2(PQ_KSUB)))
     mask = (1 << bits) - 1
     return (
-        f"transform(sequence(0, {m - 1}), "
+        f"transform(sequence(0, {PQ_M - 1}), "
         f"j -> cast((shiftright({packed_col}, j * {bits}) & {mask}) as int))"
     )

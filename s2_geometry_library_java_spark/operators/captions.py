@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from s2_geometry_library_java_spark.operators.layers import Layer
 from s2_geometry_library_java_spark.operators.pip_join import membership_expr
+from s2_geometry_library_java_spark.session import local_frame
 
 # Caption grammar of the synthetic corpus (sources/images.caption_for):
 #   "caption <10-digit id> <word_a> <word_b>"
@@ -69,9 +70,7 @@ def extract_mentions(
 
 def gazetteer_df(spark, word_to_layer: dict[str, str]) -> DataFrame:
     """The word→polygon_id dimension as a (broadcastable) DataFrame."""
-    return spark.createDataFrame(
-        sorted(word_to_layer.items()), "word string, polygon_id string"
-    )
+    return local_frame(spark, sorted(word_to_layer.items()), "word string, polygon_id string")
 
 
 def caption_region_join(

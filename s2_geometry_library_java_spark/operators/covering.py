@@ -23,6 +23,7 @@ from pyspark.sql.types import BooleanType, IntegerType, LongType, StringType, St
 from s2_geometry_library_java_spark.geometry import S2Cell, S2RegionCoverer
 from s2_geometry_library_java_spark.kernel import cellid as ck
 from s2_geometry_library_java_spark.operators.layers import Layer
+from s2_geometry_library_java_spark.session import local_frame
 
 COVERING_SCHEMA = StructType(
     [
@@ -107,7 +108,7 @@ def covering_df(
     max_level: int = ck.MAX_LEVEL,
 ) -> DataFrame:
     rows = covering_rows(layers, max_cells, max_level)
-    return spark.createDataFrame(rows, COVERING_SCHEMA)
+    return local_frame(spark, rows, COVERING_SCHEMA)
 
 
 def covering_df_distributed(
@@ -130,7 +131,7 @@ def covering_df_distributed(
     import pandas as pd
 
     spec_rows = [(s["polygon_id"], json.dumps(s)) for s in layer_specs]
-    df = spark.createDataFrame(spec_rows, "polygon_id string, spec string")
+    df = local_frame(spark, spec_rows, "polygon_id string, spec string")
 
     def per_layer(pdf: pd.DataFrame) -> pd.DataFrame:
         from s2_geometry_library_java_spark.operators.layers import cap_layer, loop_layer, polygon_layer, rect_layer

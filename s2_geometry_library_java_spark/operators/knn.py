@@ -29,12 +29,14 @@ from s2_geometry_library_java_spark.functions.udfs import s2_vertex_neighbors_ud
 from s2_geometry_library_java_spark.kernel import cellid as ck
 from s2_geometry_library_java_spark.kernel import metrics
 from s2_geometry_library_java_spark.operators.pip_join import with_cell_id
+from s2_geometry_library_java_spark.session import local_frame
 
 
 def _as_query_df(points: DataFrame, queries) -> DataFrame:
     if isinstance(queries, DataFrame):
         return queries
-    return points.sparkSession.createDataFrame(
+    return local_frame(
+        points.sparkSession,
         [(str(q[0]), float(q[1]), float(q[2])) for q in queries],
         "query_id string, qlat double, qlng double",
     )

@@ -74,6 +74,7 @@ from s2_geometry_library_java_spark.functions.native import (
 from s2_geometry_library_java_spark.functions.udfs import _s2_cell_id_once
 from s2_geometry_library_java_spark.operators.covering import COVERING_SCHEMA, JOIN_COVERING, covering_rows
 from s2_geometry_library_java_spark.operators.layers import Layer
+from s2_geometry_library_java_spark.session import local_frame
 
 
 def with_cell_id(points: DataFrame, lat_col: str = "lat", lng_col: str = "lng", cell_col: str = "cell_id") -> DataFrame:
@@ -197,8 +198,8 @@ def stab_candidates(
             .drop("_cs")
         )
         seg_col = F.col("_seg")
-    seg_df = points.sparkSession.createDataFrame(
-        seg_rows, "_seg int, polygon_id string, is_interior boolean"
+    seg_df = local_frame(
+        points.sparkSession, seg_rows, "_seg int, polygon_id string, is_interior boolean"
     )
     # coalesce marks _seg non-null so the join's inferred IsNotNull doesn't
     # re-evaluate the UDF (same Catalyst trap as with_cell_id).
@@ -404,8 +405,10 @@ def prefix_candidates(
     _prefix_join."""
     prefix_level = _anchor_level(points, prefix_level, salt)
     pref_rows = _prefix_cover_rows(rows, prefix_level)
-    pref = points.sparkSession.createDataFrame(
-        pref_rows, "_pfx bigint, polygon_id string, _rmin bigint, _rmax bigint, is_interior boolean"
+    pref = local_frame(
+        points.sparkSession,
+        pref_rows,
+        "_pfx bigint, polygon_id string, _rmin bigint, _rmax bigint, is_interior boolean",
     )
     prefixes = sorted({r[0] for r in pref_rows})
     prune = prefixes if len(prefixes) <= PREFIX_IN_FILTER_MAX else "semi"
@@ -819,7 +822,7 @@ def pip_join(
         cand = stab_candidates(points, rows, lat_col, lng_col, cell_col)
     else:
         pts = with_cell_id(points, lat_col, lng_col, cell_col)
-        cells_df = points.sparkSession.createDataFrame(rows, COVERING_SCHEMA)
+        cells_df = local_frame(points.sparkSession, rows, COVERING_SCHEMA)
         cand = assign_candidates(pts, cells_df, cell_col)
     refined = refine_candidates(cand, layers, lat_col, lng_col)
     return refined.drop("is_interior")

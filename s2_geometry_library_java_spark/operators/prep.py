@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from s2_geometry_library_java_spark.session import local_frame
+
 KNUTH = 2654435761
 MIX_ADD = 1013904223
 HASH_MOD = 4_294_967_296  # 2^32
@@ -163,7 +165,7 @@ def global_token_offsets(
         offsets.append((b, acc))
         acc += int(totals[b])
     spark = docs.sparkSession
-    off_df = spark.createDataFrame(offsets, "bucket int, _offset long")
+    off_df = local_frame(spark, offsets, "bucket int, _offset long")
     w = (
         Window.partitionBy("bucket")
         .orderBy(key_col)

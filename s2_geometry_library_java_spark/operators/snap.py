@@ -41,6 +41,7 @@ from s2_geometry_library_java_spark.geometry.polyline import S2Polyline
 from s2_geometry_library_java_spark.kernel import cellid as ck
 from s2_geometry_library_java_spark.kernel import metrics
 from s2_geometry_library_java_spark.kernel import predicates as pr
+from s2_geometry_library_java_spark.session import local_frame
 
 
 def snap_level(radius_rad: float) -> int:
@@ -86,7 +87,7 @@ def snap_join(
             f"snap to); invalid line ids: {bad[:5]}{'...' if len(bad) > 5 else ''}"
         )
     level, rows = snap_candidate_cells(lines, radius_rad)
-    cand = F.broadcast(spark.createDataFrame(rows, "bucket long, line_id string"))
+    cand = F.broadcast(local_frame(spark, rows, "bucket long, line_id string"))
     pairs = points.withColumn("bucket", F.expr(parent_sql(col_ref(cell_col), level))).join(
         cand, "bucket"
     )

@@ -46,6 +46,7 @@ from pyspark.sql.types import (
 )
 
 from s2_geometry_library_java_spark.kernel import cellid as ck
+from s2_geometry_library_java_spark.session import local_frame
 
 MAX_VECTORIZE_LEVEL = 15  # key packing needs 3 + 2*(L+1) <= 35 bits; L<=15 is
 # plenty for raster tiles (tile levels in this engine are 5-7) and keeps the
@@ -73,7 +74,7 @@ def tiles_to_grid(tile_ids: np.ndarray, level: int) -> tuple[np.ndarray, np.ndar
 
 def raster_df(spark, rows: list[tuple[str, int, int, int]]) -> DataFrame:
     """(layer_id, face, gx, gy) rows -> DataFrame with the raster schema."""
-    return spark.createDataFrame(rows, "layer_id string, face int, gx long, gy long")
+    return local_frame(spark, rows, "layer_id string, face int, gx long, gy long")
 
 
 def uniform_raster(union, level: int) -> np.ndarray:

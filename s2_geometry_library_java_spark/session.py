@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -58,3 +59,29 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """Driver rows (tuples in schema order) -> a DataFrame planned as a
+    ``LocalRelation``; ``schema`` is a StructType or a DDL string.
+
+    ``createDataFrame(<list>)`` plans a pickled Python RDD that every job
+    over the frame runs again in Python workers, before any broadcast of
+    it.  An Arrow table typed from ``schema`` executes as a driver-local
+    ``LocalTableScan`` instead, and the planner knows its exact size.  A
+    value outside its column's Arrow type (an int32 ``int``, say) raises
+    instead of wrapping, and so does a null in a non-nullable field."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    if any(len(r) != len(arrow) for r in rows):
+        raise ValueError(f"every row needs {len(arrow)} fields: {schema.simpleString()}")
+    arrays = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
+    for a, f in zip(arrays, arrow):
+        if a.null_count and not f.nullable:
+            raise ValueError(f"field {f.name}: not nullable, but got None")
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)

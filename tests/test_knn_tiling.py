@@ -154,8 +154,8 @@ def test_knn_eager_gating(spark, sf_dir, points):
 
     def has_checkpoint_scan(df) -> bool:
         # the checkpointed candidate subtree scans an RDD whose schema
-        # carries the window columns; a plain createDataFrame query-side
-        # scan does not
+        # carries the window columns; the driver-built query table is a
+        # LocalTableScan
         plan = df._jdf.queryExecution().executedPlan().toString()
         return any(
             "_n_in_r" in cols

@@ -286,10 +286,36 @@ def test_range_join_broadcasts_benchmark_covering(spark, points):
 
     df = pip_join(points, ALL_LAYERS, strategy="range")
     assert "BroadcastNestedLoopJoin" in plan_of(df)
-    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-    (cells,) = [leaves.apply(i) for i in range(leaves.size()) if leaves.apply(i).nodeName() == "LogicalRDD"]
+    # the analyzed leaf: the optimizer folds the arm's column projection
+    # into the LocalRelation
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    (cells,) = [leaves.apply(i) for i in range(leaves.size()) if leaves.apply(i).nodeName() == "LocalRelation"]
     jds = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, cells)
     got = [tuple(r) for r in DataFrame(jds, spark).collect()]
     want = covering_rows(ALL_LAYERS, max_cells=8, max_level=12)
     assert len(want) == 56
     assert sorted(got) == sorted(want)
+
+
+@pytest.mark.parametrize(
+    "kwargs",
+    [{"strategy": "range"}, {"strategy": "stab"}, {"broadcast_cells": False}],
+    ids=["range", "stab", "prefix"],
+)
+def test_covering_is_driver_local(spark, points, kwargs):
+    # The covering side of every arm is a LocalTableScan: built on the
+    # driver, with no Python RDD (Scan ExistingRDD) for each job to run
+    # before the broadcast or shuffle.  Its size is exact, and the prefix
+    # arm's shuffle_hash hint must still beat a size-based broadcast,
+    # in the initial plan and in AQE's final plan.
+    from __spark_entry__ import ALL_LAYERS
+    from s2_geometry_library_java_spark.operators.tiling import tile_manifest
+
+    df = tile_manifest(pip_join(points, ALL_LAYERS, **kwargs))
+    initial = plan_of(df)
+    df.collect()
+    for plan in (initial, plan_of(df)):
+        assert "ExistingRDD" not in plan
+        assert [l for l in plan.splitlines() if "LocalTableScan" in l and "polygon_id" in l]
+        if "broadcast_cells" in kwargs:
+            assert "ShuffledHashJoin" in plan and "BroadcastHashJoin" not in plan
