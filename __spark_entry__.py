@@ -319,10 +319,10 @@ def q_encode_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pip_query(layers: list[Layer], strategy: str = "auto"):
+def _pip_query(layers: list[Layer]):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         pts = geotagged_points(spark, sf_dir)
-        m = pip_join(pts, layers, strategy=strategy)
+        m = pip_join(pts, layers)
         return m.select("point_id", "polygon_id")
 
     return fn
@@ -348,11 +348,12 @@ _Q_PIP_COUNTS_SQL = (
 
 
 def q_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same join as pip_join_rect but through the SALTED prefix-partitioned
-    interval join (skew machinery, SURVEY.md §4 O15/round-4 note) — must
-    produce identical rows."""
+    """Same join as pip_join_rect but through the shuffled prefix-partitioned
+    interval join, the arm whose hot prefixes AQE's skew join splits (the
+    one skew mechanism: static salting lost to it, BENCH/BASELINE.md) —
+    must produce identical rows."""
     pts = geotagged_points(spark, sf_dir)
-    m = pip_join(pts, RECT_LAYERS, broadcast_cells=False, salt=4)
+    m = pip_join(pts, RECT_LAYERS, broadcast_cells=False)
     return m.select("point_id", "polygon_id")
 
 
@@ -404,15 +405,24 @@ def q_pip_prefix_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     covering-prefix set is summarized as a fixed-size Bloom bitmap
     (bloom_bitmap/bloom_prune — bit_or-aggregated words probed by broadcast
     word-lookup joins), the pruning posture for layer dimensions whose
-    exact prefix set outgrows a broadcast.  False positives are removed by
-    the exact prefix equi-join + interval residual, so this must emit
-    exactly the pip_join_prefix rows (identical oracle)."""
+    exact prefix set outgrows a broadcast.  pip_join escalates to that rung
+    only past PREFIX_SEMI_PRUNE_MAX distinct prefixes, so this row composes
+    the arm's private steps with the rung fixed.  False positives are
+    removed by the exact prefix equi-join + interval residual, so this must
+    emit exactly the pip_join_prefix rows (identical oracle)."""
     from s2_geometry_library_java_spark.operators.covering import JOIN_COVERING, covering_df_distributed
+    from s2_geometry_library_java_spark.operators.pip_join import (
+        _anchor_level,
+        _prefix_join,
+        prefix_cover_frame,
+        refine_candidates,
+    )
 
     cover = covering_df_distributed(spark, ALL_LAYER_SPECS, **JOIN_COVERING)
-    pts = geotagged_points(spark, sf_dir)
-    m = pip_join(pts, ALL_LAYERS, covering_frame=cover, prune="bloom")
-    return m.select("point_id", "polygon_id")
+    pts = with_cell_id(geotagged_points(spark, sf_dir))
+    level = _anchor_level(pts, None)
+    cand = _prefix_join(pts, prefix_cover_frame(cover, level), "cell_id", level, "bloom")
+    return refine_candidates(cand, ALL_LAYERS).select("point_id", "polygon_id")
 
 
 def q_points_any_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2655,8 +2665,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sql_api": q_sql_api,
         "encode_rollup": q_encode_rollup,
         "pip_join_poly": _pip_query(POLY_LAYERS),
-        "pip_join_range": _pip_query(NATIVE_LAYERS, strategy="range"),
-        "pip_join_stab": _pip_query(ALL_LAYERS, strategy="stab"),
+        "pip_join_range": _pip_query(NATIVE_LAYERS),
+        "pip_join_stab": _pip_query(ALL_LAYERS),
         "pip_join_salted": q_pip_salted,
         "pip_join_prefix": q_pip_prefix,
         "knn": q_knn,

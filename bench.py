@@ -73,7 +73,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from __spark_entry__ import ALL_LAYERS, NATIVE_LAYERS, q_caption_regions
+    from __spark_entry__ import ALL_LAYERS, NATIVE_LAYERS, q_caption_regions, q_pip_prefix_bloom
     from s2_geometry_library_java_spark.operators import ann, dedup
     from s2_geometry_library_java_spark.operators.knn import knn_join
     from s2_geometry_library_java_spark.operators.pip_join import pip_join, with_cell_id
@@ -121,18 +121,14 @@ def main() -> None:
 
     matches = pip_join(enc, ALL_LAYERS, n_rows=n_points)
     n_matches = timed("pip_join", lambda: matches.count())
-    timed("pip_join_range", lambda: pip_join(enc, NATIVE_LAYERS, strategy="range").count())
+    timed("pip_join_range", lambda: pip_join(enc, NATIVE_LAYERS).count())
     # the 100-TB beyond-broadcast arms, tracked round-over-round at sf0.1
-    # (not only in ad-hoc 128M campaigns): unsalted prefix join, the
-    # salted variant (same shapes as the driver's pip_join_prefix /
-    # pip_join_salted gates), and the fully distributed covering arm
+    # (not only in ad-hoc 128M campaigns): the prefix join (same shape as
+    # the driver's pip_join_prefix gate) and the fully distributed
+    # covering arm
     timed(
         "pip_join_prefix",
         lambda: pip_join(enc, ALL_LAYERS, broadcast_cells=False).count(),
-    )
-    timed(
-        "pip_join_salted",
-        lambda: pip_join(enc, ALL_LAYERS, broadcast_cells=False, salt=4).count(),
     )
 
     from __spark_entry__ import ALL_LAYER_SPECS
@@ -144,13 +140,10 @@ def main() -> None:
 
     timed("pip_join_prefix_dist", prefix_dist_job)
 
-    def prefix_bloom_job() -> int:
-        # the terminal probe-prune rung, forced (at sf0.1 auto picks the
-        # IN-set): tracks the Bloom-bitmap build + k word-lookup probes
-        cover = covering_df_distributed(spark, ALL_LAYER_SPECS, **JOIN_COVERING)
-        return pip_join(enc, ALL_LAYERS, covering_frame=cover, prune="bloom").count()
-
-    timed("pip_join_prefix_bloom", prefix_bloom_job)
+    # the terminal probe-prune rung (at sf0.1 the escalation picks the
+    # IN-set): the driver's row tracks the Bloom-bitmap build + k
+    # word-lookup probes
+    timed("pip_join_prefix_bloom", lambda: q_pip_prefix_bloom(spark, sf_dir).count())
     timed("tile_manifest", lambda: tile_manifest(matches, tile_level=6).count())
 
     qdf = geotagged_queries(spark, sf_dir, limit=8)

@@ -94,7 +94,7 @@ def radius_join(
     fact side entirely shuffle-free.  With ``False`` — a query DataFrame too
     large to broadcast — both sides shuffle on the bucket into a sort-merge/
     shuffled-hash join; hot buckets (dense cities on both sides) are AQE
-    skew-join territory, the same story as the salted pip_join path.
+    skew-join territory, the same story as pip_join's shuffled prefix arm.
     """
     if 2.0 * radius_rad > metrics.MIN_WIDTH.get_value(0):
         raise ValueError(

@@ -1,18 +1,19 @@
 """The spatial assign/refine join: point-in-region at DataFrame scale.
 
 Three candidate-generation arms, each an image of a reference index query.
-``pip_join``'s default ``strategy="auto"`` picks one (choose_strategy); the
-two broadcast arms can also be asked for by name, and the shuffled arm by
-``broadcast_cells=False``.
+``pip_join`` picks one from its inputs: choose_strategy weighs the covering
+size and the ``n_rows`` hint between the two broadcast arms, and a layer
+side the caller cannot broadcast (``broadcast_cells=False``, or a
+``covering_frame``) takes the shuffled arm.
 
-- **range join** (``strategy="range"``, assign_candidates):
+- **range join** ("range", assign_candidates):
   ``biased(cell_id) BETWEEN biased(range_min) AND biased(range_max)``
   against a broadcast covering — literally S2CellUnion.contains
   (S2CellUnion.java:160-178) with the unsigned-compare bias of
   S2CellId.java:897-899.  Broadcast-only: Catalyst executes a non-equi join
   as BNLJ, which is fine for a small layer side and wrong otherwise.
 
-- **interval-stab** (``strategy="stab"``): the same S2CellUnion.contains
+- **interval-stab** ("stab"): the same S2CellUnion.contains
   binary search, but *actually executed as a binary search*: the
   covering's disjoint-per-layer [range_min, range_max] intervals are
   flattened driver-side into a sorted boundary array whose segments each
@@ -25,8 +26,8 @@ two broadcast arms can also be asked for by name, and the shuffled arm by
   Broadcast-only like "range".
 
 - **prefix-partitioned interval join** (``broadcast_cells=False``, the
-  100-TB arm, also auto-chosen for ``salt`` or a covering too big to
-  broadcast): the parent-cell probe of S2EdgeIndex.getEdgesInParentCells
+  100-TB arm, also chosen for a covering too big to broadcast): the
+  parent-cell probe of S2EdgeIndex.getEdgesInParentCells
   (S2EdgeIndex.java:422-441) collapsed to ONE level-A ancestor key per
   probe row (no fan-out), the covering replicated to the same prefixes, a
   shuffled hash equi-join on the packed BIGINT prefix with exact interval
@@ -39,7 +40,8 @@ two broadcast arms can also be asked for by name, and the shuffled arm by
   covering list; ``prefix_candidates_df`` (``pip_join(covering_frame=...)``)
   takes a covering DataFrame — e.g. built on executors by
   covering_df_distributed — and keeps replication + pruning entirely
-  DataFrame-native for huge layer dimensions.
+  DataFrame-native for huge layer dimensions.  A hot prefix is AQE's to
+  split (OptimizeSkewedJoin), the one skew mechanism.
 
 Every arm encodes each fact row exactly once: the engine's encode
 projections use nondeterministic twins of the encode UDFs (functions.udfs),
@@ -276,11 +278,10 @@ def _validate_prefix_level(prefix_level: int) -> None:
         )
 
 
-def _anchor_level(points: DataFrame, prefix_level: int | None, salt: int | None) -> int:
+def _anchor_level(points: DataFrame, prefix_level: int | None) -> int:
     """The prefix join's anchor level: ``prefix_level`` when given, else
     derived from spark.sql.shuffle.partitions (choose_prefix_level) — so the
-    same call scales from the laptop to the cluster.  Validated, and checked
-    to leave room for ``salt`` in the zero bits below the level-A lsb."""
+    same call scales from the laptop to the cluster.  Validated."""
     if prefix_level is None:
         try:
             parts = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions"))
@@ -288,8 +289,6 @@ def _anchor_level(points: DataFrame, prefix_level: int | None, salt: int | None)
             parts = 200
         prefix_level = choose_prefix_level(parts)
     _validate_prefix_level(prefix_level)
-    if salt and salt > (1 << (2 * (30 - prefix_level))):
-        raise ValueError(f"salt {salt} does not fit below the level-{prefix_level} lsb")
     return prefix_level
 
 
@@ -323,7 +322,6 @@ def _prefix_join(
     pref: DataFrame,
     cell_col: str,
     prefix_level: int,
-    salt: int | None,
     prune: list[int] | str,
 ) -> DataFrame:
     """The join body both prefix forms share.
@@ -334,19 +332,16 @@ def _prefix_join(
     no fan-out), and the two sides meet in a shuffled HASH equi-join on the
     packed BIGINT prefix with the exact interval containment
     ``biased(cell) BETWEEN biased(range_min) AND biased(range_max)``
-    (S2CellUnion.contains, S2CellUnion.java:160-178) as the residual.
+    (S2CellUnion.contains, S2CellUnion.java:160-178) as the residual.  A
+    hot prefix (a city-sized layer stack) is AQE's OptimizeSkewedJoin's to
+    split: static salting measured +62% on uniform and +32% on skewed data
+    at 128M rows, where AQE's skew join won 2.3-2.6x (BENCH/BASELINE.md).
 
     Probe rows outside every covering prefix are dropped on the probe scan
     stage, before the shuffle.  ``prune`` is either the sorted prefix list
     itself — a codegen'd IN-set literal — or a rung name: ``"semi"``, a
     broadcast left semi on the distinct prefixes; ``"bloom"``, a fixed-size
-    Bloom bitmap (bloom_bitmap / bloom_prune).
-
-    ``salt`` spreads a hot prefix (a city-sized layer stack) over ``salt``
-    reducers by packing ``xxhash64(leaf) % salt`` into the prefix's zero low
-    bits; the covering side is replicated once per salt value to match, and
-    the key stays a single radix-sortable BIGINT (a compound (key, salt)
-    key measured 2-3x slower on the r4 104M-row probe sort)."""
+    Bloom bitmap (bloom_bitmap / bloom_prune)."""
     cell = col_ref(cell_col)
     pts = points.withColumn("_pfx", F.expr(parent_sql(cell, prefix_level)))
     if not isinstance(prune, str):
@@ -358,30 +353,21 @@ def _prefix_join(
         # distinct() shuffle
         pts = bloom_prune(pts, bloom_bitmap(pref.select("_pfx"), "_pfx"), "_pfx")
 
-    key = F.col("_pfx")
-    if salt:
-        # one covering replica per salt value, the salt in the zero low bits
-        pref = pref.withColumn(
-            "_pfx", F.explode(F.array(*[key.bitwiseOR(F.lit(s)) for s in range(salt)]))
-        )
-        key = key.bitwiseOR(F.pmod(F.xxhash64(F.col(cell_col)), F.lit(salt)))
-    pts = pts.withColumn("_pkey", key)
     cover = pref.withColumnRenamed("_pfx", "_ckey")
     # hash, not the default sort-merge: sorting a fact-sized probe side
     # spilled and dominated the r4 128M leg (>600 s per rep vs 177.7 s)
     out = pts.join(
         cover.hint("shuffle_hash"),
-        F.expr(f"_pkey = _ckey AND {in_range_sql(cell, '_rmin', '_rmax')}"),
+        F.expr(f"_pfx = _ckey AND {in_range_sql(cell, '_rmin', '_rmax')}"),
         "inner",
     )
-    return out.drop("_pfx", "_pkey", "_ckey", "_rmin", "_rmax")
+    return out.drop("_pfx", "_ckey", "_rmin", "_rmax")
 
 
 def prefix_candidates(
     points: DataFrame,
     rows: list[tuple],
     cell_col: str = "cell_id",
-    salt: int | None = None,
     prefix_level: int | None = None,
 ) -> DataFrame:
     """Candidate pairs via the PREFIX-PARTITIONED interval join — the
@@ -401,9 +387,8 @@ def prefix_candidates(
     ``prefix_level`` trades reducer-key cardinality (6*4^A populated cells
     max) against coarse-cell replication (4^(A-L) per covering cell below
     A); 4 suits local[32], 6-8 a 1000-executor cluster — when None it is
-    derived from the shuffle width (_anchor_level).  ``salt``: see
-    _prefix_join."""
-    prefix_level = _anchor_level(points, prefix_level, salt)
+    derived from the shuffle width (_anchor_level)."""
+    prefix_level = _anchor_level(points, prefix_level)
     pref_rows = _prefix_cover_rows(rows, prefix_level)
     pref = local_frame(
         points.sparkSession,
@@ -412,7 +397,7 @@ def prefix_candidates(
     )
     prefixes = sorted({r[0] for r in pref_rows})
     prune = prefixes if len(prefixes) <= PREFIX_IN_FILTER_MAX else "semi"
-    return _prefix_join(points, pref, cell_col, prefix_level, salt, prune)
+    return _prefix_join(points, pref, cell_col, prefix_level, prune)
 
 
 def prefix_cover_frame(cover: DataFrame, prefix_level: int) -> DataFrame:
@@ -521,76 +506,54 @@ def prefix_candidates_df(
     points: DataFrame,
     cover: DataFrame,
     cell_col: str = "cell_id",
-    salt: int | None = None,
     prefix_level: int | None = None,
-    prune: str = "auto",
 ) -> DataFrame:
     """The prefix-partitioned interval join with a DataFrame covering — the
     fully distributed 100-TB arm.
 
     Same join as ``prefix_candidates`` (_prefix_join: one compact level-A
     ancestor key per probe row, shuffled hash equi-join, exact interval
-    containment residual, optional packed-bit salt), but the covering side
-    is a DataFrame in COVERING_SCHEMA shape — e.g. the executor-built output of
+    containment residual), but the covering side is a DataFrame in
+    COVERING_SCHEMA shape — e.g. the executor-built output of
     ``covering_df_distributed`` — so a 100k-layer dimension never touches
     driver Python: prefix replication runs as native ``sequence``/``explode``
     (prefix_cover_frame), and nothing about the covering's SIZE ever does.
 
-    ``prune`` picks how probe rows outside every covering prefix are dropped
-    before the shuffle (the pre-exchange pruning both rungs share):
+    The probe prune (rows outside every covering prefix dropped before the
+    shuffle) escalates from the covering's distinct-prefix count, learnt by
+    one small bounded job on the DIMENSION side at construction time —
+    ``distinct prefixes LIMIT PREFIX_IN_FILTER_MAX+1``:
 
-    - ``"auto"`` (default): run one small bounded job on the DIMENSION side
-      at construction time — ``distinct prefixes LIMIT PREFIX_IN_FILTER_MAX+1``
-      — and, when the covering has at most PREFIX_IN_FILTER_MAX distinct
-      prefixes, prune with the same codegen'd IN-set literal as the
-      driver-list arm (measured ~1.3 s cheaper than the semi probe per 128M
-      fact rows at local[32]); above the bound, a second bounded count
-      (``LIMIT PREFIX_SEMI_PRUNE_MAX+1``) picks between the broadcast semi
-      (exact set still cheap to broadcast) and the Bloom rung (fixed-size
-      bitmap, cardinality-independent).  The jobs are bounded by their
-      LIMITs regardless of covering size, and ``cover`` is persisted first
-      so the coverer executes once, not once per consumer.  NOTE this
-      executes (dimension-side, bounded) Spark jobs eagerly when the
-      DataFrame is CONSTRUCTED, not when it is acted on — callers that need
-      a fully lazy plan pass ``prune="semi"`` or ``prune="bloom"``.
-    - ``"semi"``: fully lazy — probe pruning is a broadcast LEFT SEMI join
-      on the distinct prefixes (no literal IN list at any covering size, no
-      job until the first action).  The semi prune consumes the covering
-      subtree a second time (distinct keys + join build side); when the
-      covering is expensive to build (applyInPandas coverer over many
-      layers), persist or checkpoint ``cover`` before calling — the frame
-      is small (the layer dimension), so caching it is the cluster-scale
-      posture anyway.
-    - ``"bloom"``: fully lazy — probe pruning is a PREFIX_BLOOM_BITS-bit
-      Bloom bitmap of the covering prefixes (bloom_bitmap / bloom_prune):
-      k broadcast word-lookups + bit tests on the probe scan stage.  The
-      broadcast is ≤ m/64 longs NO MATTER how many distinct prefixes the
-      covering has — the terminal rung for layer dimensions whose exact
-      prefix set itself outgrows a broadcast; false positives (≈3% at the
-      6.3M worst-case prefix bound) only add shuffle bytes, never rows to
-      the output.  Same persist advice as ``"semi"`` (the bitmap consumes
-      the covering subtree once more)."""
-    if prune not in ("auto", "semi", "bloom"):
-        raise ValueError(f"prune must be 'auto', 'semi' or 'bloom', got {prune!r}")
-    prefix_level = _anchor_level(points, prefix_level, salt)
-    if prune == "auto":
-        # dimension-side only and bounded by the LIMIT — safe at any fact
-        # scale; persist so the probe-prune probe and the join build side
-        # share one covering execution (the collect materializes the cache)
-        cover = cover.persist()
+    - at most PREFIX_IN_FILTER_MAX prefixes: the same codegen'd IN-set
+      literal as the driver-list arm (measured ~1.3 s cheaper than the semi
+      probe per 128M fact rows at local[32]);
+    - above that, a second bounded count (``LIMIT PREFIX_SEMI_PRUNE_MAX+1``)
+      picks the broadcast LEFT SEMI on the distinct prefixes while the exact
+      set is still cheap to broadcast;
+    - beyond PREFIX_SEMI_PRUNE_MAX, a PREFIX_BLOOM_BITS-bit Bloom bitmap of
+      the covering prefixes (bloom_bitmap / bloom_prune): k broadcast
+      word-lookups + bit tests on the probe scan stage, ≤ m/64 longs on the
+      wire NO MATTER how many distinct prefixes the covering has; false
+      positives (≈3% at the 6.3M worst-case prefix bound) only add shuffle
+      bytes, never rows to the output.
+
+    The jobs are bounded by their LIMITs regardless of covering size, but
+    they run when the DataFrame is CONSTRUCTED, and the join consumes the
+    covering subtree again (plus once more for a semi or Bloom prune).  The
+    frame is small (the layer dimension): when it is expensive to build
+    (applyInPandas coverer over many layers), persist or checkpoint
+    ``cover`` before calling, and unpersist it after."""
+    prefix_level = _anchor_level(points, prefix_level)
     pref = prefix_cover_frame(cover, prefix_level)
-    if prune == "auto":
-        sample = pref.select("_pfx").distinct().limit(PREFIX_IN_FILTER_MAX + 1).collect()
-        if len(sample) <= PREFIX_IN_FILTER_MAX:
-            prune = sorted(r["_pfx"] for r in sample)
-        else:
-            # second bounded dimension-side job: count (not collect) caps at
-            # the LIMIT, deciding semi vs bloom without materializing keys
-            n_keys = (
-                pref.select("_pfx").distinct().limit(PREFIX_SEMI_PRUNE_MAX + 1).count()
-            )
-            prune = "semi" if n_keys <= PREFIX_SEMI_PRUNE_MAX else "bloom"
-    return _prefix_join(points, pref, cell_col, prefix_level, salt, prune)
+    sample = pref.select("_pfx").distinct().limit(PREFIX_IN_FILTER_MAX + 1).collect()
+    if len(sample) <= PREFIX_IN_FILTER_MAX:
+        prune = sorted(r["_pfx"] for r in sample)
+    else:
+        # second bounded dimension-side job: count (not collect) caps at
+        # the LIMIT, deciding semi vs bloom without materializing keys
+        n_keys = pref.select("_pfx").distinct().limit(PREFIX_SEMI_PRUNE_MAX + 1).count()
+        prune = "semi" if n_keys <= PREFIX_SEMI_PRUNE_MAX else "bloom"
+    return _prefix_join(points, pref, cell_col, prefix_level, prune)
 
 
 def membership_expr(
@@ -762,62 +725,39 @@ def pip_join(
     lat_col: str = "lat",
     lng_col: str = "lng",
     cell_col: str = "cell_id",
-    strategy: str = "auto",
     broadcast_cells: bool = True,
-    salt: int | None = None,
     n_rows: int | None = None,
     covering_frame: DataFrame | None = None,
-    prune: str = "auto",
 ) -> DataFrame:
     """points x layers -> rows of points matched with ``polygon_id``.
 
-    The layers are covered with JOIN_COVERING (covering.py).  ``strategy``
-    is ``"auto"`` (default), ``"range"`` or ``"stab"``.  ``"auto"`` applies
-    the I2 cost model: coverings up to the measured breakeven take the
-    zero-Python broadcast range join, larger broadcastable ones the
-    vectorized interval-stab lookup; a shuffled or salted request
-    (``broadcast_cells=False`` or ``salt``) — or a covering too big to
-    broadcast — takes the prefix-partitioned interval join, which has no
-    strategy name of its own.  range/stab are broadcast-only by
-    construction, so asking either for ``broadcast_cells=False`` or
-    ``salt`` raises.  ``n_rows`` is an optional fact-side row-count hint
+    The layers are covered with JOIN_COVERING (covering.py), and the engine
+    picks the arm from its inputs (the I2 cost model, choose_strategy):
+    coverings up to the measured breakeven take the zero-Python broadcast
+    range join, larger broadcastable ones the vectorized interval-stab
+    lookup, and a covering too big to broadcast the prefix-partitioned
+    interval join.  ``n_rows`` is an optional fact-side row-count hint
     (exact or estimated) that lets the model keep small fact tables on the
-    range path above the cell breakeven.
+    range path above the cell breakeven.  ``broadcast_cells=False`` says the
+    layer side must not be broadcast, and takes the prefix arm.
 
     ``covering_frame``: an already-built covering DataFrame in
     COVERING_SCHEMA shape (typically ``covering_df_distributed(...,
     **JOIN_COVERING)`` over a huge layer dimension) — routes to the fully
     distributed prefix arm (prefix_candidates_df): covering replication and
     probe pruning stay DataFrame-native, nothing flows through driver
-    Python.  ``layers`` still supplies the exact refine predicates.
-    ``prune`` (that arm only; raises otherwise) picks the probe-prune rung —
-    ``"auto"`` bounded-collect IN-set→semi→bloom escalation / ``"semi"``
-    fully lazy broadcast semi / ``"bloom"`` fully lazy fixed-size Bloom
-    bitmap; see prefix_candidates_df."""
-    if strategy not in ("auto", "range", "stab"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy != "auto" and (salt or not broadcast_cells):
-        raise ValueError(
-            f"strategy {strategy!r} broadcasts the covering; broadcast_cells=False "
-            "and salt need the 'auto' strategy"
-        )
+    Python, and the prune rung is escalated from the covering's
+    distinct-prefix count.  ``layers`` still supplies the exact refine
+    predicates."""
     if covering_frame is not None:
-        if strategy != "auto":
-            raise ValueError("covering_frame takes the prefix arm, which needs strategy='auto'")
         pts = with_cell_id(points, lat_col, lng_col, cell_col)
-        cand = prefix_candidates_df(pts, covering_frame, cell_col, salt, prune=prune)
+        cand = prefix_candidates_df(pts, covering_frame, cell_col)
         return refine_candidates(cand, layers, lat_col, lng_col).drop("is_interior")
-    if prune != "auto":
-        raise ValueError(f"prune={prune!r} needs covering_frame")
     rows = covering_rows(layers, **JOIN_COVERING)
-    if strategy == "auto":
-        if salt or not broadcast_cells:
-            strategy = "prefix"  # beyond-broadcast layer side
-        else:
-            strategy = choose_strategy(rows, n_rows)
+    strategy = choose_strategy(rows, n_rows) if broadcast_cells else "prefix"
     if strategy == "prefix":
         pts = with_cell_id(points, lat_col, lng_col, cell_col)
-        cand = prefix_candidates(pts, rows, cell_col, salt)
+        cand = prefix_candidates(pts, rows, cell_col)
     elif strategy == "stab":
         cand = stab_candidates(points, rows, lat_col, lng_col, cell_col)
     else:

@@ -5,6 +5,8 @@ AST guard keeps the package from building a driver table the other way,
 which plans a Python RDD that every job over the table runs again."""
 
 import ast
+import importlib
+import inspect
 import pathlib
 
 import pytest
@@ -69,15 +71,20 @@ def test_local_frame_rejects_ragged_rows(spark):
 
 @pytest.mark.parametrize(
     "kwargs",
-    [{"strategy": "range"}, {"strategy": "stab"}, {"broadcast_cells": False}],
+    [{"n_rows": 8_000_000}, {}, {"broadcast_cells": False}],
     ids=["range", "stab", "prefix"],
 )
-def test_pip_join_empty_covering(spark, sf_dir, kwargs):
+def test_pip_join_empty_covering(spark, sf_dir, kwargs, monkeypatch):
     from __spark_entry__ import RECT_LAYERS
     from s2_geometry_library_java_spark.operators.layers import rect_layer
-    from s2_geometry_library_java_spark.operators.pip_join import pip_join
     from s2_geometry_library_java_spark.sources.tables import geotagged_points
 
+    pj = importlib.import_module("s2_geometry_library_java_spark.operators.pip_join")
+    pip_join = pj.pip_join
+    if not kwargs:
+        # an empty covering is under every range budget: move the breakeven
+        # so that the cost model takes the stab arm
+        monkeypatch.setattr(pj, "RANGE_BREAKEVEN_CELLS", -1)
     points = geotagged_points(spark, sf_dir)
     # lat_lo > lat_hi: an empty rect, whose covering has no cell
     empty = [rect_layer("none", 10.0, 0.0, -10.0, 5.0)]
@@ -163,3 +170,44 @@ def test_package_builds_no_row_fed_tables():
         if (lines := row_fed_calls(p.read_text()))
     }
     assert found == {}, f"createDataFrame fed driver rows; use session.local_frame: {found}"
+
+
+# ---------------------------------------------------------------------------
+# Guard: every pip_join call outside tier-1 passes only its parameters
+# ---------------------------------------------------------------------------
+def unknown_keywords(source: str, name: str, params) -> list[tuple[int, str]]:
+    """(line, keyword) of each ``name(...)`` call keyword not in ``params``."""
+    bad = []
+    for n in ast.walk(ast.parse(source)):
+        if isinstance(n, ast.Call):
+            f = n.func
+            if (f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)) == name:
+                bad += [(n.lineno, k.arg) for k in n.keywords if k.arg and k.arg not in params]
+    return bad
+
+
+def test_keyword_guard_flags_unknown_keywords():
+    src = "pip_join(p, l, n_rows=1)\npj.pip_join(p, l, salt=4, **kw)\n"
+    assert unknown_keywords(src, "pip_join", {"n_rows"}) == [(2, "salt")]
+
+
+def test_pip_join_call_sites_pass_known_keywords():
+    # bench.py and scripts/ run only when someone runs them, so a keyword
+    # pip_join no longer takes would otherwise fail there first
+    from s2_geometry_library_java_spark.operators.pip_join import pip_join
+
+    params = inspect.signature(pip_join).parameters
+    repo = pathlib.Path(pkg.__file__).parent.parent
+    files = [
+        *pathlib.Path(pkg.__file__).parent.rglob("*.py"),
+        repo / "__spark_entry__.py",
+        repo / "bench.py",
+        *(repo / "scripts").rglob("*.py"),
+        *(repo / "perfbench").rglob("*.py"),
+    ]
+    found = {
+        str(p.relative_to(repo)): bad
+        for p in sorted(files)
+        if (bad := unknown_keywords(p.read_text(), "pip_join", params))
+    }
+    assert found == {}, f"pip_join calls with keywords it does not take: {found}"

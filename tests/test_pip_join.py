@@ -50,8 +50,9 @@ def points_pdf(points):
 @pytest.mark.parametrize(
     "kwargs",
     [
-        pytest.param({"strategy": "range"}, id="range"),
-        pytest.param({"strategy": "stab"}, id="stab"),
+        # n_rows hints: the cost model's range and stab sides for this covering
+        pytest.param({"n_rows": 8_000_000}, id="range"),
+        pytest.param({"n_rows": 10**12}, id="stab"),
         pytest.param({"broadcast_cells": False}, id="prefix"),
     ],
 )
@@ -62,31 +63,11 @@ def test_pip_join_matches_bruteforce(points, points_pdf, kwargs):
     assert got == oracle_matches(points_pdf, layers)
 
 
-def test_pip_join_salted_shuffle_same_rows(points, points_pdf):
-    # broadcast_cells=False + salt routes auto -> salted PREFIX join
-    layers = make_layers()
-    result = pip_join(points, layers, broadcast_cells=False, salt=4)
-    got = {(int(r["point_id"]), r["polygon_id"]) for r in result.select("point_id", "polygon_id").collect()}
-    assert got == oracle_matches(points_pdf, layers)
-
-
 def test_unknown_strategy_rejected(points):
-    # a retired or misspelt strategy raises instead of running some arm, and
-    # so does an argument the chosen arm cannot honour: range and stab
-    # always broadcast and never salt, and only the covering_frame arm prunes
-    cases = [
-        ({"strategy": "ancestor"}, "unknown strategy"),
-        ({"strategy": "bnlj"}, "unknown strategy"),
-        ({"strategy": "prefix"}, "unknown strategy"),
-        ({"strategy": "range", "broadcast_cells": False}, "broadcasts the covering"),
-        ({"strategy": "stab", "broadcast_cells": False}, "broadcasts the covering"),
-        ({"strategy": "range", "salt": 4}, "broadcasts the covering"),
-        ({"strategy": "stab", "salt": 4}, "broadcasts the covering"),
-        ({"prune": "semi"}, "covering_frame"),
-        ({"broadcast_cells": False, "prune": "bloom"}, "covering_frame"),
-    ]
-    for kwargs, match in cases:
-        with pytest.raises(ValueError, match=match):
+    # the engine picks every arm itself: a caller that still names an arm,
+    # a salt or a prune rung gets an error instead of some other arm
+    for kwargs in ({"strategy": "range"}, {"salt": 4}, {"prune": "bloom"}):
+        with pytest.raises(TypeError, match=next(iter(kwargs))):
             pip_join(points, make_layers(), **kwargs)
 
 
@@ -105,7 +86,7 @@ def test_prefix_cover_rows_exact_replication(points, points_pdf, prefix_level):
     layers = make_layers()
     rows = covering_rows(layers, max_cells=8, max_level=12)
     pts = with_cell_id(points)
-    cand = prefix_candidates(pts, rows, salt=2 if prefix_level else None, prefix_level=prefix_level)
+    cand = prefix_candidates(pts, rows, prefix_level=prefix_level)
     result = refine_candidates(cand, layers)
     got = {(int(r["point_id"]), r["polygon_id"]) for r in result.select("point_id", "polygon_id").collect()}
     assert got == oracle_matches(points_pdf, layers)

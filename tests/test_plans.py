@@ -1,7 +1,7 @@
 """Physical-plan shape assertions: the scale story must be visible in
 explain() — column-pruned scans, a broadcast join with the native
 refinement kept out of Python, exactly one Arrow hop for the encode, and the
-salted variant shuffling instead of broadcasting."""
+prefix arm shuffling instead of broadcasting."""
 
 import re
 
@@ -10,6 +10,11 @@ from pyspark.sql import functions as F
 
 from s2_geometry_library_java_spark.operators.pip_join import pip_join, with_cell_id
 from s2_geometry_library_java_spark.sources.tables import geotagged_points
+
+
+# n_rows hints that put ALL_LAYERS' 56-cell covering on each broadcast arm
+RANGE_ROWS = 8_000_000
+STAB_ROWS = 10**12
 
 
 def plan_of(df) -> str:
@@ -51,17 +56,19 @@ def test_native_join_is_broadcast_with_folded_refinement(spark, points):
 
 
 def test_auto_strategy_small_covering_takes_range(spark, points):
-    # I2 cost model wired in: a small covering (RECT_LAYERS -> 17 cells)
-    # goes through the broadcast range join (BNLJ on the BETWEEN predicate).
-    from __spark_entry__ import RECT_LAYERS
+    # I2 cost model wired in: a small covering (RECT_LAYERS -> 17 cells,
+    # NATIVE_LAYERS -> 40, the pip_join_range driver row) goes through the
+    # broadcast range join (BNLJ on the BETWEEN predicate).
+    from __spark_entry__ import NATIVE_LAYERS, RECT_LAYERS
 
-    plan = plan_of(pip_join(points, RECT_LAYERS))
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "BroadcastHashJoin" not in plan
-    # the encode UDF must appear ONCE: without the non-null coalesce in
-    # with_cell_id, Catalyst's inferred IsNotNull(cell_id) constraint pushed
-    # a filter that re-ran the encode over the whole fact side
-    assert plan.count("ArrowEvalPython") == 1
+    for layers in (RECT_LAYERS, NATIVE_LAYERS):
+        plan = plan_of(pip_join(points, layers))
+        assert "BroadcastNestedLoopJoin" in plan
+        assert "BroadcastHashJoin" not in plan
+        # the encode UDF must appear ONCE: without the non-null coalesce in
+        # with_cell_id, Catalyst's inferred IsNotNull(cell_id) constraint
+        # pushed a filter that re-ran the encode over the whole fact side
+        assert plan.count("ArrowEvalPython") == 1
 
 
 def test_auto_strategy_large_covering_takes_stab(spark, points):
@@ -143,14 +150,14 @@ def test_salted_join_shuffles(spark, points):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        plan = plan_of(pip_join(points, NATIVE_LAYERS, broadcast_cells=False, salt=4))
+        plan = plan_of(pip_join(points, NATIVE_LAYERS, broadcast_cells=False))
         assert "BroadcastHashJoin" not in plan
         assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan)
-        # the salt is PACKED into a single BIGINT join key (_pkey/_ckey), so
-        # the probe-side sort stays radix-eligible (r4: compound keys
-        # measured 2-3x slower); exactly one join key column per side
-        assert "_pkey" in plan and "_ckey" in plan
-        assert "_psalt" not in plan  # no compound-key fallback at level<=12
+        # one packed BIGINT join key column per side (_pfx/_ckey), so the
+        # probe-side sort stays radix-eligible (r4: compound keys measured
+        # 2-3x slower)
+        assert "_pfx" in plan and "_ckey" in plan
+        assert "_pkey" not in plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
         spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -167,11 +174,11 @@ def test_poly_refinement_single_pass(spark, points):
     assert plan.count("ArrowEvalPython") == 2
     assert plan.count("Scan parquet") == 1
     # the small-fact range path (BNLJ) adds zero Python: encode + parity only
-    plan_rng = plan_of(pip_join(points, ALL_LAYERS, strategy="range"))
+    plan_rng = plan_of(pip_join(points, ALL_LAYERS, n_rows=RANGE_ROWS))
     assert plan_rng.count("ArrowEvalPython") == 2
     assert plan_rng.count("Scan parquet") == 1
     # pre-encoded input pays the extra (8B in / 4B out) seg hop instead
-    plan_pre = plan_of(pip_join(with_cell_id(points), ALL_LAYERS, strategy="stab"))
+    plan_pre = plan_of(pip_join(with_cell_id(points), ALL_LAYERS, n_rows=STAB_ROWS))
     assert plan_pre.count("ArrowEvalPython") == 3
 
 
@@ -220,20 +227,33 @@ def _encoded(source, points, images):
 
 @pytest.mark.parametrize("source", ["with_cell_id", "encode_images"])
 @pytest.mark.parametrize("prune", [None, "auto", "semi", "bloom"])
-def test_prefix_arm_encodes_once(spark, points, images, source, prune):
+def test_prefix_arm_encodes_once(spark, points, images, source, prune, monkeypatch):
     # The prefix prune filters on parent(cell_id).  Pushed below the
     # projection that defines cell_id, it re-ran the encode UDF under the
     # Filter: two encode hops, ~1.65x the fact rows through Python.
-    # prune=None is the driver-list arm (broadcast_cells=False).
+    # prune=None is the driver-list arm (broadcast_cells=False); the
+    # covering_frame arm reaches the semi and Bloom rungs through lowered
+    # escalation bounds.
+    import importlib
+
     from __spark_entry__ import ALL_LAYERS
     from s2_geometry_library_java_spark.operators.covering import covering_df
+
+    pj = importlib.import_module("s2_geometry_library_java_spark.operators.pip_join")
 
     enc, udf = _encoded(source, points, images)
     if prune is None:
         df = pip_join(enc, ALL_LAYERS, broadcast_cells=False)
     else:
+        if prune != "auto":
+            monkeypatch.setattr(pj, "PREFIX_IN_FILTER_MAX", 2)
+        if prune == "bloom":
+            monkeypatch.setattr(pj, "PREFIX_SEMI_PRUNE_MAX", 2)
         cov = covering_df(spark, ALL_LAYERS, max_cells=8, max_level=12)
-        df = pip_join(enc, ALL_LAYERS, covering_frame=cov, prune=prune)
+        df = pip_join(enc, ALL_LAYERS, covering_frame=cov)
+        plan = plan_of(df)
+        assert ("LeftSemi" in plan) == (prune == "semi")
+        assert ("bit_or" in plan) == (prune == "bloom")
     assert _hops(df, udf) == 1
     assert _hops(df, "parity_contains") == 1
 
@@ -244,7 +264,8 @@ def test_broadcast_arms_encode_once(points, images, source, strategy):
     from __spark_entry__ import ALL_LAYERS
 
     enc, udf = _encoded(source, points, images)
-    assert _hops(pip_join(enc, ALL_LAYERS, strategy=strategy), udf) == 1
+    n_rows = RANGE_ROWS if strategy == "range" else STAB_ROWS
+    assert _hops(pip_join(enc, ALL_LAYERS, n_rows=n_rows), udf) == 1
 
 
 def test_manifest_tail_is_pure_codegen(points, images):
@@ -255,7 +276,7 @@ def test_manifest_tail_is_pure_codegen(points, images):
 
     for matches in (
         pip_join(encode_images(images), ALL_LAYERS, broadcast_cells=False),
-        pip_join(with_cell_id(points), ALL_LAYERS, strategy="range"),
+        pip_join(with_cell_id(points), ALL_LAYERS, n_rows=RANGE_ROWS),
     ):
         base = plan_of(matches).count("ArrowEvalPython")
         for tail in (tile_manifest(matches), assign_tiles(matches)):
@@ -269,7 +290,7 @@ def test_refine_filter_tests_parity_result_only(points):
     # its hop holds no copy of the native rect/cap CASE chain
     from __spark_entry__ import ALL_LAYERS
 
-    plan = plan_of(pip_join(with_cell_id(points), ALL_LAYERS, strategy="range"))
+    plan = plan_of(pip_join(with_cell_id(points), ALL_LAYERS, n_rows=RANGE_ROWS))
     filters = [line for line in plan.splitlines() if "Filter" in line and "pythonUDF" in line]
     assert len(filters) == 1
     assert "CASE WHEN" not in filters[0]
@@ -284,7 +305,7 @@ def test_range_join_broadcasts_benchmark_covering(spark, points):
     from __spark_entry__ import ALL_LAYERS
     from s2_geometry_library_java_spark.operators.covering import covering_rows
 
-    df = pip_join(points, ALL_LAYERS, strategy="range")
+    df = pip_join(points, ALL_LAYERS, n_rows=RANGE_ROWS)
     assert "BroadcastNestedLoopJoin" in plan_of(df)
     # the analyzed leaf: the optimizer folds the arm's column projection
     # into the LocalRelation
@@ -299,7 +320,7 @@ def test_range_join_broadcasts_benchmark_covering(spark, points):
 
 @pytest.mark.parametrize(
     "kwargs",
-    [{"strategy": "range"}, {"strategy": "stab"}, {"broadcast_cells": False}],
+    [{"n_rows": RANGE_ROWS}, {"n_rows": STAB_ROWS}, {"broadcast_cells": False}],
     ids=["range", "stab", "prefix"],
 )
 def test_covering_is_driver_local(spark, points, kwargs):
@@ -319,3 +340,14 @@ def test_covering_is_driver_local(spark, points, kwargs):
         assert [l for l in plan.splitlines() if "LocalTableScan" in l and "polygon_id" in l]
         if "broadcast_cells" in kwargs:
             assert "ShuffledHashJoin" in plan and "BroadcastHashJoin" not in plan
+
+
+def test_prefix_bloom_row_plans_the_bitmap_join(spark, sf_dir):
+    # the pip_join_prefix_bloom driver row fixes the terminal prune rung:
+    # its executed plan probes the bit_or bitmap words (_bits)
+    from __spark_entry__ import q_pip_prefix_bloom
+
+    plan = plan_of(q_pip_prefix_bloom(spark, sf_dir))
+    assert "_bits" in plan and "bit_or" in plan
+    assert "LeftSemi" not in plan and " IN (" not in plan
+    assert "ShuffledHashJoin" in plan

@@ -1,7 +1,7 @@
-"""The auto prune rung's semi→bloom escalation at TRUE scale: a synthetic
+"""The probe prune's semi→bloom escalation at TRUE scale: a synthetic
 covering with > PREFIX_SEMI_PRUNE_MAX (2^20) distinct level-10 prefixes —
-no monkeypatched thresholds — must route to the Bloom bitmap and emit
-exactly the broadcast-semi rung's candidates.
+no lowered thresholds — must route to the Bloom bitmap and emit exactly
+the candidates of the broadcast-semi rung (reached by raising the bound).
 
 The covering is built from raw bit patterns (level-10 cell = face<<61 |
 path<<41 | 1<<40, S2CellId.java:58-77 layout), including the signed-int64
@@ -9,12 +9,16 @@ wrap for faces 4-5 that the engine carries everywhere (cell ids are
 unsigned in the reference; Spark LongType holds the raw bit pattern).
 """
 
+import importlib
+
 from pyspark.sql import functions as F
 
 from s2_geometry_library_java_spark.operators.pip_join import (
     PREFIX_SEMI_PRUNE_MAX,
     prefix_candidates_df,
 )
+
+pj = importlib.import_module("s2_geometry_library_java_spark.operators.pip_join")
 
 LSB10 = 1 << 40
 FACE5 = (5 << 61) - (1 << 64)  # signed bit pattern of the face-5 base
@@ -43,7 +47,7 @@ def _big_cover(spark, n):
     )
 
 
-def test_auto_rung_escalates_to_bloom_at_true_scale(spark):
+def test_auto_rung_escalates_to_bloom_at_true_scale(spark, monkeypatch):
     n = PREFIX_SEMI_PRUNE_MAX + 1400  # just across the semi→bloom bound
     cover = _big_cover(spark, n).persist()
     cover.count()
@@ -76,7 +80,9 @@ def test_auto_rung_escalates_to_bloom_at_true_scale(spark):
         assert "LeftSemi" not in plan
         assert " IN (" not in plan
         got = {(r["point_id"], r["polygon_id"]) for r in auto.collect()}
-        semi = prefix_candidates_df(probes, cover, prefix_level=10, prune="semi")
+        monkeypatch.setattr(pj, "PREFIX_SEMI_PRUNE_MAX", n)
+        semi = prefix_candidates_df(probes, cover, prefix_level=10)
+        assert "LeftSemi" in semi._jdf.queryExecution().executedPlan().toString()
         expect = {(r["point_id"], r["polygon_id"]) for r in semi.collect()}
         assert got == expect
         # every inside probe matched its one covering cell; face-5 none

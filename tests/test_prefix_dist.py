@@ -16,7 +16,6 @@ from s2_geometry_library_java_spark.operators.covering import (
 from s2_geometry_library_java_spark.operators.pip_join import (
     _prefix_cover_rows,
     pip_join,
-    prefix_candidates,
     prefix_candidates_df,
     prefix_cover_frame,
     refine_candidates,
@@ -61,19 +60,18 @@ def test_prefix_cover_frame_equals_driver_rows(spark, prefix_level):
     assert got == expect
 
 
-@pytest.mark.parametrize("salt", [None, 4])
-def test_prefix_df_matches_bruteforce_and_list_arm(spark, points, points_pdf, salt):
+def test_prefix_df_matches_bruteforce_and_list_arm(spark, points, points_pdf):
     """pip_join(covering_frame=distributed covering) must equal both the
     brute-force oracle and the driver-list prefix arm."""
     layers = make_layers()
     cover = covering_df_distributed(spark, LAYER_SPECS, max_cells=8, max_level=12)
-    result = pip_join(points, layers, covering_frame=cover, salt=salt)
+    result = pip_join(points, layers, covering_frame=cover)
     got = {
         (int(r["point_id"]), r["polygon_id"])
         for r in result.select("point_id", "polygon_id").collect()
     }
     assert got == oracle_matches(points_pdf, layers)
-    list_arm = pip_join(points, layers, broadcast_cells=False, salt=salt)
+    list_arm = pip_join(points, layers, broadcast_cells=False)
     expect = {
         (int(r["point_id"]), r["polygon_id"])
         for r in list_arm.select("point_id", "polygon_id").collect()
@@ -81,17 +79,21 @@ def test_prefix_df_matches_bruteforce_and_list_arm(spark, points, points_pdf, sa
     assert got == expect
 
 
-def test_prefix_df_plan_is_fully_distributed(spark, points):
-    """Plan pins for the 100-TB arm (round-5 done criterion): with the fully
-    lazy ``prune="semi"`` rung the covering is built executor-side
-    (FlatMapGroupsInPandas in the plan), probe pruning is a broadcast
-    left-semi (no literal IN list anywhere), and the candidate join is the
-    shuffled-hash equi-join — no driver-side replication exists because the
-    plan consumes the covering scan directly."""
-    layers = make_layers()
+def test_prefix_df_plan_is_fully_distributed(spark, points, monkeypatch):
+    """Plan pins for the 100-TB arm (round-5 done criterion): on the semi
+    rung (reached here through a lowered IN-set bound) the covering is
+    built executor-side (FlatMapGroupsInPandas in the plan), probe pruning
+    is a broadcast left-semi (no literal IN list anywhere), and the
+    candidate join is the shuffled-hash equi-join — no driver-side
+    replication exists because the plan consumes the covering scan
+    directly."""
+    import importlib
+
+    pj = importlib.import_module("s2_geometry_library_java_spark.operators.pip_join")
+    monkeypatch.setattr(pj, "PREFIX_IN_FILTER_MAX", 2)
     cover = covering_df_distributed(spark, LAYER_SPECS, max_cells=8, max_level=12)
     pts = with_cell_id(points)
-    cand = prefix_candidates_df(pts, cover, prefix_level=4, prune="semi")
+    cand = prefix_candidates_df(pts, cover, prefix_level=4)
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan  # covering built on executors
     assert "LeftSemi" in plan  # broadcast-semi probe prune
@@ -107,7 +109,7 @@ def test_prefix_df_plan_is_fully_distributed(spark, points):
 
 
 def test_prefix_df_auto_prune_uses_inset_below_bound(spark, points):
-    """``prune="auto"`` (default): a small covering pays the same codegen'd
+    """Below PREFIX_IN_FILTER_MAX prefixes a covering pays the same codegen'd
     IN-set probe filter as the driver-list arm — no broadcast-semi per-row
     probe on the fact side (measured ~1.3 s/128M rows at local[32]) — while
     the covering REPLICATION stays executor-side (FlatMapGroupsInPandas)."""
@@ -142,22 +144,21 @@ def test_prefix_df_auto_prune_falls_back_to_semi(spark, points, points_pdf, monk
     assert got == oracle_matches(points_pdf, layers)
 
 
-def test_prefix_df_rejects_bad_prune(spark, points):
-    cover = covering_df(spark, make_layers(), max_cells=8, max_level=12)
-    pts = with_cell_id(points)
-    with pytest.raises(ValueError, match="prune"):
-        prefix_candidates_df(pts, cover, prune="cuckoo")
+def test_prefix_df_bloom_prune_matches_and_plan(spark, points, points_pdf, monkeypatch):
+    """The terminal prune rung (reached here through lowered escalation
+    bounds): identical match set to the exact rungs, and no IN literal, no
+    LeftSemi — the bitmap probed via k broadcast word-lookup hash joins
+    built from a bit_or aggregate, candidate join still the shuffled-hash
+    equi-join."""
+    import importlib
 
-
-def test_prefix_df_bloom_prune_matches_and_plan(spark, points, points_pdf):
-    """The terminal prune rung (``prune="bloom"``): identical match set to
-    the exact rungs, and a fully lazy plan — no IN literal, no LeftSemi,
-    the bitmap probed via k broadcast word-lookup hash joins built from a
-    bit_or aggregate, candidate join still the shuffled-hash equi-join."""
+    pj = importlib.import_module("s2_geometry_library_java_spark.operators.pip_join")
+    monkeypatch.setattr(pj, "PREFIX_IN_FILTER_MAX", 2)
+    monkeypatch.setattr(pj, "PREFIX_SEMI_PRUNE_MAX", 2)
     layers = make_layers()
     cover = covering_df_distributed(spark, LAYER_SPECS, max_cells=8, max_level=12)
     pts = with_cell_id(points)
-    cand = prefix_candidates_df(pts, cover, prefix_level=4, prune="bloom")
+    cand = prefix_candidates_df(pts, cover, prefix_level=4)
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" not in plan
     assert " IN (" not in plan
@@ -187,22 +188,6 @@ def test_prefix_df_auto_prune_escalates_to_bloom(spark, points, points_pdf, monk
     cand = prefix_candidates_df(pts, cover, prefix_level=4)
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" not in plan and "bit_or" in plan
-    result = refine_candidates(cand, layers)
-    got = {
-        (int(r["point_id"]), r["polygon_id"])
-        for r in result.select("point_id", "polygon_id").collect()
-    }
-    assert got == oracle_matches(points_pdf, layers)
-
-
-def test_prefix_df_bloom_with_salt_matches(spark, points, points_pdf):
-    """The terminal rung composes with packed-bit salting: prune happens on
-    the unsalted prefix before the salt bits are packed, so the match set
-    is unchanged and the join key stays a single BIGINT."""
-    layers = make_layers()
-    cover = covering_df_distributed(spark, LAYER_SPECS, max_cells=8, max_level=12)
-    pts = with_cell_id(points)
-    cand = prefix_candidates_df(pts, cover, salt=4, prefix_level=4, prune="bloom")
     result = refine_candidates(cand, layers)
     got = {
         (int(r["point_id"]), r["polygon_id"])
@@ -255,32 +240,15 @@ def test_bloom_prune_never_drops_true_keys(spark, m_bits, k):
     assert true_keys <= kept
 
 
-def test_prefix_df_salted_packs_key_bits(spark, points, points_pdf):
-    """Salt must not change the match set and must keep the join key a single
-    BIGINT (radix-sortable — the [[smj-radix-single-key]] discipline)."""
-    layers = make_layers()
-    cover = covering_df_distributed(spark, LAYER_SPECS, max_cells=8, max_level=12)
-    pts = with_cell_id(points)
-    cand = prefix_candidates_df(pts, cover, salt=4, prefix_level=4)
-    result = refine_candidates(cand, layers)
-    got = {
-        (int(r["point_id"]), r["polygon_id"])
-        for r in result.select("point_id", "polygon_id").collect()
-    }
-    assert got == oracle_matches(points_pdf, layers)
-
-
-def test_prefix_df_salt_overflow_rejected(spark, points):
-    layers = make_layers()
-    cover = covering_df(spark, layers, max_cells=8, max_level=12)
-    pts = with_cell_id(points)
-    # the deepest allowed anchor (PREFIX_LEVEL_CAP = 10) leaves 40 zero bits
-    with pytest.raises(ValueError, match="salt"):
-        prefix_candidates_df(pts, cover, salt=(1 << 40) + 1, prefix_level=10)
-
-
-def test_covering_frame_rejects_other_strategies(spark, points):
-    layers = make_layers()
-    cover = covering_df(spark, layers, max_cells=8, max_level=12)
-    with pytest.raises(ValueError, match="prefix"):
-        pip_join(points, layers, covering_frame=cover, strategy="range")
+def test_covering_frame_leaves_no_cache(spark, sf_dir):
+    """The escalation's bounded jobs read the covering without caching it:
+    after the join, the session's cache manager is empty, and a second
+    identical query plans no in-memory scan of an earlier covering."""
+    spark.catalog.clearCache()
+    for _ in range(2):
+        cover = covering_df_distributed(spark, LAYER_SPECS, max_cells=8, max_level=12)
+        df = pip_join(geotagged_points(spark, sf_dir), make_layers(), covering_frame=cover)
+        df.collect()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
